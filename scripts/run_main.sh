@@ -4,7 +4,10 @@
 # Usage: scripts/run_main.sh graft.Bench [args...]
 set -euo pipefail
 CLS="$1"; shift
-CP="/root/repo/target/scala-2.13/classes:$(echo /opt/spark/jars/*.jar | tr ' ' ':')"
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+# Spark jars: $SPARK_HOME, else the distribution spark-submit lives in
+SPARK_DIR="${SPARK_HOME:-$(dirname "$(dirname "$(readlink -f "$(command -v spark-submit)")")")}"
+CP="$ROOT/target/scala-2.13/classes:$(echo "$SPARK_DIR"/jars/*.jar | tr ' ' ':')"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \

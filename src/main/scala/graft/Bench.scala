@@ -27,27 +27,8 @@ object Bench {
     // emitted artifact tell box degradation from code regression without
     // any external context (thresholds in HostProbe/BASELINE.md)
     val boxPre = HostProbe.measure()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor (optimization r15): see Tables.localSession —
-      // keeps small-byte compute-dense post-shuffle stages (verify joins,
-      // pair expansion) at full parallelism; scale-neutral because the
-      // floor only binds when an exchange carries less than
-      // cores×minPartitionSize bytes.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // warmup: JVM + codegen + parquet reader paths
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    Tables.nation(spark, sfDir).count()
-    SparkEntry.queries.get("qd_join_filter_count")
-      .foreach(q => q(spark, sfDir).count())
+    val spark = Tables.localSession(cores = cpus.toInt)
+    warmup(spark, sfDir)
 
     // A failing query must read as a failure, not as a fast success: its
     // time is reported as -1 and it is excluded from the totals. Cached
@@ -55,34 +36,15 @@ object Bench {
     // sample so cache occupancy doesn't grow across the run and every
     // sample pays the same cold-cache cost.
     //
-    // The timed action FOLDS EVERY OUTPUT VALUE (xxhash64 over the
-    // output struct, bit_xor-aggregated — overflow-free under ANSI),
-    // not count(): under count() Catalyst legitimately prunes all
-    // columns and eliminates unique-key joins, so a projection-shaped
-    // query (pii_redact, token_dropout, exact_substr ...) was timed as
-    // a bare scan — the op's actual work never ran (measured up to 29x
-    // under-report). anchors.json carries the metric in its "action"
-    // field; "count"-action anchors are NOT comparable per-query.
-    import org.apache.spark.sql.functions.{col => fcol, struct => fstruct, xxhash64}
+    // The timed action is Fold: every output value folds into one row,
+    // never count() (see Fold for why). anchors.json carries the metric
+    // in its "action" field; "count"-action anchors are NOT comparable
+    // per-query.
     def sampleOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       val ok =
         try {
-          val raw = fn(spark, sfDir)
-          // Rename positionally before folding: a query output with
-          // duplicate or dotted column names would fail NAME resolution in
-          // the fold even though the query itself is fine.
-          val df = raw.toDF(raw.columns.indices.map("c" + _): _*)
-          // xxhash64 rejects a few types (e.g. maps); fall back to a
-          // per-column json fold rather than count() so materialization
-          // is still forced
-          try df.select(xxhash64(fstruct(df.columns.map(fcol): _*)).as("h"))
-            .agg(org.apache.spark.sql.functions.expr("bit_xor(h)")).collect()
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            df.select(xxhash64(org.apache.spark.sql.functions.to_json(
-              fstruct(df.columns.map(fcol): _*))).as("h"))
-              .agg(org.apache.spark.sql.functions.expr("bit_xor(h)")).collect()
-          }
+          Fold.digest(fn(spark, sfDir))
           true
         }
         catch { case e: Throwable =>
@@ -209,5 +171,15 @@ object Bench {
         s"""{"bench_summary":1,"ratio_sum":null,"n_queries":${results.size},"n_failed":${failed.size},"total_min":$totalMin,$boxBlock,"samples":$samples,"action":"fold","sf":"$sfDir"}"""
     }
     println(summary)
+  }
+
+  /** JVM + codegen + parquet reader paths, so startup doesn't land on
+    * whichever query happens to be timed first.
+    */
+  def warmup(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+    Tables.nation(spark, sfDir).count()
+    SparkEntry.queries.get("qd_join_filter_count")
+      .foreach(q => q(spark, sfDir).count())
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Cost decomposition of the steady-state daily near-dedup path at a
@@ -54,11 +53,6 @@ object IncProbe {
       val r = f
       println(f"[inc] $name%-16s ${(System.nanoTime() - t0) / 1e9}%8.2f s   ($r)")
     }
-    def fold(df: DataFrame): Long = {
-      val safe = df.toDF(df.columns.indices.map("c" + _): _*)
-      safe.select(xxhash64(struct(safe.columns.map(col): _*)).as("h"))
-        .agg(expr("bit_xor(h)")).collect().head.getLong(0)
-    }
 
     val batchSigs = signatures(docs.filter(batchPred)).persist()
     batchSigs.count() // warm the cache outside the timed stages
@@ -70,10 +64,10 @@ object IncProbe {
 
     val index = spark.read.parquet(lake)
     (1 to 3).foreach { i =>
-      time(s"scan_m[$i]")(fold(index.select(col("m"))))
+      time(s"scan_m[$i]")(Fold.digest(index.select(col("m"))))
       time(s"scan_wide[$i]")(
-        fold(index.select(col("m"), col("sarr"), col("n_shingles"))))
-      time(s"band_derive[$i]")(fold(bandRows(index)))
+        Fold.digest(index.select(col("m"), col("sarr"), col("n_shingles"))))
+      time(s"band_derive[$i]")(Fold.digest(bandRows(index)))
       val cand = bandRows(batchSigs.select(col("doc_id"), col("m"))).as("a")
         .join(bandRows(index).as("b"),
           col("a.band") === col("b.band") && col("a.bh") === col("b.bh")

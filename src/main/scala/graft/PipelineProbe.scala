@@ -51,15 +51,6 @@ object PipelineProbe {
     spark.stop()
   }
 
-  private def fold(df: org.apache.spark.sql.DataFrame): Long = {
-    // same honesty rule as graft.Bench: count() lets Catalyst prune
-    // projection work, so the terminal action folds every output value
-    val safe = df.toDF(df.columns.indices.map("c" + _): _*)
-    safe.select(xxhash64(struct(safe.columns.map(col): _*)).as("h"))
-      .agg(count(when(col("h") =!= 0L, 1)).as("n"), expr("bit_xor(h)"))
-      .collect().head.getLong(0)
-  }
-
   /** The full composed chain, terminal chunks grain — shared by the
     * timing and plan-audit modes, and by the [[Sentinel]] gate.
     */
@@ -112,11 +103,6 @@ object PipelineProbe {
     val docs = Tables.documents(spark, dir)
     val benchmark = Tables.documents(spark, baseDir)
       .filter(col("doc_id") % 97 === 0)
-    def fold(df: org.apache.spark.sql.DataFrame): Long = {
-      val safe = df.toDF(df.columns.indices.map("c" + _): _*)
-      safe.select(xxhash64(struct(safe.columns.map(col): _*)).as("h"))
-        .agg(expr("bit_xor(h)")).collect().head.getLong(0)
-    }
     def time(name: String)(f: => Any): Unit = {
       val t0 = System.nanoTime()
       val r = f
@@ -128,7 +114,7 @@ object PipelineProbe {
     def stage(name: String)(f: => pipeline.CorpusPipeline): pipeline.CorpusPipeline = {
       val t0 = System.nanoTime()
       val p = f
-      val r = fold(p.df)
+      val r = Fold.digest(p.df)
       println(f"[stages] $name%-18s ${(System.nanoTime() - t0) / 1e9}%8.2f s   ($r)")
       p
     }
@@ -142,18 +128,17 @@ object PipelineProbe {
     val p7 = stage("s7_quality")(p6.filterQualityEnsemble())
     val p8 = stage("s8_sample_split")(
       p7.sampleStratified(Map("en" -> 0.5), default = 0.2).withSplit(trainPct = 90))
-    time("s9_chunks")(fold(p8.chunks()))
+    time("s9_chunks")(Fold.digest(p8.chunks()))
   }
 
   private def runPipeline(
       spark: org.apache.spark.sql.SparkSession, dir: String, baseDir: String): Unit = {
     val t0 = System.nanoTime()
     val out = composedChain(spark, dir, baseDir)
-    val safe = out.toDF(out.columns.indices.map("c" + _): _*)
-    val folded = safe
-      .select(xxhash64(struct(safe.columns.map(col): _*)).as("h"))
-      .agg(count(when(col("h") =!= 0L, 1)).as("n"), expr("bit_xor(h)"))
-    val nChunks = folded.collect().head.getLong(0)
+    // collect THIS frame (not head(), which plans a separate limit
+    // execution): its QueryExecution carries the observed stage counts
+    val folded = Fold.frame(out)
+    val nChunks = folded.collect()(0).getLong(0)
     val secs = (System.nanoTime() - t0) / 1e9
     println(f"[pipeline] end-to-end $secs%8.2f s   chunks=$nChunks")
     folded.queryExecution.observedMetrics.toSeq.sortBy(_._1).foreach {
@@ -212,7 +197,7 @@ object PipelineProbe {
     val sigs = signatures(docs.filter(batchPred)).persist()
     updateIndex(spark, sigs, lake, ingestDate = Some("2026-08-13"))
     val index = spark.read.parquet(lake)
-    val nPairs = fold(pairsForBatchSigs(index, sigs))
+    val (nPairs, _) = Fold.digest(pairsForBatchSigs(index, sigs))
     val daySecs = (System.nanoTime() - t0) / 1e9
     println(f"[incremental] daily batch  $daySecs%8.2f s   batch=${sigs.count()}  pairs=$nPairs")
     sigs.unpersist()

@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col => fcol, struct => fstruct, xxhash64}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -15,7 +13,11 @@ import scala.collection.mutable.ArrayBuffer
   * shuffle-bound from dispatch-bound before touching the plan.
   *
   * Also prints the physical plan's Exchange count per query (cheap plan
-  * audit without a full explain dump).
+  * audit without a full explain dump), and splits input bytes between the
+  * BUILD phase (eager jobs while the query constructs its frame) and the
+  * FOLD phase. Input bytes in the fold for a source the build already
+  * scanned into a persist mean that persist recomputed from source — a
+  * cache miss the plan audit can't see.
   *
   *   scripts/run_main.sh graft.QueryStatsProbe q_dedup_agreement q_sim_ivf
   *   SPARK_GRAFT_PROBE_SAMPLES=3 scripts/run_main.sh graft.QueryStatsProbe --all
@@ -31,12 +33,11 @@ object QueryStatsProbe {
 
     // same warmup as Bench so the first probed query isn't charged JVM/
     // codegen startup
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    Tables.nation(spark, sfDir).count()
-    SparkEntry.queries.get("qd_join_filter_count")
-      .foreach(q => q(spark, sfDir).count())
+    Bench.warmup(spark, sfDir)
 
-    final case class StageRow(name: String, tasks: Int, execMs: Long,
+    // the phase a stage completed in: "build" or "fold"
+    @volatile var phase = "build"
+    final case class StageRow(phase: String, name: String, tasks: Int, execMs: Long,
       shRead: Long, shReadRec: Long, shWrite: Long, shWriteRec: Long,
       input: Long, spill: Long, maxTaskMs: Long, wallMs: Long)
     val stages = ArrayBuffer.empty[StageRow]
@@ -51,7 +52,7 @@ object QueryStatsProbe {
         val m = si.taskMetrics
         val wall = (for (s <- si.submissionTime; c <- si.completionTime) yield c - s).getOrElse(0L)
         stages.synchronized {
-          stages += StageRow(si.name, si.numTasks, m.executorRunTime,
+          stages += StageRow(phase, si.name, si.numTasks, m.executorRunTime,
             m.shuffleReadMetrics.totalBytesRead,
             m.shuffleReadMetrics.recordsRead,
             m.shuffleWriteMetrics.bytesWritten,
@@ -71,19 +72,17 @@ object QueryStatsProbe {
       val fn = SparkEntry.queries(name)
       (1 to samples).foreach { s =>
         stages.synchronized(stages.clear())
+        phase = "build"
         val t0 = System.nanoTime()
         val raw = fn(spark, sfDir)
         val tBuild = (System.nanoTime() - t0) / 1e9
-        val df = raw.toDF(raw.columns.indices.map("c" + _): _*)
-        try df.select(xxhash64(fstruct(df.columns.map(fcol): _*)).as("h"))
-          .agg(org.apache.spark.sql.functions.expr("bit_xor(h)")).collect()
-        catch { case _: org.apache.spark.sql.AnalysisException =>
-          df.select(xxhash64(org.apache.spark.sql.functions.to_json(
-            fstruct(df.columns.map(fcol): _*))).as("h"))
-            .agg(org.apache.spark.sql.functions.expr("bit_xor(h)")).collect()
-        }
-        val wall = (System.nanoTime() - t0) / 1e9
-        // listener events are posted async; give the bus a moment to drain
+        // listener events are posted async; let the build's stages land
+        // before the tag flips
+        Thread.sleep(300)
+        phase = "fold"
+        val t1 = System.nanoTime()
+        Fold.digest(raw)
+        val wall = tBuild + (System.nanoTime() - t1) / 1e9
         Thread.sleep(300)
         val snap = stages.synchronized(stages.toVector)
         val nStages = snap.size
@@ -93,6 +92,7 @@ object QueryStatsProbe {
         val shRRec = snap.map(_.shReadRec).sum
         val shW = snap.map(_.shWrite).sum
         val input = snap.map(_.input).sum
+        val buildInput = snap.filter(_.phase == "build").map(_.input).sum
         val spill = snap.map(_.spill).sum
         val exchanges = {
           val p = raw.queryExecution.executedPlan.toString
@@ -101,15 +101,13 @@ object QueryStatsProbe {
         println(f"[qprobe] $name%-28s s$s wall=$wall%7.2f build=$tBuild%5.2f " +
           f"stages=$nStages%3d tasks=$nTasks%5d execSum=$execS%8.2f " +
           f"shRead=${shR / 1e6}%9.1fMB shRecs=$shRRec%10d shWrite=${shW / 1e6}%9.1fMB " +
-          f"input=${input / 1e6}%9.1fMB spill=${spill / 1e6}%7.1fMB exch=$exchanges%2d")
-        if (sys.env.get("SPARK_GRAFT_PROBE_TOPSTAGES").exists(_.toInt > 0)) {
-          val k = sys.env("SPARK_GRAFT_PROBE_TOPSTAGES").toInt
-          snap.sortBy(-_.execMs).take(k).foreach { st =>
-            println(f"[qprobe]   stage exec=${st.execMs / 1e3}%7.2fs wall=${st.wallMs / 1e3}%6.2fs " +
-              f"maxTask=${st.maxTaskMs / 1e3}%6.2fs tasks=${st.tasks}%4d " +
-              f"shR=${st.shRead / 1e6}%8.1fMB shW=${st.shWrite / 1e6}%8.1fMB " +
-              f"in=${st.input / 1e6}%8.1fMB spill=${st.spill / 1e6}%6.1fMB  ${st.name.take(90)}")
-          }
+          f"input=${input / 1e6}%9.1fMB buildInput=${buildInput / 1e6}%9.1fMB " +
+          f"spill=${spill / 1e6}%7.1fMB exch=$exchanges%2d")
+        snap.sortBy(-_.execMs).take(3).foreach { st =>
+          println(f"[qprobe]   ${st.phase}%-5s stage exec=${st.execMs / 1e3}%7.2fs wall=${st.wallMs / 1e3}%6.2fs " +
+            f"maxTask=${st.maxTaskMs / 1e3}%6.2fs tasks=${st.tasks}%4d " +
+            f"shR=${st.shRead / 1e6}%8.1fMB shW=${st.shWrite / 1e6}%8.1fMB " +
+            f"in=${st.input / 1e6}%8.1fMB spill=${st.spill / 1e6}%6.1fMB  ${st.name.take(90)}")
         }
         spark.catalog.clearCache()
         CacheScope.drain(spark)

@@ -3,7 +3,7 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Standing scale-regression gate (VERDICT r10 item 1; tiers r11 item 5).
@@ -63,19 +63,6 @@ object Sentinel {
       "- BASELINE.md - and every regression this gate exists for " +
       "measured 3-10x). On a breach, re-run once to rule out an extreme burst."
 
-  /** Fold every output value (ScaleProbe's honesty rule): count() lets
-    * Catalyst prune projection-shaped work to a bare scan. The row count
-    * is count(*) — bit_xor(h) already forces the hash for every row, and
-    * a guard like h =!= 0 would silently drop rows whose xxhash64
-    * happens to be 0 from the recorded count (ADVICE r11).
-    */
-  private def fold(df: DataFrame): Long = {
-    val safe = df.toDF(df.columns.indices.map("c" + _): _*)
-    safe.select(xxhash64(struct(safe.columns.map(col): _*)).as("h"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(h)"))
-      .collect().head.getLong(0)
-  }
-
   /** An op returns (rows, optional self-timed seconds). Self-timing is
     * for ops with untimed SETUP (the incremental index build is the
     * one-time cost; the gate watches the steady-state daily path).
@@ -116,8 +103,8 @@ object Sentinel {
         .df.count()),
     // projection-shaped: fold, or Catalyst times a bare scan
     "exact_substr" -> timed((s, d, _) =>
-      fold(queries.CorpusOpsQueries.qExactSubstr(s, d)
-        .select(col("clean_hash")))),
+      Fold.digest(queries.CorpusOpsQueries.qExactSubstr(s, d)
+        .select(col("clean_hash")))._1),
     // the per-token trio, collapse-carrying since round 11
     "langid_nb" -> timed((s, d, _) =>
       queries.TextQueries.qLangIdNb(s, d).count()),
@@ -126,7 +113,7 @@ object Sentinel {
     "perplexity" -> timed((s, d, _) =>
       queries.CurationQueries.qPerplexity(s, d).count()),
     "pipeline_composed" -> timed((s, d, b) =>
-      fold(PipelineProbe.composedChain(s, d, b))),
+      Fold.digest(PipelineProbe.composedChain(s, d, b))._1),
     // steady-state daily dedup: standing index build is SETUP (untimed);
     // the gate watches one day's batch (signatures → upsert → pairs)
     "incremental_daily" -> ((s, d, b) => {

@@ -80,7 +80,9 @@ object Tables {
     if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target) else df
   }
 
-  /** Local session with the same settings the driver uses, for tests/bench.
+  /** The local session Bench, Verify, the probes and the sentinel all
+    * run on: shuffle partitions = cores, AQE with a 64 KB coalescing
+    * floor, UTC.
     *
     * `probeSplits = true` (probe/sentinel entry points only) adds
     * scan-split overrides for the replicated probe corpora (round 12):
@@ -91,8 +93,7 @@ object Tables {
     * table spans many splits. 1 MB splits + zero open cost give one task
     * per ProbeCorpus output file. Non-probe entry points (IncrementalRunner,
     * PipelineDemo, ExplainPlans) keep Spark's defaults — on real-sized
-    * data the 1 MB override would schedule one task per megabyte. Env
-    * overrides let probes A/B the split sizing itself.
+    * data the 1 MB override would schedule one task per megabyte.
     */
   def localSession(cores: Int = 32, probeSplits: Boolean = false): SparkSession = {
     val b = SparkSession.builder()
@@ -114,10 +115,8 @@ object Tables {
       .config("spark.ui.enabled", "false")
     val withSplits =
       if (probeSplits)
-        b.config("spark.sql.files.maxPartitionBytes",
-            sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", (1 << 20).toString))
-          .config("spark.sql.files.openCostInBytes",
-            sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES", "0"))
+        b.config("spark.sql.files.maxPartitionBytes", (1 << 20).toString)
+          .config("spark.sql.files.openCostInBytes", "0")
       else b
     val s = withSplits.getOrCreate()
     s.sparkContext.setLogLevel("WARN")

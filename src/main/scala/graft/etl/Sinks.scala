@@ -616,8 +616,18 @@ object Sinks {
     def newestMtime(p: Path): Long = {
       val self = fs.getFileStatus(p)
       if (!self.isDirectory) self.getModificationTime
-      else (self.getModificationTime +:
-        fs.listStatus(p).toSeq.map(s => newestMtime(s.getPath))).max
+      else {
+        // a dir removed between its stat and its listing (a committer
+        // moving task output) is a writer at work: read it as fresh. The
+        // local FS reports it as a plain IOException, not FileNotFound.
+        val kids =
+          try fs.listStatus(p).toSeq
+          catch {
+            case _: java.io.IOException if !fs.exists(p) =>
+              return System.currentTimeMillis()
+          }
+        (self.getModificationTime +: kids.map(s => newestMtime(s.getPath))).max
+      }
     }
     // any real payload anywhere inside (metadata like _SUCCESS/_temporary
     // markers is not worth protecting)

@@ -47,8 +47,8 @@ final class CorpusPipeline private (
     * [[graft.CacheScope]], so bench/verify drain it per query).
     *
     * Why an EXPENSIVE projection-only upstream still doesn't need the
-    * waist (the round-13 verdict's one open gap, closed by
-    * [[graft.WaistProbe]]): Catalyst column-prunes the projection per
+    * waist (the round-13 verdict's one open gap, closed in SURVEY
+    * §10.21): Catalyst column-prunes the projection per
     * consumer, so a fan-out's narrow subtrees (count, key-only
     * aggregates, anti-join probes) re-execute only the columns they
     * read — the heavy expressions evaluate once, at the single consumer

@@ -67,7 +67,7 @@ object CurationQueries {
         explode(arrays_zip(col("w1s"), col("w2s"))).as("b"))
       .select(col("th"), col("lang"), col("gsz"),
         col("b.w1s").as("w1"), col("b.w2s").as("w2"))
-      .transform(graft.CacheScope.persist) // feeds bigram counts, context counts, and scoring
+      .transform(graft.CacheScope.persist) // feeds bigram counts and scoring
     val cBig = big.groupBy(col("lang"), col("w1"), col("w2"))
       .agg(sum(col("gsz")).as("c_big"))
       // vocabulary²-bounded per language, referenced by cCtx, vocab and

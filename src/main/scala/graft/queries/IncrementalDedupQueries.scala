@@ -99,7 +99,7 @@ object IncrementalDedupQueries {
     * (MinHashTextSpec), and `m IS NOT NULL` selects exactly the
     * `size(tk) >= 3` documents, so band rows derived from either frame
     * are interchangeable. Measured A/B on the 100x probe corpus
-    * (TokenProbe, min of 4 runs): 1.42 s -> 1.21 s signature pass, a
+    * (SURVEY §10.19, min of 4 runs): 1.42 s -> 1.21 s signature pass, a
     * ~1.2x wall win — smaller than the SimHash fused walk's 1.6x
     * because [[graft.functions.MinHashSigExpr]] had already eliminated
     * the hex round-trip, so md5 (unchanged by fusion) dominates what

@@ -234,13 +234,16 @@ object SimilarityQueries {
     * `array<struct<cid, cv, cnorm>>` — the broadcastable form the
     * per-row argmax/probe expressions fold over. sort_array pins the
     * collect_list order (cids are distinct, so the struct order is the
-    * cid order and deterministic).
+    * cid order and deterministic). No centroids gives NO row, not one
+    * empty array, so a crossJoin against it assigns nothing — what the
+    * old join form did.
     */
   private[queries] def centArray(cents: DataFrame): DataFrame =
     cents
       .withColumn("cnorm", sqrt(dot(col("cv"), col("cv"))))
       .agg(sort_array(collect_list(struct(col("cid"), col("cv"), col("cnorm"))))
         .as("cs"))
+      .filter(size(col("cs")) > 0)
 
   /** Per-row argmax centroid over the single-row [[centArray]] column —
     * the assignment step WITHOUT a shuffle (optimization r16): the old
@@ -256,12 +259,16 @@ object SimilarityQueries {
     * embedding) ranks LARGEST exactly like Spark's struct max ordering —
     * the explicit isnan branches say so rather than falling through to
     * `>` (which is false for NaN on either side).
+    *
+    * An EMPTY centroid array yields a null cid, never the fold's seed
+    * Long.MinValue, so no vector is labelled with a centroid that does
+    * not exist ([[centArray]] already emits no row in that case).
     */
   private def argmaxCid(cs: Column, v: Column, norm: Column): Column = {
     val scored = transform(cs, c => struct(
       round(dot(v, c.getField("cv")) / (norm * c.getField("cnorm")), 5).as("ccos"),
       c.getField("cid").as("cid")))
-    aggregate(
+    when(size(cs) > 0, aggregate(
       scored,
       struct(lit(Double.NegativeInfinity).as("ccos"), lit(Long.MinValue).as("cid")),
       (acc, x) => {
@@ -269,7 +276,7 @@ object SimilarityQueries {
         when((isnan(xc) && !isnan(ac)) || (!isnan(xc) && !isnan(ac) && xc > ac), x)
           .otherwise(acc)
       },
-      acc => acc.getField("cid"))
+      acc => acc.getField("cid")))
   }
 
   /** Lloyd refinement: `iters` rounds of assign + decimal-mean update

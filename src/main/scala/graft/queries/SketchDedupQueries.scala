@@ -209,7 +209,12 @@ object SketchDedupQueries {
           && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"), estExpr)
       .distinct()
-      .transform(graft.CacheScope.persist) // joined twice in the verify stage
+      // Each path reads this frame once (the detector's verify join-back,
+      // or the agreement audit's candidate union), so the persist saves
+      // no recompute. It stays as a cheap materialized waist: the distinct
+      // candidate pairs are a small fraction of the band self-join rows
+      // that produce them. Dropping it is a plan change to A/B first.
+      .transform(graft.CacheScope.persist)
   }
 
   val qDedupMinhashLshOracle: String = minhashPairsSql("")
@@ -319,7 +324,7 @@ object SketchDedupQueries {
       .select(col(idCol).as("doc_id"),
         // fused tokenize+hash walk (round 12): the split form allocated
         // one UTF8String per token only for the hash to consume it once
-        // — 1.8x on the signature pass at the 100x corpus (TokenProbe);
+        // — 1.8x on the signature pass at the 100x corpus (SURVEY §10.18);
         // SimHashTextSpec pins per-doc equality with the split chain
         graft.functions.SimHashTextExpr.of(col(textCol)).as("simhash"))
       .filter(col("simhash").isNotNull)
@@ -944,9 +949,9 @@ object SketchDedupQueries {
     // persistEager, not persist (optimization r16): the three detector
     // branches materialize concurrently under AQE, and each concurrent
     // first reader of the lazily-cached base recomputed the tokenize+
-    // shingle pass from source (ScanCountProbe: 4 corpus-scan stages of
-    // 15-27 s execSum in one fold). Populating the cache up front runs
-    // that pass once.
+    // shingle pass from source (4 corpus-scan stages of 15-27 s execSum
+    // in one fold; OPTIMIZATION_r16.md). Populating the cache up front
+    // runs that pass once.
     val base = shingleBase(documents(spark, dir)).transform(graft.CacheScope.persistEager)
     // Cross-detector FUSED verify (optimization r16): the ngram and
     // minhash generators share setReps and the verify join-back shape,
