@@ -103,14 +103,13 @@ object Tables {
       .config("spark.sql.adaptive.enabled", "true")
       // AQE coalescing floor (optimization r15, guide §2.2/§2.5): the
       // default 1 MB floor sizes post-shuffle partitions by BYTES, but
-      // several verify-stage operators (array_intersect over shingle
-      // arrays, levenshtein, pair expansion) are CPU-dense per byte —
+      // several verify-stage operators (shingle-set intersection,
+      // levenshtein, pair expansion) are CPU-dense per byte —
       // a 6 MB exchange was coalesced to 5 tasks of ~3 s each while the
       // other cores idled. 64 KB keeps small-byte compute-dense stages
       // at full parallelism; at production shuffle sizes (GBs) the floor
       // is irrelevant (advisory size governs), so this is scale-neutral.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"))
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     val withSplits =

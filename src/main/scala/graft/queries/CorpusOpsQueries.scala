@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.ops.ShingleSets
 
 /** Corpus-preparation operators beyond dedup/decontamination: RAG-style
   * chunking, ExactSubstr-style repeated-span removal, vocabulary pruning
@@ -761,80 +762,23 @@ object CorpusOpsQueries {
   // (common·5 >= min·4). Rare-shingles-first canonical order keeps the
   // prefix×postings join bounded.
   def qDedupContainment(spark: SparkSession, dir: String): DataFrame = {
-    // identical-set collapse, exactly as the Jaccard/MinHash detectors:
-    // exact copies multiply posting lists by k and the prefix×postings
-    // join by k² (measured 162 s vs 13 s at the ×10 twin corpus), so the
-    // expensive path runs on one representative per distinct shingle set
-    // and the full pair set reassembles afterwards — within-group pairs
-    // have containment exactly 1, cross-group values hold for every
-    // member pair. Lossless by construction.
-    val base = documents(spark, dir)
-      .select(col("doc_id"), toks(col("text")).as("tk"))
-      .filter(size(col("tk")) >= 3)
-      .withColumn("sarr", graft.functions.ShinglesExpr.shingles(col("tk")))
-      .select(col("doc_id"), col("sarr"), size(col("sarr")).as("n_shingles"),
-        md5(concat_ws("\n", sort_array(col("sarr")))).as("set_hash"))
-      .transform(graft.CacheScope.persist)
-    // min/min_by aggregate, not a row_number window (optimization r15 —
-    // the same swap minhashRepPairs/ngramRepPairs got in round 13: no
-    // per-set_hash sort, and partial aggregation ships one sarr per
-    // distinct set per map partition instead of every member's).
-    // Row-identical output (min_by keyed on the unique doc_id picks
-    // exactly the rn=1 member). Not persisted — same recorded negative
-    // as the sibling detectors (caching the sarr-fat frame costs more
-    // than the duplicate aggregation it saves).
-    val reps = base
-      .groupBy(col("set_hash"))
-      .agg(min(col("doc_id")).as("doc_id"),
-        min_by(col("sarr"), col("doc_id")).as("sarr"),
-        min_by(col("n_shingles"), col("doc_id")).as("n_shingles"))
-      .select(col("doc_id"), col("sarr"), col("n_shingles"), col("set_hash"))
-    val shingles = reps
-      .select(col("doc_id"), col("n_shingles"), explode(col("sarr")).as("shingle"))
-      .transform(graft.CacheScope.persist)
-    val docFreq = shingles.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val prefixes = shingles
-      .join(docFreq, "shingle")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("shingle"))))
-      .filter(col("rk") <= col("n_shingles") - expr("(n_shingles * 4 + 4) div 5") + 1)
+    val base = ShingleSets.base(documents(spark, dir)).transform(graft.CacheScope.persist)
+    val reps = ShingleSets.reps(base)
+    val shingles = ShingleSets.postings(reps).transform(graft.CacheScope.persist)
+    val cand = ShingleSets.prefixes(shingles, 4, 5)
       .select(col("doc_id").as("pdoc"), col("shingle"))
-    val cand = prefixes
       .join(shingles.select(col("doc_id").as("fdoc"), col("shingle")), "shingle")
       .filter(col("pdoc") =!= col("fdoc"))
       .select(least(col("pdoc"), col("fdoc")).as("doc_a"),
         greatest(col("pdoc"), col("fdoc")).as("doc_b"))
       .distinct()
-    // verify: size(array_intersect) of the two (distinct) shingle arrays
-    // fetched per candidate pair — one per-row set intersection instead
-    // of a posting-list self-join + counting shuffle (same rewrite as the
-    // Jaccard/MinHash detectors; integer threshold arithmetic unchanged)
-    val repArr = reps.select(col("doc_id"), col("sarr"), col("n_shingles"),
-      col("set_hash"))
-    val repPairs = cand
-      .join(repArr.select(col("doc_id").as("doc_a"), col("sarr").as("sa"),
-        col("n_shingles").as("na"), col("set_hash").as("ha")), "doc_a")
-      .join(repArr.select(col("doc_id").as("doc_b"), col("sarr").as("sb"),
-        col("n_shingles").as("nb"), col("set_hash").as("hb")), "doc_b")
-      .withColumn("common", size(array_intersect(col("sa"), col("sb"))).cast("long"))
+    val blocks = ShingleSets.verify(cand, reps)
       .filter(col("common") * 5 >= least(col("na"), col("nb")) * 4)
       .select(col("ha"), col("hb"), col("common"),
         round(col("common").cast("double") / least(col("na"), col("nb")), 6)
           .as("containment"))
-    val members = base.select(col("set_hash"), col("doc_id"), col("n_shingles"))
-    val within = members.as("x")
-      .join(members.as("y"),
-        col("x.set_hash") === col("y.set_hash")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.n_shingles").cast("long").as("common"), lit(1.0).as("containment"))
-    val cross = repPairs
-      .join(members.select(col("set_hash").as("ha"), col("doc_id").as("ida")), "ha")
-      .join(members.select(col("set_hash").as("hb"), col("doc_id").as("idb")), "hb")
-      .select(least(col("ida"), col("idb")).as("doc_a"),
-        greatest(col("ida"), col("idb")).as("doc_b"),
-        col("common"), col("containment"))
-    within.unionByName(cross)
+    ShingleSets.expand(base, blocks,
+      col("n_shingles").cast("long").as("common"), lit(1.0).as("containment"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 

@@ -296,6 +296,8 @@ object IncrementalDedupQueries {
         col("a.m").as("ma"), col("b.m").as("mb"),
         col("a.sarr").as("shka"), col("b.sarr").as("shkb"),
         col("a.n_shingles").as("na"), col("b.n_shingles").as("nb"))
+      // in-row on the carried payload, not ShingleSets.verify's fetch
+      // by id: the index side must never shuffle (see the scaladoc)
       .withColumn("common", size(array_intersect(col("shka"), col("shkb"))))
       .select(col("doc_a"), col("doc_b"),
         // est/jaccard are symmetric, so the a/b orientation of ma/mb and

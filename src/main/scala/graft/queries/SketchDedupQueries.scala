@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.ops.ShingleSets
 
 /** Sketch-based near-dedup for training-data pipelines: MinHash + LSH
   * banding and SimHash, over the documents table.
@@ -35,141 +36,29 @@ object SketchDedupQueries {
   def qDedupMinhashLsh(spark: SparkSession, dir: String): DataFrame =
     minhashPairs(documents(spark, dir))
 
-  /** The 3-shingle SET frame every shingle-based detector starts from:
-    * (doc_id, sarr, n_shingles, set_hash), docs under 3 tokens dropped.
-    * The set_hash is collision-free (newline delimiter: tokens come from
-    * a \s+ split, so no shingle can contain it). NOT persisted here —
-    * the caller decides (q_dedup_agreement shares ONE persisted base
-    * across its ngram + minhash generators).
-    *
-    * Recorded negative (round 13): a fused sort+md5 set-hash expression
-    * (the SimHashTextExpr treatment for this chain) is not worth it —
-    * decomposed at 100x warm, the shingle pass itself is 0.75 s while
-    * sort_array adds ~0.2 s and concat_ws+md5 ~0.1 s; the layers a
-    * fusion would eliminate are <3% of the detector that consumes them.
-    */
-  private[graft] def shingleBase(docs: DataFrame): DataFrame = docs
-    .select(col("doc_id"), split(trim(col("text")), "\\s+").as("tk"))
-    .filter(size(col("tk")) >= 3)
-    .withColumn("sarr", graft.functions.ShinglesExpr.shingles(col("tk")))
-    .select(col("doc_id"), col("sarr"), size(col("sarr")).as("n_shingles"),
-      md5(concat_ws("\n", sort_array(col("sarr")))).as("set_hash"))
-
   /** Whole-corpus MinHash+LSH near-dup pairs over any documents frame —
     * the corpus-global form; [[IncrementalDedupQueries]] reproduces its
     * output restricted to batch-touching pairs without re-fingerprinting
-    * the corpus.
+    * the corpus. LSH candidates verified at jaccard >= 0.5 on the
+    * [[graft.ops.ShingleSets]] kernel.
     */
-  private[queries] def minhashPairs(docs: DataFrame): DataFrame =
-    minhashPairsFrom(shingleBase(docs).transform(graft.CacheScope.persist))
-
-  /** MinHash pair generation over a prebuilt (caller-persisted)
-    * [[shingleBase]] frame.
-    */
-  private[queries] def minhashPairsFrom(base: DataFrame): DataFrame = {
-    val repPairs = minhashRepPairs(base)
-    // reassemble the full pair set from the group structure
-    val members = base.select(col("set_hash"), col("doc_id"))
-    val within = members.as("x")
-      .join(members.as("y"),
-        col("x.set_hash") === col("y.set_hash")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(1.0).as("minhash_est"), lit(1.0).as("jaccard"))
-    val cross = repPairs
-      .join(members.as("ma"), col("ma.set_hash") === col("ha"))
-      .join(members.as("mb"), col("mb.set_hash") === col("hb"))
-      .select(
-        least(col("ma.doc_id"), col("mb.doc_id")).as("doc_a"),
-        greatest(col("ma.doc_id"), col("mb.doc_id")).as("doc_b"),
-        col("minhash_est"), col("jaccard"))
-    within.unionByName(cross)
+  private[queries] def minhashPairs(docs: DataFrame): DataFrame = {
+    val base = ShingleSets.base(docs).transform(graft.CacheScope.persist)
+    val blocks = ShingleSets.verify(minhashCand(base), ShingleSets.reps(base))
+      .select(col("ha"), col("hb"), col("minhash_est"), ShingleSets.jaccard.as("jaccard"))
+      .filter(col("jaccard") >= 0.5)
+    ShingleSets.expand(base, blocks, lit(1.0).as("minhash_est"), lit(1.0).as("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** One representative per distinct shingle set, as ONE canonical
-    * aggregate shape — `(doc_id, sarr, n_shingles, set_hash)`, doc_id =
-    * min member, arrays from that member. Shared by minhashRepPairs and
-    * ngramRepPairs so that q_dedup_agreement's two shingle detectors
-    * produce byte-identical subplans over the shared base and the
-    * planner computes the collapse once (ReuseExchange).
-    */
-  private[queries] def setReps(base: DataFrame): DataFrame = base
-    .groupBy(col("set_hash"))
-    .agg(min(col("doc_id")).as("doc_id"),
-      min_by(col("sarr"), col("doc_id")).as("sarr"),
-      min_by(col("n_shingles"), col("doc_id")).as("n_shingles"))
-    .select(col("doc_id"), col("sarr"), col("n_shingles"), col("set_hash"))
-
-  /** Exact-Jaccard verification of candidate representative pairs: fetch
-    * both sides' shingle arrays by rep doc id, one `array_intersect` per
-    * pair. `cand` must carry `doc_a`/`doc_b` (rep doc ids from the same
-    * [[setReps]] collapse); any extra cand columns ride through. Emits
-    * cand's columns plus (ha, hb, common, jaccard) — the caller applies
-    * its own threshold. Shared by both shingle detectors AND by
-    * q_dedup_agreement's cross-detector candidate union (optimization
-    * r16), so the audit pays the join-back + intersection once per
-    * distinct candidate pair instead of once per detector.
-    */
-  private[queries] def verifyShingleCand(
-      cand: DataFrame, reps: DataFrame): DataFrame = {
-    val repArr = reps.select(col("doc_id"), col("sarr"), col("n_shingles"),
-      col("set_hash"))
-    cand
-      .join(repArr.select(col("doc_id").as("doc_a"), col("sarr").as("sa"),
-        col("n_shingles").as("na"), col("set_hash").as("ha")), "doc_a")
-      .join(repArr.select(col("doc_id").as("doc_b"), col("sarr").as("sb"),
-        col("n_shingles").as("nb"), col("set_hash").as("hb")), "doc_b")
-      .withColumn("common", size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("na") + col("nb") - col("common")))
-  }
-
-  /** The detector's pre-reassembly pair BLOCKS — `(ha, hb, minhash_est,
-    * jaccard)` over distinct-shingle-set hashes, LSH-banded candidates
-    * verified at jaccard >= 0.5. Shared by the pair query and the
-    * block-grain agreement audit.
-    */
-  private[queries] def minhashRepPairs(base: DataFrame): DataFrame =
-    verifyShingleCand(minhashCand(base), setReps(base))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("ha"), col("hb"), col("minhash_est"), col("jaccard"))
-
   /** The LSH-banded candidate pairs `(doc_a, doc_b, minhash_est)` over
-    * [[setReps]] representatives — the detector's own generation stage,
-    * split from verification so the agreement audit can verify a
-    * cross-detector candidate union once.
+    * [[graft.ops.ShingleSets.reps]] representatives (identical sets have
+    * identical signatures, so the collapse is lossless here too) — the
+    * detector's own generation stage, split from verification so the
+    * agreement audit can verify a cross-detector candidate union once.
     */
   private[queries] def minhashCand(base: DataFrame): DataFrame = {
-    // identical-set collapse (same technique as qDedupNgramJaccard): the
-    // signature/banding/verify pipeline runs on one representative per
-    // distinct shingle set — k exact copies of a doc would otherwise
-    // multiply every band bucket by k and the candidate join by k².
-    // Identical sets have identical signatures, so within-group pairs are
-    // exactly (est=1, jaccard=1) and a cross-group rep pair's values hold
-    // for every member pair. Lossless by construction.
-    // min/min_by aggregate, not a row_number window (round 13): the
-    // window shuffles EVERY member row's sarr payload and then sorts
-    // each set_hash partition just to keep row 1; the aggregate ships at
-    // most one sarr per distinct set per map partition (partial
-    // aggregation collapses same-partition copies before the exchange)
-    // and drops the sort. Row-identical output: min_by keyed on the
-    // unique doc_id picks exactly the member rn=1 kept. Measured at
-    // 100x from the cached base: 1.05 -> 0.87 s; the real payoff is the
-    // shuffle-byte shape under heavy duplication.
-    // setReps, the aggregate SHARED canonically with ngramRepPairs
-    // (optimization r15): q_dedup_agreement runs both detectors over one
-    // persisted base, and when the two rep selections are the identical
-    // expression tree the physical planner reuses one exchange + map-
-    // side aggregate for both instead of re-collapsing the base twice.
-    // (The minhash chain ignores n_shingles; carrying it costs one
-    // min_by(int) partial.)
-    // NOT persisted (optimization r15, recorded negative): reps is
-    // referenced by the signature chain and the verify join-back, but an
-    // A/B showed caching the sarr-fat frame costs more than the saved
-    // re-aggregation (columnar encoding of string arrays dominates;
-    // q_dedup_agreement execSum 80 s -> 125 s with the persist)
-    val reps = setReps(base)
+    val reps = ShingleSets.reps(base)
     // all K permutation minima per document in ONE compiled row-grain pass
     // (MinHashSigExpr — the same expression the incremental index uses, so
     // batch-vs-index pairs stay bit-identical) instead of exploding and
@@ -193,16 +82,8 @@ object SketchDedupQueries {
     val estExpr = ((0 until K)
       .map(i => when(m("a", i) === m("b", i), 1).otherwise(0))
       .reduce(_ + _).cast("double") / K).as("minhash_est")
-    // The verify stage this feeds (verifyShingleCand) fetches arrays by
-    // rep id — deliberately NOT the payload-carrying band join the
-    // incremental path uses (IncrementalDedupQueries.pairsFromBatchBands):
-    // that shape wins there because the batch side BROADCASTS, making the
-    // index side shuffle-free. Here both band sides are the same full rep
-    // frame, so carrying sarr through the 4-band self-join would shuffle
-    // ~8x |reps|*sarr bytes versus ~3x for fetch-by-id — join-back is the
-    // cheaper shape whenever neither side broadcasts. A zero-overlap
-    // candidate scores jaccard 0 and falls to the detector's >= 0.5
-    // filter.
+    // A zero-overlap candidate scores jaccard 0 and falls to the
+    // detector's >= 0.5 filter.
     bands.as("a")
       .join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh")
@@ -777,6 +658,10 @@ object SketchDedupQueries {
   // carries only (doc_id, lang, n, rn); the arrays are re-attached to
   // the (w-1)*N surviving candidates by two equi-joins, and the
   // intersect runs on candidates alone (1.3 s at the same scale).
+  // Its verify stays here rather than in ShingleSets.verify: SNM
+  // windows over every document, not over identical-set
+  // representatives, so it has no set_hash or group size for that
+  // verify to fetch; faking them would be a caller-specific branch.
   def qSortedNeighborhood(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = documents(spark, dir)
@@ -942,20 +827,16 @@ object SketchDedupQueries {
     // dominate and the 85M-row expanded union is cheap next to them)
     // and 2.5× WORSE at sf0.1 (16.4 vs 6.6 s — a dozen extra
     // metadata-scale join/distinct stages cost real wall time when the
-    // detectors only take a second each). Reverted; the pre-reassembly
-    // block frames the attempt extracted (ngramRepPairs /
-    // minhashRepPairs / simhashSigAndRepPairs) stay, since the pair
-    // queries now share them.
+    // detectors only take a second each). Reverted.
     // persistEager, not persist (optimization r16): the three detector
     // branches materialize concurrently under AQE, and each concurrent
     // first reader of the lazily-cached base recomputed the tokenize+
     // shingle pass from source (4 corpus-scan stages of 15-27 s execSum
     // in one fold; OPTIMIZATION_r16.md). Populating the cache up front
     // runs that pass once.
-    val base = shingleBase(documents(spark, dir)).transform(graft.CacheScope.persistEager)
+    val base = ShingleSets.base(documents(spark, dir)).transform(graft.CacheScope.persistEager)
     // Cross-detector FUSED verify (optimization r16): the ngram and
-    // minhash generators share setReps and the verify join-back shape,
-    // and their candidate sets overlap heavily (both find the same
+    // minhash candidate sets overlap heavily (both find the same
     // near-dups). Union the two candidate sets, fetch arrays and compute
     // the exact intersection ONCE per distinct candidate pair, and derive
     // each detector's block membership from its own candidate flag +
@@ -972,34 +853,21 @@ object SketchDedupQueries {
         .select(col("doc_a"), col("doc_b"), lit(0L).as("ng"), col("minhash_est")))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(max(col("ng")).as("ng"), max(col("minhash_est")).as("minhash_est"))
-    val blocks = verifyShingleCand(cands, setReps(base))
+    val blocks = ShingleSets.verify(cands, ShingleSets.reps(base))
+      .withColumn("jaccard", ShingleSets.jaccard)
       .select(col("ha"), col("hb"),
         when(col("ng") === 1L && col("jaccard") >= 0.6, 1L).otherwise(0L).as("t"),
         when(col("minhash_est").isNotNull && col("jaccard") >= 0.5, 1L)
-          .otherwise(0L).as("l"))
+          .otherwise(0L).as("l"),
+        lit(0L).as("s"))
       .filter(col("t") === 1L || col("l") === 1L)
-    // expand blocks to member pairs ONCE (each detector used to run the
-    // identical members join-back separately); within-group pairs
-    // (identical shingle sets) belong to BOTH shingle detectors by
-    // construction (jaccard exactly 1 >= both thresholds).
-    val members = base.select(col("set_hash"), col("doc_id"))
-    val within = members.as("x")
-      .join(members.as("y"),
-        col("x.set_hash") === col("y.set_hash")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(1L).as("t"), lit(1L).as("l"), lit(0L).as("s"))
-    val cross = blocks
-      .join(members.as("ma"), col("ma.set_hash") === col("ha"))
-      .join(members.as("mb"), col("mb.set_hash") === col("hb"))
-      .select(
-        least(col("ma.doc_id"), col("mb.doc_id")).as("doc_a"),
-        greatest(col("ma.doc_id"), col("mb.doc_id")).as("doc_b"),
-        col("t"), col("l"), lit(0L).as("s"))
     val sh = qDedupSimhash(spark, dir)
       .select(col("doc_a"), col("doc_b"),
         lit(0L).as("t"), lit(0L).as("l"), lit(1L).as("s"))
-    val flags = within.unionByName(cross).unionByName(sh)
+    // within-group pairs (identical shingle sets) belong to BOTH shingle
+    // detectors by construction (jaccard exactly 1 >= both thresholds)
+    val flags = ShingleSets.expand(base, blocks, lit(1L).as("t"), lit(1L).as("l"), lit(0L).as("s"))
+      .unionByName(sh)
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(max(col("t")).as("t"), max(col("l")).as("l"), max(col("s")).as("s"))
     flags
@@ -1015,8 +883,9 @@ object SketchDedupQueries {
           |  'simhash',    n_sh,  n_truth, c_sh)
           |AS (strategy, n_pairs, n_truth, n_common)""".stripMargin)
       .select(col("strategy"), col("n_pairs"), col("n_truth"), col("n_common"),
-        expr("1000000 * n_common div n_pairs").as("precision_micro"),
-        expr("1000000 * n_common div n_truth").as("recall_micro"))
+        // NULL on an empty pair set, as the oracle's integer division
+        expr("1000000 * n_common div nullif(n_pairs, 0)").as("precision_micro"),
+        expr("1000000 * n_common div nullif(n_truth, 0)").as("recall_micro"))
       .orderBy(col("strategy"))
   }
 

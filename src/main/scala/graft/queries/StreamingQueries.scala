@@ -24,8 +24,8 @@ object StreamingQueries {
     *    one): streaming state is partitioned by the setting at query
     *    start, and a per-core value (32) means 32 state stores + 32 sink
     *    tasks for tables this size — pure overhead. Results are
-    *    partition-count independent (counts + decimal-routed sums), so a
-    *    deployment sizes this to its own state volume.
+    *    partition-count independent (counts + decimal-routed sums), so
+    *    the fixed 8 is a sizing choice for these tables, not a semantic one.
     *  - `spark.sql.legacy.parquet.nanosAsLong`: the events fixture is
     *    TIMESTAMP(NANOS), which Spark only reads as raw longs with this
     *    flag; scoped so a caller's session is not left in legacy mode.
@@ -41,8 +41,7 @@ object StreamingQueries {
 
   private def withStreamConfs[A](spark: SparkSession)(f: => A): A =
     withScopedConf(spark,
-      "spark.sql.shuffle.partitions" ->
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8"),
+      "spark.sql.shuffle.partitions" -> "8",
       // state-store provider, env-overridable (optimization r16): the
       // RocksDB provider was A/B'd across all 12 streaming queries
       // (SPARK_GRAFT_STREAM_STATESTORE_PROVIDER=

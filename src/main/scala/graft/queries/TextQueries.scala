@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.ops.ShingleSets
 
 /** Text-analysis operators for large-scale training-data pipelines, over
   * the documents table: token counting, quality scoring, language-ID
@@ -423,110 +424,27 @@ object TextQueries {
       |FROM documents GROUP BY 1 ORDER BY 3""".stripMargin
 
   // --- near-dedup: 3-gram shingle Jaccard with prefix-filtered candidates ---
-  // Candidate generation uses AllPairs/PPJoin prefix filtering (Bayardo et
-  // al. 2007): under a global rarity order, a pair with Jaccard >= t=3/5
-  // must share a shingle within both docs' first (n - ceil(t*n) + 1)
-  // shingles, so the inverted-index join only indexes those prefixes.
-  // Lossless for the threshold — the simple full-index oracle produces
-  // identical rows — but candidate volume stays linear even when common
-  // shingles appear in hundreds of docs (the naive join was measured
-  // quadratic: 525s at 50k docs vs ~20s with prefixes; graft.ScaleProbe).
-  // All threshold arithmetic is integer-exact (t = 3/5): float rounding at
-  // prefix/length boundaries could silently drop qualifying pairs.
-  def qDedupNgramJaccard(spark: SparkSession, dir: String): DataFrame =
-    ngramJaccardPairsFrom(
-      SketchDedupQueries.shingleBase(documents(spark, dir)).transform(graft.CacheScope.persist))
-
-  /** Jaccard pair generation over a prebuilt (caller-persisted)
-    * [[SketchDedupQueries.shingleBase]] frame — shared with
-    * q_dedup_agreement, which reuses ONE persisted base across its
-    * ngram + minhash generators.
-    */
-  private[queries] def ngramJaccardPairsFrom(docs: DataFrame): DataFrame = {
-    val repPairs = ngramRepPairs(docs)
-    // reassemble the full pair set from the group structure
-    val members = docs.select(col("set_hash"), col("doc_id"))
-    val within = members.as("x")
-      .join(members.as("y"),
-        col("x.set_hash") === col("y.set_hash")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(1.0).as("jaccard"))
-    val cross = repPairs
-      .join(members.as("ma"), col("ma.set_hash") === col("ha"))
-      .join(members.as("mb"), col("mb.set_hash") === col("hb"))
-      .select(
-        least(col("ma.doc_id"), col("mb.doc_id")).as("doc_a"),
-        greatest(col("ma.doc_id"), col("mb.doc_id")).as("doc_b"),
-        col("jaccard"))
-    within.unionByName(cross)
+  // Candidate generation is the lossless AllPairs prefix filter at
+  // t = 3/5 (ShingleSets.prefixes) plus the integer-exact length filter;
+  // the exact verify keeps jaccard >= 0.6, so the simple full-index
+  // oracle produces identical rows.
+  def qDedupNgramJaccard(spark: SparkSession, dir: String): DataFrame = {
+    val base = ShingleSets.base(documents(spark, dir)).transform(graft.CacheScope.persist)
+    val blocks = ShingleSets.verify(ngramCand(base), ShingleSets.reps(base))
+      .select(col("ha"), col("hb"), ShingleSets.jaccard.as("jaccard"))
+      .filter(col("jaccard") >= 0.6)
+    ShingleSets.expand(base, blocks, lit(1.0).as("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** The detector's pre-reassembly pair BLOCKS — `(ha, hb, jaccard)`
-    * pairs of distinct-shingle-set hashes with jaccard >= 0.6. Shared by
-    * the pair query (which expands blocks to member pairs) and the
-    * block-grain agreement audit (which never expands).
-    */
-  private[queries] def ngramRepPairs(docs: DataFrame): DataFrame =
-    // verify: exact overlap over full shingle sets, candidates only —
-    // representatives only, so volume scales with distinct content.
-    // The overlap is size(array_intersect) of the two (distinct) shingle
-    // arrays fetched per candidate pair — one per-row set intersection
-    // instead of a posting-list self-join + counting shuffle (measured
-    // 4x the stage cost at sf0.1 for identical rows; the join moves the
-    // same bytes either way, the groupBy and the two counts joins
-    // disappear). Shared shape: SketchDedupQueries.verifyShingleCand —
-    // q_dedup_agreement verifies the UNION of both shingle detectors'
-    // candidates through one pass of it (optimization r16).
-    SketchDedupQueries
-      .verifyShingleCand(ngramCand(docs), SketchDedupQueries.setReps(docs))
-      .filter(col("jaccard") >= 0.6)
-      .select(col("ha"), col("hb"), col("jaccard"))
-
   /** The lossless prefix-filter candidate pairs `(doc_a, doc_b)` over
-    * [[SketchDedupQueries.setReps]] representatives — the detector's own
+    * [[ShingleSets.reps]] representatives — the detector's own
     * generation stage, split from verification so the agreement audit
     * can verify a cross-detector candidate union once.
     */
-  private[queries] def ngramCand(docs: DataFrame): DataFrame = {
-    // Identical-set collapse: dedup corpora are duplicate-heavy by
-    // definition, and exact copies are poison for ALL-pairs candidate
-    // generation — k copies of a doc multiply every posting list by k and
-    // the candidate join by k². So the expensive pipeline (prefix filter +
-    // verify) runs on one REPRESENTATIVE per distinct shingle set, and
-    // the full answer is reassembled afterwards: within-group pairs have
-    // jaccard exactly 1, and a cross-group rep pair's jaccard holds for
-    // every member pair (identical sets). Lossless by construction; on
-    // the 10x probe corpus (every doc x10) this cuts candidate generation
-    // from 50k docs back to the ~5k distinct sets.
-    // min/min_by aggregate, not a row_number window — same swap as
-    // minhashRepPairs (round 13): no per-partition sort, and partial
-    // aggregation ships one sarr per distinct set per map partition
-    // instead of every member's. Row-identical (min_by on unique doc_id
-    // = the rn=1 member).
-    // SketchDedupQueries.setReps — the canonical shared rep collapse, so
-    // q_dedup_agreement's two shingle detectors plan byte-identical
-    // subtrees over the shared base and the collapse computes once
-    // (optimization r15). NOT persisted (recorded negative): caching the
-    // sarr-fat rep frame cost more than the duplicate aggregation it
-    // saved.
-    val reps = SketchDedupQueries.setReps(docs)
-    val shingles = reps
-      .select(col("doc_id"), col("n_shingles"), explode(col("sarr")).as("shingle"))
-      .transform(graft.CacheScope.persist)
-
-    // Candidate generation is ALWAYS the lossless prefix-filter path — no
-    // driver-side count() cost switch. Global canonical order: rarest
-    // shingles first, ties by value; prefix size n - ceil(3n/5) + 1,
-    // integer-exact (div, not fp).
-    val docFreq = shingles.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val prefixes = shingles
-      .join(docFreq, "shingle")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("shingle"))))
-      .filter(col("rk") <= col("n_shingles") - expr("(n_shingles * 3 + 4) div 5") + 1)
-      .select(col("doc_id"), col("shingle"), col("n_shingles"))
+  private[queries] def ngramCand(base: DataFrame): DataFrame = {
+    val prefixes = ShingleSets.prefixes(
+      ShingleSets.postings(ShingleSets.reps(base)).transform(graft.CacheScope.persist), 3, 5)
     prefixes.as("a")
       .join(prefixes.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id")
@@ -1488,40 +1406,17 @@ object TextQueries {
   // trades recall against false merges. ONE candidate generation at
   // the lowest threshold of interest (t = 0.5 prefix filter — lossless
   // for every t >= 0.5 by the AllPairs bound) feeds all five counts;
-  // verification is in-row array_intersect on the collapsed
+  // verification is the exact in-row intersection on the collapsed
   // representatives, and group multiplicities expand the counts
   // exactly (within-group pairs have Jaccard 1, cross-group rep
-  // Jaccard holds for every member pair). Integer-exact predicate
-  // 100·inter >= t·union; no floating threshold ever compared.
+  // Jaccard holds for every member pair). All five counts are one
+  // conditional aggregation, so all five rows come back even when
+  // nothing verifies. Integer-exact predicate 100·common >= t·union; no
+  // floating threshold ever compared.
   def qDedupThresholdSweep(spark: SparkSession, dir: String): DataFrame = {
-    val docs = documents(spark, dir)
-      .select(col("doc_id"), toks(col("text")).as("tk"))
-      .filter(size(col("tk")) >= 3)
-      .withColumn("sarr", graft.functions.ShinglesExpr.shingles(col("tk")))
-      .select(col("doc_id"), col("sarr"), size(col("sarr")).as("n"),
-        md5(concat_ws("\n", sort_array(col("sarr")))).as("set_hash"))
-      .transform(graft.CacheScope.persist)
-    // group size and representative selection in ONE pass over the
-    // set_hash partitioning (count + row_number share the exchange/sort)
-    // instead of a separate groupBy + join back
-    val bySet = Window.partitionBy(col("set_hash"))
-    val reps = docs
-      .withColumn("g", count(lit(1)).over(bySet))
-      .withColumn("rn", row_number().over(bySet.orderBy(col("doc_id"))))
-      .filter(col("rn") === 1)
-      .select(col("doc_id"), col("sarr"), col("n"), col("g"))
-      .transform(graft.CacheScope.persist)
-    val within = reps.agg(
-      coalesce(sum(expr("g * (g - 1) div 2")), lit(0L)).as("w"))
-    val shingles = reps
-      .select(col("doc_id"), col("n"), explode(col("sarr")).as("shingle"))
-    val docFreq = shingles.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val prefixes = shingles
-      .join(docFreq, "shingle")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("shingle"))))
-      .filter(col("rk") <= col("n") - expr("(n + 1) div 2") + 1)
-      .select(col("doc_id"), col("shingle"), col("n"))
+    val base = ShingleSets.base(documents(spark, dir)).transform(graft.CacheScope.persist)
+    val reps = ShingleSets.reps(base).transform(graft.CacheScope.persist)
+    val prefixes = ShingleSets.prefixes(ShingleSets.postings(reps), 1, 2)
     // AllPairs length filter at the LOWEST swept threshold (t = 0.5):
     // jaccard >= 0.5 forces min*2 >= max, so pairs failing it cannot
     // pass any threshold >= 50 — integer-exact and lossless for the
@@ -1529,28 +1424,25 @@ object TextQueries {
     val cand = prefixes.as("a")
       .join(prefixes.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id")
-          && least(col("a.n"), col("b.n")) * 2
-             >= greatest(col("a.n"), col("b.n")))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
+          && least(col("a.n_shingles"), col("b.n_shingles")) * 2
+             >= greatest(col("a.n_shingles"), col("b.n_shingles")))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    val ra = reps.select(col("doc_id").as("da"), col("sarr").as("sa"),
-      col("n").as("na"), col("g").as("ga"))
-    val rb = reps.select(col("doc_id").as("db"), col("sarr").as("sb"),
-      col("n").as("nb"), col("g").as("gb"))
-    val verified = cand.join(ra, "da").join(rb, "db")
-      .withColumn("inter", size(expr("array_intersect(sa, sb)")).cast("long"))
-      .select(col("inter"),
-        (col("na") + col("nb") - col("inter")).as("uni"),
-        (col("ga") * col("gb")).as("weight"))
-    val ts = spark.range(5).select((lit(50) + col("id") * 10).cast("int").as("threshold"))
-    ts.crossJoin(verified)
-      .filter(col("inter") * 100 >= col("threshold") * col("uni"))
-      .groupBy(col("threshold"))
-      .agg(sum(col("weight")).as("cross_pairs"))
-      .join(ts, Seq("threshold"), "right")
-      .crossJoin(broadcast(within))
-      .select(col("threshold"),
-        (coalesce(col("cross_pairs"), lit(0L)) + col("w")).as("n_pairs"))
+    // each verified rep pair stands for ga·gb member pairs; each set's
+    // g(g-1)/2 within-group pairs join as one row with common = union =
+    // n_shingles (identical sets), which passes every threshold
+    val pairs = ShingleSets.verify(cand, reps)
+      .select(col("common"), (col("na") + col("nb") - col("common")).as("uni"),
+        (col("ga") * col("gb")).as("w"))
+      .unionByName(reps.select(col("n_shingles").cast("long").as("common"),
+        col("n_shingles").cast("long").as("uni"), expr("g * (g - 1) div 2").as("w")))
+    val ts = Seq(50, 60, 70, 80, 90)
+    val counts = ts.map(t => coalesce(
+      sum(when(col("common") * 100 >= col("uni") * t, col("w"))), lit(0L)).as(s"n$t"))
+    pairs
+      .agg(counts.head, counts.tail: _*)
+      .select(inline(array(ts.map(t =>
+        struct(lit(t).as("threshold"), col(s"n$t").as("n_pairs"))): _*)))
       .orderBy(col("threshold"))
   }
 
