@@ -5,6 +5,7 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StructField, StructType}
 
 /** Watermark-driven incremental ingestion (SURVEY.md §2.9 ST1–ST5).
   *
@@ -36,13 +37,21 @@ object Incremental {
     // missing, empty, or containing only write leftovers (_temporary /
     // _SUCCESS) — all read as an empty sink, not a crash
     if (!LakeFs.nonEmptyDataDir(spark, path)) None
-    else spark.read.parquet(path)
+    else readDates(spark, path, dateCol)
       .agg(max(col(dateCol)).as("wm"))
       .collect()(0).getAs[Date]("wm") match {
         case null => None
         case d => Some(d.toLocalDate)
       }
   }
+
+  /** The lake's date column, read with its declared type: a schema-less
+    * read would first run a footer-inference job just to learn that the
+    * column is a date.
+    */
+  private def readDates(spark: SparkSession, path: String, dateCol: String): DataFrame =
+    spark.read.schema(StructType(Seq(StructField(dateCol, DateType)))).parquet(path)
+      .select(col(dateCol))
 
   /** Result of one incremental run. */
   case class RunReport(
@@ -72,8 +81,7 @@ object Incremental {
       wm: Option[LocalDate]): Seq[LocalDate] = wm match {
     case None => Nil
     case Some(hi) =>
-      val present = spark.read.parquet(path)
-        .select(col(dateCol)).distinct()
+      val present = readDates(spark, path, dateCol).distinct()
         .collect().flatMap(r => Option(r.getAs[Date](0)).map(_.toLocalDate))
         .toSet
       Iterator.iterate(coldStart)(_.plusDays(1))

@@ -55,6 +55,13 @@ import org.apache.spark.sql.functions._
   * not the source) swap in. SinksExecOnceSpec pins the once-only
   * execution with a counting batch plan.
   *
+  * Routing between the small and big paths reads PLAN STATISTICS (no
+  * job): a frame under 256 MiB by `optimizedPlan.stats` is small. Both
+  * DSv2 sources report statistics (`SupportsReportStatistics`), so a
+  * daily pull plans at its real size and commits in one action; a scan
+  * that reports none plans at Spark's unknown-size default and takes
+  * the big-frame path.
+  *
   * Corpus-scale batches merged into an EXISTING lake are the one shape
   * that still materializes the batch (a persist, spilling linearly to
   * executor disk — bounded by batch size, unlike the round-13 sort
@@ -194,8 +201,9 @@ object Sinks {
     * persist materializes every column of a possibly corpus-scale
     * batch to executor storage. This is what makes the "stage the bulk
     * batch to parquet, then sink the scan" pattern genuinely
-    * cache-free. Anything non-file (HTTP source RDDs, local batches,
-    * mapPartitions lambdas) or non-deterministic keeps the persist.
+    * cache-free. Anything non-file (HTTP source RDDs, the arcgis and
+    * visualcrossing DSv2 scans, local batches, mapPartitions lambdas) or
+    * non-deterministic keeps the persist.
     */
   private[etl] def replayableScan(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.{logical => lp}
@@ -210,8 +218,10 @@ object Sinks {
     // to the conservative (persist-everything) branch
     def leafOk(l: lp.LogicalPlan): Boolean = l match {
       case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
-      case _: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        true
+      // only FILE-backed V2 scans: each execution of an arcgis or
+      // visualcrossing scan is a fresh HTTP pull
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan.isInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScan]
       case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
         // a MEMORY_ONLY cache can evict blocks and recompute them from
         // the ORIGINAL source between the dup pre-check and the write —
@@ -724,8 +734,17 @@ object Sinks {
         .drop("_rn")
     }
     val willCheck = statsBytes(batch) >= DedupPrecheckMinBytes
-    val lake = readLake(spark, path)
-    if (willCheck && lake.isEmpty) {
+    // only the lake's keys feed the anti-join: read them with the batch's
+    // key schema, so no footer-inference job runs (a schema-less or
+    // mergeSchema read opens footers first), and a lake whose key column
+    // has another physical type fails the read instead of being coerced
+    // into the join
+    val keyCols = keys.map(col)
+    val lakeKeys =
+      if (!LakeFs.nonEmptyDataDir(spark, path)) None
+      else Some(spark.read.schema(batch.select(keyCols: _*).schema).parquet(path)
+        .select(keyCols: _*))
+    if (willCheck && lakeKeys.isEmpty) {
       val fs = fsFor(spark, path)
       val tableRoot = new Path(path)
       val tmp = writeVerified(spark, batch, path, keys, partitionBy,
@@ -738,10 +757,9 @@ object Sinks {
         val hasDups = willCheck && hasDupKeys(batch, keys)
         val dedupedBatch =
           if (willCheck && !hasDups) batch else keepFirst(batch)
-        val fresh = lake match {
+        val fresh = lakeKeys match {
           case None => dedupedBatch
-          case Some(existing) =>
-            dedupedBatch.join(existing.select(keys.map(col): _*), keys, "left_anti")
+          case Some(existing) => dedupedBatch.join(existing, keys, "left_anti")
         }
         val w = capped(sorted(fresh, sortBy).write.mode(SaveMode.Append),
           maxRecordsPerFile)

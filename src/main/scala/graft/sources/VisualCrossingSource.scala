@@ -31,6 +31,11 @@ import graft.etl.Model
   * here each chunk is an InputPartition so chunks fetch in parallel. The
   * daily path (single-day pull, ref: etl/daily_load/weather_etl_daily.py:
   * 91-112) is the degenerate start==end single-partition case.
+  *
+  * Statistics (`SupportsReportStatistics`): the timeline returns one row
+  * per day, so `numRows` is the number of days in [start, end], known at
+  * planning without a request, and `sizeInBytes` is rows × the pruned
+  * read schema's default row size (see [[ScanStatistics]]).
   */
 class VisualCrossingTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "visualcrossing"
@@ -63,15 +68,20 @@ class VcScanBuilder(options: Map[String, String])
 }
 
 class VcScan(options: Map[String, String], required: StructType)
-    extends Scan with Batch {
+    extends Scan with Batch with SupportsReportStatistics {
+
+  private val start = LocalDate.parse(options("start"))
+  private val end = LocalDate.parse(options("end"))
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
+  /** One row per day of [start, end]: known without a request. */
+  override def estimateStatistics(): Statistics = ScanStatistics(
+    math.max(java.time.temporal.ChronoUnit.DAYS.between(start, end) + 1, 0L), required)
+
   /** One partition per date chunk (ref 15-day chunking as parallelism). */
   override def planInputPartitions(): Array[InputPartition] = {
-    val start = LocalDate.parse(options("start"))
-    val end = LocalDate.parse(options("end"))
     val chunk = options.getOrElse("chunkDays", "15").toInt.max(1)
     Iterator.iterate(start)(_.plusDays(chunk))
       .takeWhile(!_.isAfter(end))

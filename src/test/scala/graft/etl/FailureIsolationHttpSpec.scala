@@ -1,16 +1,15 @@
 package graft.etl
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.time.LocalDate
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.ArcGisHttpStub
 
 /** ST4 driven END-TO-END through the real HTTP stack (VERDICT r10
   * item 7): a live local server speaks the ArcGIS count-then-page
@@ -49,49 +48,10 @@ class FailureIsolationHttpSpec extends SparkSpec {
       }
     }
 
-  /** The day whose requests the server rejects; None = healed. */
-  @volatile private var outageDay: Option[String] = None
-
-  private def inRange(msLo: Long, msHi: Long, day: String): Boolean =
-    dayMs(day) >= msLo && dayMs(day) < msHi
-
-  private def handle(ex: HttpExchange): Unit = {
-    val params = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-      .split("&").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        k -> java.net.URLDecoder.decode(v, "UTF-8")
-      }.toMap
-    // pushed predicate: "ISSUE_DATE >= lo AND ISSUE_DATE < hi"
-    // (a "1=1" where — no pushdown — must read as no range, not (1,1))
-    val range = "ISSUE_DATE >= (\\d+) AND ISSUE_DATE < (\\d+)".r.findFirstMatchIn(
-      params.getOrElse("where", "")).map(m => (m.group(1).toLong, m.group(2).toLong))
-    val failed = outageDay.exists(d => range.exists { case (lo, hi) => inRange(lo, hi, d) })
-    val (code, body) =
-      if (failed) (500, "injected mid-range outage")
-      else {
-        val matched = range match {
-          case Some((lo, hi)) => features.filter { a =>
-            val t = a.get("ISSUE_DATE").asLong; t >= lo && t < hi
-          }
-          case None => features
-        }
-        if (params.get("returnCountOnly").contains("true"))
-          (200, s"""{"count":${matched.size}}""")
-        else {
-          val off = params.getOrElse("resultOffset", "0").toInt
-          val lim = params.getOrElse("resultRecordCount", "1000").toInt
-          val root = mapper.createObjectNode()
-          val arr = root.putArray("features")
-          matched.slice(off, off + lim).foreach { a =>
-            arr.add(mapper.createObjectNode().set[ObjectNode]("attributes", a))
-          }
-          (200, mapper.writeValueAsString(root))
-        }
-      }
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.sendResponseHeaders(code, bytes.length)
-    ex.getResponseBody.write(bytes)
-    ex.close()
+  /** Rejects every request whose pushed range covers `day`. */
+  private def outage(day: String): Option[(Long, Long)] => Boolean = {
+    case Some((lo, hi)) => dayMs(day) >= lo && dayMs(day) < hi
+    case None => false
   }
 
   /** Weather leg rides a plain fixture — the failure drive targets the
@@ -115,12 +75,9 @@ class FailureIsolationHttpSpec extends SparkSpec {
   }
 
   test("ST4 end-to-end over live HTTP: gap in faithful mode, closed by backfillGaps") {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/arcgis", handle _)
-    server.start()
+    val server = new ArcGisHttpStub(features)
     try {
-      val url = s"http://127.0.0.1:${server.getAddress.getPort}/arcgis"
-      val aOpts = Map("mode" -> "http", "url" -> url, "layer" -> "0")
+      val aOpts = Map("mode" -> "http", "url" -> server.url, "layer" -> "0")
       val base = Files.createTempDirectory("st4-lake").resolve("lake").toString
       val fw: LocalDate => org.apache.spark.sql.DataFrame =
         IncrementalRunner.fetchWeatherViaSource(spark,
@@ -135,7 +92,7 @@ class FailureIsolationHttpSpec extends SparkSpec {
       val vPath = IncrementalRunner.violationsPath(base)
 
       // mid-range outage: 09-02 fails AT THE SERVER; 09-01 and 09-03 land
-      outageDay = Some("2024-09-02")
+      server.reject = outage("2024-09-02")
       val r1 = run("2024-09-04")
       assert(r1.violations.loaded == Seq(ld("2024-09-01"), ld("2024-09-03")))
       assert(r1.violations.failed.map(_._1) == Seq(ld("2024-09-02")))
@@ -144,7 +101,7 @@ class FailureIsolationHttpSpec extends SparkSpec {
         .contains(ld("2024-09-03")))
 
       // faithful mode after the outage heals: up to date, gap NOT retried
-      outageDay = None
+      server.reject = _ => false
       val r2 = run("2024-09-04")
       assert(r2.violations.skipped)
       assert(Incremental.gaps(spark, vPath, "violation_date", cold)
@@ -161,6 +118,6 @@ class FailureIsolationHttpSpec extends SparkSpec {
       val v = spark.read.parquet(vPath)
       assert(v.count() == 9)
       assert(v.select(countDistinct(col("violation_id"))).head().getLong(0) == 9)
-    } finally server.stop(0)
+    } finally server.close()
   }
 }

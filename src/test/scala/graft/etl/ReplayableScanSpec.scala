@@ -12,10 +12,10 @@ import graft.SparkSpec
   * its execution-consistency persist, so a leaf class it silently stops
   * recognizing re-enables corpus-scale persists on bulk merges. The
   * leaf matches are now typed (a rename is a compile error), and this
-  * spec asserts the BEHAVIOR each match buys: V1 scans, V2 scans, and
-  * disk-backed caches replay; memory-only caches (which can evict and
-  * recompute from the original source — ADVICE r14 low) and local /
-  * shuffling / non-deterministic plans do not.
+  * spec asserts the BEHAVIOR each match buys: V1 scans, V2 file scans,
+  * and disk-backed caches replay; memory-only caches (which can evict and
+  * recompute from the original source — ADVICE r14 low), the HTTP-backed
+  * V2 sources, and local / shuffling / non-deterministic plans do not.
   */
 class ReplayableScanSpec extends SparkSpec {
   import spark.implicits._
@@ -77,5 +77,22 @@ class ReplayableScanSpec extends SparkSpec {
     assert(!Sinks.replayableScan(df.groupBy(col("v")).count()))
     assert(!Sinks.replayableScan(df.join(df.select(col("id")), Seq("id"))))
     assert(!Sinks.replayableScan(df.select(col("id"), rand().as("r"))))
+  }
+
+  test("HTTP-backed V2 sources keep the persist: arcgis and its transform") {
+    // a V2 scan relation that is NOT a file scan: every execution is a
+    // fresh pull (fixture mode stands in for the HTTP backend)
+    val dir = Files.createTempDirectory("graft-replay-arcgis")
+    Files.write(dir.resolve("features.json"),
+      ("""{"features":[{"attributes":{"OBJECTID":1,"ISSUE_DATE":1725184800000,""" +
+        """"FINE_AMOUNT":"100"}}]}""").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val raw = spark.read.format("arcgis")
+      .option("mode", "fixture").option("path", dir.toString).load()
+    val leaves = raw.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation]),
+      s"expected a DataSourceV2ScanRelation leaf, got: ${leaves.map(_.getClass.getSimpleName)}")
+    assert(!Sinks.replayableScan(raw))
+    assert(!Sinks.replayableScan(Transforms.violationsFromArcGis(raw, useSyntheticId = true)))
   }
 }

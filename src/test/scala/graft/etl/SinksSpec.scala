@@ -69,6 +69,25 @@ class SinksSpec extends SparkSpec {
     assert(read(path).count() == 2)
   }
 
+  test("insert-ignore: a lake key of another physical type fails, never coerces") {
+    // the anti-join reads only the lake's keys, typed as the BATCH's keys:
+    // a string-keyed lake offered a long-keyed batch must fail the call,
+    // not cast one side into the join and append a second key type
+    val path = tmpDir()
+    batch(("1", 1.0, 0, "2024-09")).write.parquet(path)
+    val e = intercept[Exception] {
+      Sinks.insertIgnore(spark,
+        Seq((1L, 9.0, 1, "2024-09"), (2L, 2.0, 1, "2024-09"))
+          .toDF("violation_id", "fine_amount", "seq", "month"),
+        path, Seq("violation_id"))
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("violation_id")), messages.mkString("\n"))
+    assert(read(path).count() == 1 && read(path).schema("violation_id").dataType ==
+      org.apache.spark.sql.types.StringType)
+  }
+
   test("big-batch path (dedup pre-check forced): all core laws hold") {
     // the size-gated keys-only pre-check lets a provably-clean bulk load
     // skip the full-width dedup window (the 50M-row index build that

@@ -6,14 +6,16 @@ import java.nio.file.{Files, Path}
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.etl.Transforms
+import graft.etl.{IncrementalRunner, Sinks, Transforms}
 
 /** DSv2 source tests against fixture payloads (SURVEY.md §5.4: pagination
   * incl. the exact-page-multiple edge, predicate pushdown, pruning,
-  * case-coalesced fields).
+  * case-coalesced fields) and the planning statistics both scans report.
   */
 class SourcesSpec extends SparkSpec {
 
@@ -231,5 +233,90 @@ class SourcesSpec extends SparkSpec {
     val d0d = daily.filter(col("weather_date") === "2024-09-01").collect()(0)
     assert(d0h.getAs[Int]("is_rain") == 0 && d0d.getAs[Int]("is_rain") == 1)
     assert(hist.count() == 15)
+  }
+
+  /** The planner's statistics of the frame's one DSv2 scan. */
+  private def scanStats(df: DataFrame): Statistics = {
+    val scans = df.queryExecution.optimizedPlan.collectLeaves().collect {
+      case r: DataSourceV2ScanRelation => r
+    }
+    assert(scans.size == 1, s"expected one DSv2 scan, got ${scans.size}")
+    scans.head.stats
+  }
+
+  test("statistics: a one-day arcgis scan reports the pushed range's count") {
+    val dir = arcgisFixture(3000)
+    val (lo, hi) = (dayMs(5), dayMs(6))
+    val expect = new FixtureArcGisFetcher(dir).count(Some((lo, hi)))
+    assert(expect == 100)
+    val stats = scanStats(readArcgis(dir)
+      .filter(col("ISSUE_DATE") >= lo && col("ISSUE_DATE") < hi))
+    assert(stats.rowCount.contains(BigInt(expect)))
+    assert(stats.sizeInBytes > 0)
+  }
+
+  test("statistics: a visualcrossing scan reports one row per day of its range") {
+    val dir = vcFixture(0, 31)
+    assert(scanStats(readVc(dir, "2024-09-10", "2024-09-10")).rowCount.contains(BigInt(1)))
+    assert(scanStats(readVc(dir, "2024-09-01", "2024-09-15")).rowCount.contains(BigInt(15)))
+  }
+
+  test("statistics: a zero-column prune of a non-empty scan never reads as 0 bytes") {
+    val arcgis = readArcgis(arcgisFixture(100)).groupBy().count()
+    val vc = readVc(vcFixture(0, 5), "2024-09-01", "2024-09-05").groupBy().count()
+    for (df <- Seq(arcgis, vc)) {
+      val leaf = df.queryExecution.optimizedPlan.collectLeaves().head
+      assert(leaf.output.isEmpty, s"count(*) should prune every column: ${leaf.output}")
+      assert(scanStats(df).sizeInBytes > 0)
+    }
+  }
+
+  test("statistics: a daily fixture batch plans under the sinks' small-batch bound") {
+    // Sinks.DedupPrecheckMinBytes: below it a sink call is one action
+    val bound = BigInt(256L << 20)
+    val day = java.time.LocalDate.of(2024, 1, 6) // dayMs(5)
+    val violations = IncrementalRunner.fetchViolationsViaSource(spark,
+      Map("mode" -> "fixture", "path" -> arcgisFixture(3000)))(day)
+    val weather = IncrementalRunner.fetchWeatherViaSource(spark,
+      Map("mode" -> "fixture", "path" -> vcFixture(0, 31)))(
+      java.time.LocalDate.of(2024, 9, 10))
+    for (df <- Seq(violations, weather)) {
+      val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(size > 0 && size < bound, s"plan size $size")
+    }
+  }
+
+  test("statistics over live HTTP: a daily insertIgnore sends at most two count probes") {
+    // two days of 50 features, the second day offered onto a lake that
+    // already holds the first
+    val days = Seq(java.time.LocalDate.of(2024, 9, 1), java.time.LocalDate.of(2024, 9, 2))
+    val features = days.zipWithIndex.flatMap { case (d, di) =>
+      val ms = d.atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
+      (0 until 50).map { i =>
+        val attrs = mapper.createObjectNode()
+        attrs.put("OBJECTID", (di * 1000 + i).toLong)
+        attrs.put("ISSUE_DATE", ms + 36000000L + i)
+        attrs.put("ISSUING_AGENCY_NAME", "MPD")
+        attrs.put("FINE_AMOUNT", "100")
+        attrs
+      }
+    }
+    val server = new ArcGisHttpStub(features)
+    try {
+      val fetch = IncrementalRunner.fetchViolationsViaSource(spark,
+        Map("mode" -> "http", "url" -> server.url, "layer" -> "0")) _
+      val path = Files.createTempDirectory("stats-http").resolve("v").toString
+      def load(d: java.time.LocalDate): Unit = Sinks.insertIgnore(spark, fetch(d), path,
+        keys = Seq("violation_id"), partitionBy = Seq("month"))
+      load(days(0))
+      server.countRequests.set(0)
+      load(days(1))
+      // one probe sizes the batch for the sink's routing, one plans the
+      // write's pages; before the scan reported statistics, the unknown
+      // size sent the batch down the big-frame path and the count ran 5
+      // times
+      assert(server.countRequests.get() <= 2, s"count probes: ${server.countRequests.get()}")
+      assert(spark.read.parquet(path).count() == 100)
+    } finally server.close()
   }
 }
