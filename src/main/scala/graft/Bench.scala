@@ -1,6 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Benchmark main (driver contract): times every SparkEntry query at the
   * SPARK_GRAFT_SF_DIR scale factor and prints ONE JSON line.
@@ -17,6 +28,12 @@ import org.apache.spark.sql.SparkSession
   * bad sample) and the per-query minimum (`queries_min`, the closest
   * approximation of quiesced truth BASELINE.md instructs rounds to
   * compare on).
+  *
+  * Per-query cost breakdown: after every sample one `[layers] {json}` row
+  * goes to stderr ([[Layers]]), so a reader can tell scan-bound from
+  * shuffle-bound from dispatch-bound before touching a plan. Pointed at a
+  * [[ProbeCorpus]] (`SPARK_GRAFT_SF_DIR=/tmp/docs10x`) the same run is the
+  * scale check ([[probeSplits]]).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -27,8 +44,49 @@ object Bench {
     // emitted artifact tell box degradation from code regression without
     // any external context (thresholds in HostProbe/BASELINE.md)
     val boxPre = HostProbe.measure()
-    val spark = Tables.localSession(cores = cpus.toInt)
+    val spark = Tables.localSession(cores = cpus.toInt, probeSplits = probeSplits(sfDir))
+    // Optional args name a subset to bench (local iteration only; the
+    // driver passes no args and benches everything).
+    run(spark, sfDir, samples, args.toSet) {
+      // host health again after the passes: a burst that arrived
+      // mid-sweep shows as pre-healthy/post-degraded (or vice versa).
+      // Measured after spark.stop() plus a short settle so the session's
+      // draining thread pools don't pollute the wakeup-latency reading
+      // (they inflate it ~7x; even settled, an in-JVM post reads somewhat
+      // above a cold probe — compare post against pre directionally, pre
+      // against the BASELINE.md thresholds absolutely).
+      spark.stop()
+      Thread.sleep(1000)
+      s"""{"pre":${boxPre.json},"post":${HostProbe.measure().json}}"""
+    }
+  }
+
+  /** Whether `sfDir` is a [[ProbeCorpus]] layout (replicated tables are
+    * directories of part-files; a testdata sf dir holds one file per table).
+    * A probe corpus must pass [[ProbeCorpus.assertScanParallel]] and runs on
+    * the 1 MB split session; a testdata sf dir keeps Spark's split defaults.
+    */
+  def probeSplits(sfDir: String): Boolean = {
+    val probe = ProbeCorpus.ReplicatedTables
+      .exists(t => new java.io.File(s"$sfDir/$t.parquet").isDirectory)
+    if (probe) ProbeCorpus.assertScanParallel(sfDir)
+    probe
+  }
+
+  /** Bench the queries named in `only` (all when empty) on `spark`:
+    * `samples` full passes with one `[layers]` row per sample on stderr,
+    * then the two stdout lines. `box` runs after the passes and yields the
+    * host-health JSON object both lines carry.
+    */
+  def run(spark: SparkSession, sfDir: String, samples: Int, only: Set[String])
+      (box: => String): Unit = {
     warmup(spark, sfDir)
+    val sc = spark.sparkContext
+    val layers = new Layers
+    sc.addSparkListener(layers)
+    // the warmup's events must not land in the first sample's row
+    ListenerBusDrain(sc)
+    layers.reset()
 
     // A failing query must read as a failure, not as a fast success: its
     // time is reported as -1 and it is excluded from the totals. Cached
@@ -40,11 +98,22 @@ object Bench {
     // never count() (see Fold for why). anchors.json carries the metric
     // in its "action" field; "count"-action anchors are NOT comparable
     // per-query.
-    def sampleOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def sampleOnce(name: String, sample: Int,
+        fn: (SparkSession, String) => DataFrame): Double = {
+      val row = Json.createObjectNode().put("query", name).put("sample", sample)
       val t0 = System.nanoTime()
       val ok =
         try {
-          Fold.digest(fn(spark, sfDir))
+          val raw = fn(spark, sfDir)
+          row.put("build_s", (System.nanoTime() - t0) / 1e9)
+          // jobs started from here on are the fold's; every job before
+          // this ran eagerly inside the build
+          sc.setLocalProperty(PhaseKey, "fold")
+          try {
+            val folded = Fold.frame(raw)
+            row.put("exchanges", exchanges(folded.queryExecution.executedPlan))
+            row.put("rows", folded.collect()(0).getLong(0))
+          } finally sc.setLocalProperty(PhaseKey, null)
           true
         }
         catch { case e: Throwable =>
@@ -54,18 +123,20 @@ object Bench {
       val elapsed = (System.nanoTime() - t0) / 1e9 // before cache teardown
       spark.catalog.clearCache()
       CacheScope.drain(spark) // clearCache freed the data; drop the plan refs too
+      // outside the timed region: wait until the sample's events landed
+      ListenerBusDrain(sc)
+      layers.drainInto(row.put("ok", ok).put("wall_s", elapsed))
+      Console.err.println("[layers] " + Json.writeValueAsString(row))
       if (ok) elapsed else -1.0
     }
     // full passes over the query list (not N back-to-back runs of one
     // query) so a load burst degrades one PASS, not one query's samples.
-    // Optional args name a subset to bench (local iteration only; the
-    // driver passes no args and benches everything).
-    val only = args.toSet
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
-    val passes = (1 to samples).map { _ =>
-      names.map { case (name, fn) => name -> sampleOnce(name, fn) }.toMap
-    }
+    val passes =
+      try (1 to samples).map { s =>
+        names.map { case (name, fn) => name -> sampleOnce(name, s, fn) }.toMap
+      } finally sc.removeSparkListener(layers)
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
@@ -95,7 +166,7 @@ object Bench {
       val f = new java.io.File(anchorsPath)
       if (!f.isFile) None
       else try {
-        val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+        val root = Json.readTree(f)
         // Anchors recorded under a different timed action (e.g. the old
         // count() metric) are NOT comparable — refusing beats silently
         // reporting cross-metric ratios (q_exact_substr would read ~29x).
@@ -139,18 +210,7 @@ object Bench {
         val lg = largeOf(rs)
         s""""anchors_file":"$anchorsPath","anchored_count":${rs.size},"ratios":$ratios,"ratio_sum":${ratioSumOf(rs)},"ratio_sum_large":${ratioSumOf(lg)},"n_large":${lg.size}"""
     }
-    // host health again after the passes: a burst that arrived mid-sweep
-    // shows as pre-healthy/post-degraded (or vice versa). Measured after
-    // spark.stop() plus a short settle so the session's draining thread
-    // pools don't pollute the wakeup-latency reading (they inflate it
-    // ~7x; even settled, an in-JVM post reads somewhat above a cold
-    // probe — compare post against pre directionally, pre against the
-    // BASELINE.md thresholds absolutely).
-    spark.stop()
-    Thread.sleep(1000)
-    val boxPost = HostProbe.measure()
-    val boxBlock =
-      s""""box":{"pre":${boxPre.json},"post":${boxPost.json}}"""
+    val boxBlock = s""""box":$box"""
     // The driver stores only the TAIL of bench output, so the gate-relevant
     // numbers (errors, totals, anchor ratios, ratio_sum) go LAST — the big
     // per-query maps are what truncation may cut, never the gate block.
@@ -176,10 +236,98 @@ object Bench {
   /** JVM + codegen + parquet reader paths, so startup doesn't land on
     * whichever query happens to be timed first.
     */
-  def warmup(spark: SparkSession, sfDir: String): Unit = {
+  private def warmup(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Tables.nation(spark, sfDir).count()
     SparkEntry.queries.get("qd_join_filter_count")
       .foreach(q => q(spark, sfDir).count())
+  }
+
+  private val Json = new ObjectMapper()
+
+  /** Local property that tags a sample's fold jobs; a job started without
+    * it ran inside the query's build: the eager work (the CC fixpoint, the
+    * langid inventory) and Spark's one schema-inference job per parquet
+    * table the build reads.
+    */
+  private val PhaseKey = "graft.bench.phase"
+
+  /** Exchange operators in the physical plan as planned (before AQE
+    * re-plans it at run time), subqueries included — the benchmark
+    * harness's `spark.exchanges` rule, so the two instruments agree.
+    */
+  private def exchanges(p: SparkPlan): Int = p match {
+    case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+    case e: Exchange => 1 + e.children.map(exchanges).sum
+    case o => (o.children ++ o.subqueries).map(exchanges).sum
+  }
+
+  /** The per-sample listener behind the `[layers]` rows: the jobs, stages
+    * and tasks delivered since the last [[reset]]. A stage belongs to the
+    * phase of the first job that listed it. Every handler and reader
+    * synchronizes on the listener; readers run after a bus drain.
+    */
+  private final class Layers extends SparkListener {
+    private val foldStage = mutable.Map.empty[Int, Boolean]
+    private val taskMax = mutable.Map.empty[Int, Long]
+    private val stages = mutable.ArrayBuffer.empty[StageInfo]
+    private var buildJobs = 0
+
+    def reset(): Unit = synchronized {
+      foldStage.clear(); taskMax.clear(); stages.clear(); buildJobs = 0
+    }
+
+    override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
+      val fold = js.properties != null && js.properties.getProperty(PhaseKey) != null
+      if (!fold) buildJobs += 1
+      js.stageIds.foreach(id => if (!foldStage.contains(id)) foldStage(id) = fold)
+    }
+
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = synchronized {
+      taskMax(te.stageId) = taskMax.getOrElse(te.stageId, 0L).max(te.taskInfo.duration)
+    }
+
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+      synchronized { stages += sc.stageInfo }
+
+    /** Add the totals since [[reset]] and the top 3 stages by executor
+      * run time to `row`, then reset.
+      */
+    def drainInto(row: ObjectNode): Unit = synchronized {
+      def sum(f: TaskMetrics => Long, of: Iterable[StageInfo] = stages): Long =
+        of.iterator.map(s => f(s.taskMetrics)).sum
+      def fold(s: StageInfo): Boolean = foldStage.getOrElse(s.stageId, false)
+      def maxTask(s: StageInfo): Long = taskMax.getOrElse(s.stageId, 0L)
+      row.put("build_jobs", buildJobs)
+        .put("stages", stages.size)
+        .put("tasks", stages.iterator.map(_.numTasks.toLong).sum)
+        .put("executor_run_s", sum(_.executorRunTime) / 1e3)
+        .put("executor_cpu_s", sum(_.executorCpuTime) / 1e9)
+        .put("shuffle_read_bytes", sum(_.shuffleReadMetrics.totalBytesRead))
+        .put("shuffle_read_records", sum(_.shuffleReadMetrics.recordsRead))
+        .put("shuffle_write_bytes", sum(_.shuffleWriteMetrics.bytesWritten))
+        .put("shuffle_write_records", sum(_.shuffleWriteMetrics.recordsWritten))
+        .put("input_bytes", sum(_.inputMetrics.bytesRead))
+        .put("build_input_bytes", sum(_.inputMetrics.bytesRead, stages.filterNot(fold)))
+        .put("spill_bytes", sum(_.diskBytesSpilled))
+        .put("max_task_s", stages.iterator.map(maxTask).maxOption.getOrElse(0L) / 1e3)
+      val top = row.putArray("top_stages")
+      stages.sortBy(-_.taskMetrics.executorRunTime).take(3).foreach { s =>
+        val m = s.taskMetrics
+        val wallMs = for (a <- s.submissionTime; b <- s.completionTime) yield b - a
+        top.addObject()
+          .put("phase", if (fold(s)) "fold" else "build")
+          .put("name", s.name)
+          .put("tasks", s.numTasks)
+          .put("executor_run_s", m.executorRunTime / 1e3)
+          .put("wall_s", wallMs.getOrElse(0L) / 1e3)
+          .put("max_task_s", maxTask(s) / 1e3)
+          .put("shuffle_read_bytes", m.shuffleReadMetrics.totalBytesRead)
+          .put("shuffle_write_bytes", m.shuffleWriteMetrics.bytesWritten)
+          .put("input_bytes", m.inputMetrics.bytesRead)
+          .put("spill_bytes", m.diskBytesSpilled)
+      }
+      reset()
+    }
   }
 }

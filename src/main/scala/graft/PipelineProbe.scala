@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Round-8 rehearsal probes for the COMPOSED paths (the real-user DAGs),
-  * complementing ScaleProbe's per-operator probes:
+  * complementing the per-operator scale check (`graft.Bench` on a
+  * [[ProbeCorpus]]):
   *
   *   sbt "runMain graft.PipelineProbe pipeline      /tmp/docs100x"
-  *   sbt "runMain graft.PipelineProbe incremental   /tmp/docs100x"
   *   sbt "runMain graft.PipelineProbe decontaminate /tmp/docs100x"
   *   sbt "runMain graft.PipelineProbe minimizers    /tmp/docs100x"
   *
@@ -17,11 +17,6 @@ import org.apache.spark.sql.functions._
   *   riding the terminal action (no extra jobs). Multi-consumer DAGs
   *   have hidden recompute traps twice before (q_dedup_agreement,
   *   q_hits) — this measures the biggest one.
-  * - `incremental`: the STEADY-STATE daily dedup cost — pre-build the
-  *   standing signature index (timed separately; the one-time cost),
-  *   then time ONE day's batch through signatures → partitioned upsert →
-  *   pairsForBatchSigs. Run against /tmp/docs10x and /tmp/docs100x with
-  *   the SAME batch to show daily cost vs standing-corpus size.
   * - `decontaminate`: 100× corpus against a CONSTANT benchmark (the
   *   production shape — a fixed eval suite never grows with the corpus),
   *   the number that belongs next to the replicated-eval artifact in
@@ -41,10 +36,8 @@ object PipelineProbe {
     mode match {
       case "pipeline" => runPipeline(spark, dir, baseDir)
       case "stages" => runStages(spark, dir, baseDir)
-      case "incremental" => runIncremental(spark, dir, baseDir)
       case "decontaminate" => runDecontaminate(spark, dir, baseDir)
       case "minimizers" => runMinimizers(spark, dir)
-      case "groups" => runGroupBundle(spark, dir)
       case "explain" => runExplain(spark, dir, baseDir)
       case other => sys.error(s"unknown probe mode: $other")
     }
@@ -176,35 +169,6 @@ object PipelineProbe {
       "(full plan: /tmp/pipeline_plan.txt)")
   }
 
-  private def runIncremental(
-      spark: org.apache.spark.sql.SparkSession, dir: String, baseDir: String): Unit = {
-    import queries.IncrementalDedupQueries._
-    val docs = Tables.documents(spark, dir)
-    // the batch is the BASE corpus's %5==4 slice — identical at every
-    // probe scale, so daily cost is comparable across standing-index sizes
-    val isBase = col("doc_id") < 10000000L
-    val batchPred = isBase && col("doc_id") % 5 === 4
-    val lake = java.nio.file.Files.createTempDirectory("inc-steady")
-      .resolve("sig").toString
-    val tb = System.nanoTime()
-    updateIndex(spark, signatures(docs.filter(!batchPred)), lake,
-      ingestDate = Some("2026-08-12"))
-    val buildSecs = (System.nanoTime() - tb) / 1e9
-    val nIndexed = spark.read.parquet(lake).count()
-    println(f"[incremental] index build  $buildSecs%8.2f s   standing=$nIndexed")
-
-    val t0 = System.nanoTime()
-    val sigs = signatures(docs.filter(batchPred)).persist()
-    updateIndex(spark, sigs, lake, ingestDate = Some("2026-08-13"))
-    val index = spark.read.parquet(lake)
-    val (nPairs, _) = Fold.digest(pairsForBatchSigs(index, sigs))
-    val daySecs = (System.nanoTime() - t0) / 1e9
-    println(f"[incremental] daily batch  $daySecs%8.2f s   batch=${sigs.count()}  pairs=$nPairs")
-    sigs.unpersist()
-    graft.etl.LakeFs.deleteRecursively(spark,
-      new org.apache.hadoop.fs.Path(lake).getParent)
-  }
-
   private def runDecontaminate(
       spark: org.apache.spark.sql.SparkSession, dir: String, baseDir: String): Unit = {
     val docs = Tables.documents(spark, dir)
@@ -223,39 +187,6 @@ object PipelineProbe {
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"[decontaminate] $strat%-9s constant benchmark $secs%8.2f s   kept=$kept")
     }
-  }
-
-  /** A/B for the dedup-group trio (VERDICT r11 item 4): the standalone
-    * queries each pay their own signature pass + component resolution
-    * (SparkEntry's scopedBuild drains between queries by design); the
-    * [[queries.SketchDedupQueries.dedupGroupBundle]] shares ONE
-    * CacheScope-persisted repComp across all three. Prints both totals.
-    */
-  private def runGroupBundle(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    import queries.SketchDedupQueries
-    def standalone(name: String, f: => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val n = f.count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      println(f"[groups] standalone $name%-14s $secs%8.2f s   rows=$n")
-      spark.catalog.clearCache(); CacheScope.drain(spark)
-      secs
-    }
-    val ta =
-      standalone("components", SketchDedupQueries.qDedupComponents(spark, dir)) +
-      standalone("apply", SketchDedupQueries.qDedupApply(spark, dir)) +
-      standalone("cluster_stats", SketchDedupQueries.qDedupClusterStats(spark, dir))
-    val t0 = System.nanoTime()
-    val bundle = SketchDedupQueries.dedupGroupBundle(spark, dir)
-    Seq("components", "apply", "cluster_stats").foreach { n =>
-      val t1 = System.nanoTime()
-      val r = bundle(n).count()
-      println(f"[groups] bundle     $n%-14s ${(System.nanoTime() - t1) / 1e9}%8.2f s   rows=$r")
-    }
-    val tb = (System.nanoTime() - t0) / 1e9
-    spark.catalog.clearCache(); CacheScope.drain(spark)
-    println(f"[groups] standalone total $ta%8.2f s   bundle total $tb%8.2f s")
   }
 
   private def runMinimizers(

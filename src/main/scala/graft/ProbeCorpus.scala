@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Builds the adversarial replicated probe corpus ScaleProbe runs
-  * against: an sf dir's documents/embeddings/events replicated N× under
+/** Builds the adversarial replicated probe corpus Bench and the Sentinel
+  * run against: an sf dir's documents/embeddings/events replicated N× under
   * offset ids, so every document gains N−1 IDENTICAL twins. Near-dup
   * OUTPUT then grows ~quadratically in the copy count (C(N,2) pairs per
   * group) while candidate GENERATION must stay bounded — the exact

@@ -60,7 +60,7 @@ object StreamProbe {
       spark: SparkSession, dir: String, only: Option[Set[String]]): Unit = {
     val flat = flatLayout(spark, dir)
     // stable order, warmup op first so JVM/codegen startup doesn't land
-    // on the first measured op (ScaleProbe lesson, SURVEY §10.9)
+    // on the first measured op (SURVEY §10.9)
     val names = queries.StreamingQueries.queries.keys.toSeq.sorted
     val warm = Seq("events", "documents").map(t => s"$flat/$t.parquet")
       .find(p => new java.io.File(p).exists).get

@@ -84,7 +84,7 @@ object Tables {
     * run on: shuffle partitions = cores, AQE with a 64 KB coalescing
     * floor, UTC.
     *
-    * `probeSplits = true` (probe/sentinel entry points only) adds
+    * `probeSplits = true` (ProbeCorpus dirs only) adds
     * scan-split overrides for the replicated probe corpora (round 12):
     * those corpora compress ~100x on disk (49 MB for 5M docs at 1000x),
     * so under the 128 MB default every scan stage was ONE task — every

@@ -455,7 +455,8 @@ object Sinks {
           partitionBy.indices.map(i =>
             if (r.isNullAt(i)) null else r.get(i).toString)
         val batchParts = b.select(pcols: _*).distinct().collect().map(tupOf)
-        val existing = readRaw(spark, path, mergeSchema = false)
+        // mergeSchema (as readLake): rewritten partitions keep evolved columns
+        val existing = readRaw(spark, path, mergeSchema = true)
         // with globalKeys, partitions holding a previous version of a
         // batch key are merged too — their stale copies lose keepLast
         val staleParts: Array[Seq[String]] =
@@ -556,7 +557,8 @@ object Sinks {
       val tag = java.util.UUID.randomUUID.toString.take(8)
       val tmp = new Path(root.getParent, root.getName + "._compact_" + tag)
       val asideRoot = new Path(root.getParent, root.getName + "._aside_" + tag)
-      spark.read.parquet(dir.toString)
+      // mergeSchema: appends that added a column must not lose it here
+      readRaw(spark, dir.toString, mergeSchema = true)
         .coalesce(targetFiles)
         .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
       swapDirs(fs, dir, tmp, asideRoot)

@@ -267,7 +267,7 @@ object IncrementalDedupQueries {
     * per daily batch. On a 1000-executor cluster against a 100 TB index
     * that is a network rewrite of the whole table, twice a day; this
     * shape never shuffles an index row. Interleaved A/B at 1000×
-    * (IncProbe, 5M-doc index, 1k-doc batch, 1.08M pairs either way):
+    * (5M-doc index, 1k-doc batch, 1.08M pairs either way):
     * min-of-6 13.6 → 8.8 s quiet, and under external load the gap
     * widens (median 25 → 16 s) because there is no shuffle to contend
     * on. The 4× per-hit verify arithmetic (vs once per distinct pair)

@@ -171,8 +171,8 @@ object SketchDedupQueries {
   // design): pigeonhole guarantees any pair within distance 3 shares one
   // of the 4 bands, and 2^15 band values keep candidate generation linear.
   // (An 8-bit-band variant collapses quadratically: at 50k docs every band
-  // value holds ~200 docs -> 10^8 candidate pairs. Measured via
-  // graft.ScaleProbe before this layout was chosen.)
+  // value holds ~200 docs -> 10^8 candidate pairs. Measured on the 10x
+  // probe corpus before this layout was chosen.)
   private val SimBits = 60
   private val SimBands = 4             // 4 bands x 15 bits
   private val BandBits = 15

@@ -42,16 +42,9 @@ object StreamingQueries {
   private def withStreamConfs[A](spark: SparkSession)(f: => A): A =
     withScopedConf(spark,
       "spark.sql.shuffle.partitions" -> "8",
-      // state-store provider, env-overridable (optimization r16): the
-      // RocksDB provider was A/B'd across all 12 streaming queries
-      // (SPARK_GRAFT_STREAM_STATESTORE_PROVIDER=
-      // org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider)
-      // — see OPTIMIZATION_r16.md for the numbers; the default stays
-      // whatever won. At production state volumes RocksDB's spill-to-disk
-      // beats the in-memory HDFS-backed map; size via this knob.
-      "spark.sql.streaming.stateStore.providerClass" ->
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_STATESTORE_PROVIDER",
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"),
+      // the state store is Spark's default (HDFS-backed, in-memory)
+      // provider: RocksDB measured 1.07x slower across the 12 streaming
+      // queries at these state sizes (OPTIMIZATION_r16.md)
       "spark.sql.legacy.parquet.nanosAsLong" -> "true")(f)
 
   /** Events as a STREAM with `ts` normalized to raw epoch NANOS (long)

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * The round-12 instrument bug — a replicated corpus compressed into ONE
   * parquet part-file, so every pre-shuffle receipt measured a single
   * core — must be structurally impossible to reintroduce: Sentinel and
-  * ScaleProbe call [[ProbeCorpus.assertScanParallel]] before recording
+  * Bench call [[ProbeCorpus.assertScanParallel]] before recording
   * or gating anything. This spec pins that the guard actually rejects a
   * single-split layout and accepts the layout ProbeCorpus writes.
   */

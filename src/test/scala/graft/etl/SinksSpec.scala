@@ -402,6 +402,22 @@ class SinksSpec extends SparkSpec {
     assert(after.keySet == Set("a", "b", "c"))
   }
 
+  test("upsert schema evolution, partitioned: a rewritten partition keeps an evolved column") {
+    val path = tmpDir()
+    Sinks.upsert(spark, Seq(("1", "x", "1"), ("2", "y", "1")).toDF("id", "a", "p"),
+      path, Seq("id"), partitionBy = Seq("p"))
+    Sinks.upsert(spark, Seq(("3", "z", 7.5, "2"), ("4", "w", 8.5, "2"))
+      .toDF("id", "a", "b", "p"), path, Seq("id"), partitionBy = Seq("p"))
+    // p=2 is rewritten: its existing rows must carry `b` through the merge
+    // although the first footer (p=1) predates the column
+    Sinks.upsert(spark, Seq(("5", "v", 9.5, "2")).toDF("id", "a", "b", "p"),
+      path, Seq("id"), partitionBy = Seq("p"))
+    val got = spark.read.option("mergeSchema", "true").parquet(path).collect()
+      .map(r => r.getAs[String]("id") -> Option(r.getAs[java.lang.Double]("b"))).toMap
+    assert(got == Map("1" -> None, "2" -> None, "3" -> Some(7.5), "4" -> Some(8.5),
+      "5" -> Some(9.5)))
+  }
+
   test("insert-ignore schema evolution: appended files with a new column merge on read") {
     val path = tmpDir()
     Sinks.insertIgnore(spark, batch(("a", 1.0, 0, "2024-09")),
@@ -410,9 +426,13 @@ class SinksSpec extends SparkSpec {
       Seq(("b", 2.0, 1, "2024-09", "note-b"))
         .toDF("violation_id", "fine_amount", "seq", "month", "note"),
       path, Seq("violation_id"), tiebreak = Some("seq"))
-    val got = spark.read.option("mergeSchema", "true").parquet(path).collect()
+    def notes(df: DataFrame): Map[String, String] = df.collect()
       .map(r => r.getAs[String]("violation_id") -> r.getAs[String]("note")).toMap
-    assert(got == Map("a" -> null, "b" -> "note-b"))
+    assert(notes(spark.read.option("mergeSchema", "true").parquet(path)) ==
+      Map("a" -> null, "b" -> "note-b"))
+    // compaction rewrites both files into one: the column survives it
+    Sinks.compact(spark, path, maxFiles = 1)
+    assert(notes(read(path)) == Map("a" -> null, "b" -> "note-b"))
   }
 
   test("sortBy layout: every written file is internally sorted (skippable row groups)") {
