@@ -112,7 +112,10 @@ object Bench {
           try {
             val folded = Fold.frame(raw)
             row.put("exchanges", exchanges(folded.queryExecution.executedPlan))
-            row.put("rows", folded.collect()(0).getLong(0))
+            val r = folded.collect()(0)
+            // the fold's bit_xor: two runs computed the same output iff
+            // rows and digest agree (up to a hash collision)
+            row.put("rows", r.getLong(0)).put("digest", r.getLong(1))
           } finally sc.setLocalProperty(PhaseKey, null)
           true
         }
@@ -247,8 +250,8 @@ object Bench {
 
   /** Local property that tags a sample's fold jobs; a job started without
     * it ran inside the query's build: the eager work (the CC fixpoint, the
-    * langid inventory) and Spark's one schema-inference job per parquet
-    * table the build reads.
+    * langid inventory) and any schema inference Spark still runs (a read
+    * [[ParquetFooters]] leaves to Spark).
     */
   private val PhaseKey = "graft.bench.phase"
 

@@ -6,8 +6,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Tables are plain parquet files under an sf directory. All queries take
   * the directory as a parameter so the same plan runs at any scale factor.
-  * Reads go through `spark.read.parquet` so Catalyst handles column
-  * pruning and filter pushdown into the parquet scan.
+  * Reads are parquet scans, so Catalyst handles column pruning and filter
+  * pushdown. Each read declares the schema Spark would infer, taken from
+  * the file's footer on the driver ([[ParquetFooters.read]]), so building
+  * a query starts no schema-inference job. The footer is re-read on every
+  * call: the physical `events.ts` type differs between testdata
+  * generations and probe corpora, so no static catalog would hold.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -15,7 +19,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetFooters.read(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "nation")

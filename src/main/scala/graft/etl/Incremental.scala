@@ -32,17 +32,26 @@ object Incremental {
 
   /** Watermark probe on a lake table: MAX(dateCol) (ST1; the reference's
     * `SELECT MAX(violation_date)`, ref: violation_etl_daily.py:125-126).
+    *
+    * In MySQL that is an index lookup; here it is the row-group statistics
+    * in the parquet footers, read on the driver with no Spark job
+    * ([[graft.ParquetFooters.maxDate]]). When the footers cannot tell (a
+    * file without the column or with another type, a row group without
+    * statistics, more files than the reader's cutoff
+    * ([[graft.ParquetFooters.MaxFooters]]), summary files) it falls back
+    * to the aggregate scan, which gives the same answer or the same error.
     */
   def watermark(spark: SparkSession, path: String, dateCol: String): Option[LocalDate] = {
     // missing, empty, or containing only write leftovers (_temporary /
     // _SUCCESS) — all read as an empty sink, not a crash
     if (!LakeFs.nonEmptyDataDir(spark, path)) None
-    else readDates(spark, path, dateCol)
-      .agg(max(col(dateCol)).as("wm"))
-      .collect()(0).getAs[Date]("wm") match {
-        case null => None
-        case d => Some(d.toLocalDate)
-      }
+    else graft.ParquetFooters.maxDate(spark, path, dateCol).getOrElse(
+      readDates(spark, path, dateCol)
+        .agg(max(col(dateCol)).as("wm"))
+        .collect()(0).getAs[Date]("wm") match {
+          case null => None
+          case d => Some(d.toLocalDate)
+        })
   }
 
   /** The lake's date column, read with its declared type: a schema-less

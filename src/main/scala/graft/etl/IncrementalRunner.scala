@@ -94,6 +94,12 @@ object IncrementalRunner {
     * start = end = the day. A day the API has nothing for lands as the
     * `missing_from_api` sentinel row (ref: :135-146) so the watermark
     * still advances and the gap is visible, not silent.
+    *
+    * The pull runs ONCE, here: a one-day range is at most a row, so it is
+    * collected on the driver and the sink gets a local frame of those
+    * rows (or of the sentinel). Handing the sink the lazy scan would pull
+    * the metered API a second time on write, and the emptiness check and
+    * the write could see different answers.
     */
   def fetchWeatherViaSource(
       spark: SparkSession, readerOpts: Map[String, String])(
@@ -102,10 +108,11 @@ object IncrementalRunner {
       .options(readerOpts ++ Map("start" -> d.toString, "end" -> d.toString))
       .load()
     val transformed = Transforms.weatherFromVc(raw, dailySemantics = true)
-    if (transformed.isEmpty) {
+    val rows = transformed.collect()
+    if (rows.isEmpty) {
       import spark.implicits._
       Seq(Transforms.missingWeatherRow(java.sql.Date.valueOf(d))).toDS().toDF()
-    } else transformed
+    } else spark.createDataFrame(java.util.Arrays.asList(rows: _*), transformed.schema)
   }
 
   /** CLI: `sbt "runMain graft.etl.IncrementalRunner /tmp/graft-lake

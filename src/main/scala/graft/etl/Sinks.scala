@@ -62,6 +62,15 @@ import org.apache.spark.sql.functions._
   * that reports none plans at Spark's unknown-size default and takes
   * the big-frame path.
   *
+  * Lake reads start no schema-inference job either. Insert-ignore's
+  * anti-join reads the lake's keys with the batch's key schema; every
+  * other internal read ([[readRaw]]: the upsert merges, `compact`,
+  * write-then-verify) declares the schema of the lake's parquet footers,
+  * read on the driver by [[graft.ParquetFooters]] (with `mergeSchema`,
+  * their union). A lake past the footer reader's bounds (more files than
+  * [[graft.ParquetFooters.MaxFooters]], summary files) is inferred by
+  * Spark as before.
+  *
   * Corpus-scale batches merged into an EXISTING lake are the one shape
   * that still materializes the batch (a persist, spilling linearly to
   * executor disk — bounded by batch size, unlike the round-13 sort
@@ -85,6 +94,11 @@ object Sinks {
     * value round-trips verbatim; union-by-name coercion still accepts an
     * int-typed batch (string result, same directory names), so
     * consumer-facing reads (which may infer freely) are unaffected.
+    *
+    * The data schema (the first file's, or with `mergeSchema` the union
+    * of every file's) comes from the footers on the driver
+    * ([[graft.ParquetFooters]]), so the read starts no inference job; a
+    * lake past the footer reader's bounds is inferred by Spark as before.
     */
   private def readRaw(spark: SparkSession, path: String, mergeSchema: Boolean): DataFrame = {
     val k = "spark.sql.sources.partitionColumnTypeInference.enabled"
@@ -92,7 +106,7 @@ object Sinks {
     spark.conf.set(k, "false")
     // inference happens eagerly at relation resolution, so scoping the
     // conf around the read call is sufficient
-    try spark.read.option("mergeSchema", mergeSchema.toString).parquet(path)
+    try graft.ParquetFooters.read(spark, path, Some(mergeSchema))
     finally prev match {
       case Some(v) => spark.conf.set(k, v)
       case None => spark.conf.unset(k)

@@ -231,7 +231,7 @@ final class CorpusPipeline private (
       IncrementalDedupQueries.signatures(batch))
     IncrementalDedupQueries.updateIndex(spark, sigs, indexPath)
     val pairs = IncrementalDedupQueries.pairsForBatchSigs(
-        spark.read.parquet(indexPath), sigs)
+        graft.ParquetFooters.read(spark, indexPath), sigs)
       .select(col("doc_a"), col("doc_b"))
     dedupNear(pairs)
   }

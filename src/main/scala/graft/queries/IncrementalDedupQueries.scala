@@ -332,7 +332,7 @@ object IncrementalDedupQueries {
     updateIndex(spark, signatures(docs.filter(!batchPred)), lake)
     val batchSigs = signatures(docs.filter(batchPred)).transform(graft.CacheScope.persist)
     updateIndex(spark, batchSigs, lake)
-    val index = spark.read.parquet(lake)
+    val index = graft.ParquetFooters.read(spark, lake)
     // materialize before deleting the scratch lake — the returned frame
     // must not dangle on a temp directory this query created
     val out = pairsForBatchSigs(index, batchSigs)

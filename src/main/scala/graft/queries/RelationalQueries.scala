@@ -798,7 +798,7 @@ object RelationalQueries {
       lake, keys = Seq("order_month", "o_orderpriority", "batch_id"))
 
   private[queries] def rollupRead(spark: SparkSession, lake: String): DataFrame =
-    spark.read.parquet(lake)
+    graft.ParquetFooters.read(spark, lake)
       .groupBy(col("order_month"), col("o_orderpriority"))
       .agg(sum(col("n_orders")).cast("long").as("n_orders"))
       .orderBy(col("order_month"), col("o_orderpriority"))

@@ -52,13 +52,14 @@ object StreamingQueries {
     * surfaces as a long under the scoped legacy conf and passes through;
     * micros-timestamp corpora (the regenerated driver testdata) convert
     * via unix_micros, value-preserving in the UTC session. The stream
-    * schema comes from ONE batch footer probe, so this adapts without
-    * a hand-maintained StructType going stale against the data.
+    * schema comes from ONE footer probe on the driver (no Spark job), so
+    * this adapts without a hand-maintained StructType going stale
+    * against the data.
     */
   private def eventsRawStream(
       spark: SparkSession, dir: String, glob: String = "events.parquet",
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val batch = spark.read.option("pathGlobFilter", glob).parquet(dir)
+    val batch = graft.ParquetFooters.read(spark, dir, glob = Some(glob))
     val reader = spark.readStream.schema(batch.schema)
       .option("pathGlobFilter", glob)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
@@ -272,7 +273,7 @@ object StreamingQueries {
     q.awaitTermination()
     // materialize before deleting the scratch lake — the returned frame
     // must not dangle on a temp directory this query created
-    val out = spark.read.parquet(lake).orderBy(col("user_id")).localCheckpoint(true)
+    val out = graft.ParquetFooters.read(spark, lake).orderBy(col("user_id")).localCheckpoint(true)
     graft.etl.LakeFs.deleteRecursively(spark, new org.apache.hadoop.fs.Path(lake).getParent)
     out
   }

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Bridge to `private[sql]` Column↔Expression conversion (Spark 4 moved
   * Column to a plan-agnostic node type; the classic converters are
@@ -33,4 +34,12 @@ object Shims {
       spark: org.apache.spark.sql.SparkSession): Seq[org.apache.spark.sql.execution.SparkStrategy] =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.planner.strategies
+
+  /** The session's typed SQL conf (`sessionState` is private[sql]). */
+  def sqlConf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
+  /** `StructType.merge` (private[sql]): the union a `mergeSchema` read builds. */
+  def merge(a: StructType, b: StructType, caseSensitive: Boolean): StructType =
+    a.merge(b, caseSensitive)
 }

@@ -39,7 +39,7 @@ object Sessionize {
   // a raw long under the legacy conf and passes through; micros
   // timestamps normalize to epoch nanos (value-preserving, UTC session)
   private def rawStream(spark: SparkSession, dir: String) = {
-    val batch = spark.read.parquet(dir)
+    val batch = graft.ParquetFooters.read(spark, dir)
     val src = spark.readStream
       .schema(batch.schema)
       .option("maxFilesPerTrigger", "1")

@@ -66,7 +66,7 @@ class BenchSpec extends SparkSpec {
     assert(layers.map(r => (r.get("query").asText, r.get("sample").asInt)).sorted ==
       (for (s <- 1 to samples; n <- names) yield (n, s)).sorted)
     layers.foreach { r =>
-      assert(keys(r) == Seq("query", "sample", "build_s", "exchanges", "rows", "ok",
+      assert(keys(r) == Seq("query", "sample", "build_s", "exchanges", "rows", "digest", "ok",
         "wall_s", "build_jobs", "stages", "tasks", "executor_run_s", "executor_cpu_s",
         "shuffle_read_bytes", "shuffle_read_records", "shuffle_write_bytes",
         "shuffle_write_records", "input_bytes", "build_input_bytes", "spill_bytes",
@@ -80,10 +80,10 @@ class BenchSpec extends SparkSpec {
 
   test("build_jobs counts the eager build; rows and exchanges match the fold frame") {
     def rowsOf(q: String) = layers.filter(_.get("query").asText == q)
-    // a lazy build still starts Spark's parquet schema-inference job per
-    // table it reads (orders, customer) — and reads no rows
+    // a lazy build starts no job: the tables' schemas come from their
+    // parquet footers on the driver
     rowsOf("qd_join_filter_count").foreach { r =>
-      assert(r.get("build_jobs").asInt == 2)
+      assert(r.get("build_jobs").asInt == 0)
       assert(r.get("build_input_bytes").asLong == 0)
     }
     // the CC fixpoint runs its rounds eagerly inside the build
@@ -92,12 +92,13 @@ class BenchSpec extends SparkSpec {
     names.foreach { q =>
       val folded = Fold.frame(SparkEntry.queries(q)(spark, sf))
       val exchanges = harnessExchanges(folded.queryExecution.executedPlan)
-      val n = folded.collect()(0).getLong(0)
+      val row = folded.collect()(0)
       spark.catalog.clearCache()
       CacheScope.drain(spark)
       rowsOf(q).foreach { r =>
         assert(r.get("exchanges").asInt == exchanges, q)
-        assert(r.get("rows").asLong == n, q)
+        assert(r.get("rows").asLong == row.getLong(0), q)
+        assert(r.get("digest").asLong == row.getLong(1), q)
       }
     }
   }

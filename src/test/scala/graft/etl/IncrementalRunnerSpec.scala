@@ -6,11 +6,10 @@ import java.time.LocalDate
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.VcHttpStub
 
 /** The end-to-end daily job (IncrementalRunner = the reference's two
   * staggered Lambda entry points over the lake sinks), driven through
@@ -50,20 +49,23 @@ class IncrementalRunnerSpec extends SparkSpec {
     dir.toString
   }
 
+  /** One VisualCrossing day-row. */
+  private def vcDay(d: String): ObjectNode = {
+    val n = mapper.createObjectNode()
+    n.put("datetime", d)
+    n.put("tempmax", 60.0); n.put("tempmin", 40.0); n.put("temp", 50.0)
+    n.put("precip", if (d.endsWith("2")) 0.4 else 0.0)
+    n.put("humidity", 70.0); n.put("windspeed", 8.0)
+    n.put("conditions", "Clear")
+    n
+  }
+
   /** VisualCrossing fixture: one day-row per date. */
   private def vcFixture(days: Seq[String]): String = {
     val dir = Files.createTempDirectory("runner-vc")
     val root = mapper.createObjectNode()
     val arr = root.putArray("days")
-    days.foreach { d =>
-      val n = mapper.createObjectNode()
-      n.put("datetime", d)
-      n.put("tempmax", 60.0); n.put("tempmin", 40.0); n.put("temp", 50.0)
-      n.put("precip", if (d.endsWith("2")) 0.4 else 0.0)
-      n.put("humidity", 70.0); n.put("windspeed", 8.0)
-      n.put("conditions", "Clear")
-      arr.add(n)
-    }
+    days.foreach(d => arr.add(vcDay(d)))
     Files.write(dir.resolve("days.json"),
       mapper.writeValueAsString(root).getBytes(StandardCharsets.UTF_8))
     dir.toString
@@ -163,41 +165,39 @@ class IncrementalRunnerSpec extends SparkSpec {
       IncrementalRunner.weatherPath(base), "weather_date").contains(ld("2024-09-04")))
   }
 
-  /** Spark jobs `body` runs on this thread (its job group), counted by a
-    * listener once the bus has delivered every event.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = "graft-job-budget"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p => p.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job budget")
-    try {
-      val out = body
-      ListenerBusDrain(sc)
-      (out, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("daily job budget: one new day onto a warm lake") {
     val (base, fw, fv) = newJob()
     runDay(base, fw, fv, "2024-09-03") // warm: 09-01 and 09-02 land
     val (r, jobs) = jobsOf(runDay(base, fw, fv, "2024-09-04"))
     assert(r.weather.loaded == Seq(ld("2024-09-03")))
     assert(r.violations.loaded == Seq(ld("2024-09-03")))
-    // 11 jobs under SparkSpec's config (local[4], 4 shuffle partitions,
-    // AQE on), measured when the sources began reporting statistics and
-    // the lake probes stopped inferring schemas; 18 before that. A higher
-    // count means a sink call left its one-action path or a lake read
-    // started inferring its schema again.
-    assert(jobs <= 11, s"jobs for one daily run: $jobs")
+    // 6 jobs under SparkSpec's config (local[4], 4 shuffle partitions,
+    // AQE on): the weather pull (1), its upsert (2) and the violations
+    // insert-ignore (3). Both watermarks come from parquet footers and the
+    // upsert's mergeSchema read declares the footers' union, so neither
+    // starts a job; 11 before that, 18 before the sources reported
+    // statistics. A higher count means a sink call left its one-action
+    // path or a lake read started inferring again.
+    assert(jobs <= 6, s"jobs for one daily run: $jobs")
+  }
+
+  test("the weather leg pulls VisualCrossing once per day, over live HTTP") {
+    val base = Files.createTempDirectory("runner-lake").resolve("lake").toString
+    val fv = IncrementalRunner.fetchViolationsViaSource(spark,
+      Map("mode" -> "fixture", "path" -> arcgisFixture(fixtureDays, 3))) _
+    // the API knows 09-01 and 09-02 only: 09-03 lands as the sentinel
+    val stub = new VcHttpStub(fixtureDays.take(2).map(vcDay))
+    try {
+      val fw = IncrementalRunner.fetchWeatherViaSource(spark, stub.options) _
+      val r = runDay(base, fw, fv, "2024-09-04")
+      assert(r.weather.loaded == fixtureDays.map(ld))
+      // one request per day: the emptiness check and the write share it
+      assert(stub.requests.get == 3, s"requests: ${stub.requests.get}")
+      val w = spark.read.parquet(IncrementalRunner.weatherPath(base))
+        .collect().map(r => r.getAs[java.sql.Date]("weather_date").toString ->
+          r.getAs[String]("conditions")).toMap
+      assert(w == Map("2024-09-01" -> "Clear", "2024-09-02" -> "Clear",
+        "2024-09-03" -> "missing_from_api"))
+    } finally stub.close()
   }
 }
