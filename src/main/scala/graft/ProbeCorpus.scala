@@ -39,7 +39,6 @@ object ProbeCorpus {
     * makes the invariant structural, so a future build change or parquet
     * writer upgrade can't silently reintroduce the bug. 16, not 64: the
     * guard targets "effectively serial", not the exact write fan-out.
-    * Deliberate layout A/Bs can lower it via SPARK_GRAFT_MIN_CORPUS_FILES.
     */
   private[graft] val MinScanFiles = 16
 
@@ -50,9 +49,7 @@ object ProbeCorpus {
   /** Fail fast if any replicated probe table present under `corpus` spans
     * fewer than `minFiles` parquet part-files (see [[MinScanFiles]]).
     */
-  def assertScanParallel(corpus: String,
-      minFiles: Int = sys.env.get("SPARK_GRAFT_MIN_CORPUS_FILES")
-        .map(_.toInt).getOrElse(MinScanFiles)): Unit =
+  def assertScanParallel(corpus: String, minFiles: Int = MinScanFiles): Unit =
     ReplicatedTables.foreach { t =>
       val dir = new java.io.File(s"$corpus/$t.parquet")
       if (dir.isDirectory) {
@@ -61,8 +58,7 @@ object ProbeCorpus {
           s"probe corpus $corpus/$t.parquet spans only $n part-file(s) " +
             s"(need >= $minFiles): its scan stages would run effectively " +
             "serial and every timing receipt would measure one core " +
-            "(round-12 instrument bug). Rebuild via ProbeCorpus, or set " +
-            "SPARK_GRAFT_MIN_CORPUS_FILES for a deliberate layout A/B.")
+            "(round-12 instrument bug). Rebuild via ProbeCorpus.")
       }
     }
 

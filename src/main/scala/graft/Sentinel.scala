@@ -113,7 +113,7 @@ object Sentinel {
     "perplexity" -> timed((s, d, _) =>
       queries.CurationQueries.qPerplexity(s, d).count()),
     "pipeline_composed" -> timed((s, d, b) =>
-      Fold.digest(PipelineProbe.composedChain(s, d, b))._1),
+      Fold.digest(pipeline.CorpusPipeline.composedChain(s, d, b))._1),
     // steady-state daily dedup: standing index build is SETUP (untimed);
     // the gate watches one day's batch (signatures → upsert → pairs)
     "incremental_daily" -> ((s, d, b) => {
@@ -209,7 +209,7 @@ object Sentinel {
       sys.error(s"unknown tier '$tierName' (have: ${Tiers.keys.mkString(", ")})"))
     val corpus = pos.headOption.getOrElse(tier.defaultCorpus)
     val baseDir = pos.lift(1).getOrElse("/root/testdata/sf0.1")
-    val sentinelsPath = sys.env.getOrElse("SPARK_GRAFT_SENTINELS", "sentinels.json")
+    val sentinelsPath = "sentinels.json"
     val mapper = new ObjectMapper()
 
     // host health BEFORE the Spark JVM warms anything, like Bench's pre:

@@ -84,7 +84,7 @@ object Tables {
     if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target) else df
   }
 
-  /** The local session Bench, Verify, the probes and the sentinel all
+  /** The local session Bench, Verify, ProbeCorpus and the Sentinel all
     * run on: shuffle partitions = cores, AQE with a 64 KB coalescing
     * floor, UTC.
     *
@@ -96,8 +96,8 @@ object Tables {
     * core, which models nothing about a real deployment where a 5M-doc
     * table spans many splits. 1 MB splits + zero open cost give one task
     * per ProbeCorpus output file. Non-probe entry points (IncrementalRunner,
-    * PipelineDemo, ExplainPlans) keep Spark's defaults — on real-sized
-    * data the 1 MB override would schedule one task per megabyte.
+    * Verify, Bench on the flat testdata) keep Spark's defaults — on
+    * real-sized data the 1 MB override would schedule one task per megabyte.
     */
   def localSession(cores: Int = 32, probeSplits: Boolean = false): SparkSession = {
     val b = SparkSession.builder()

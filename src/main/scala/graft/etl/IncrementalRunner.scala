@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's two scheduled Lambda entry points as ONE runnable
-  * daily job over the lake sinks — the end-to-end story PipelineDemo
-  * starts, completed:
+  * daily job over the lake sinks (perfbench's `etl_daily` workload runs
+  * it end to end and checks the Qa–Qh digests of the lake it writes):
   *
   *  - weather daily  (ref: etl/daily_load/weather_etl_daily.py:217,
   *    DEPLOYMENT.md §6.1 cron 06:00) — VisualCrossing single-day pulls,

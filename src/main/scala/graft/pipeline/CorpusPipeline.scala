@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.ConnectedComponents
@@ -414,6 +414,47 @@ final class CorpusPipeline private (
 object CorpusPipeline {
   def apply(docs: DataFrame, idCol: String = "doc_id"): CorpusPipeline =
     new CorpusPipeline(docs, idCol)
+
+  /** The full composed chain at the terminal chunks grain (the
+    * Sentinel's `pipeline_composed` op): dedupExact → removeRepeatedSpans
+    * → dedupNearSimhash → decontaminate → redactPii → filters → sample →
+    * split → chunks as ONE plan, with an `observeCount` row counter
+    * `s0_input` … `s8_sampled_split` after each stage riding the
+    * terminal action. `dir` is the corpus; the benchmark is the every
+    * 97th document of `baseDir`, CONSTANT as the corpus grows (an eval
+    * suite does not grow with the corpus; replicating it alongside is
+    * the SURVEY §10.7 artifact, not the production shape).
+    */
+  def composedChain(spark: SparkSession, dir: String, baseDir: String): DataFrame = {
+    val benchmark = graft.Tables.documents(spark, baseDir)
+      .filter(col("doc_id") % 97 === 0)
+    // the near-dup detector runs INSIDE the chain on the exact-deduped
+    // representatives (dedupNearSimhash — the scale-correct composition:
+    // raw-corpus pair output grows C(k,2) per duplicate group, ~3×10⁹
+    // rows at 1000×, while the representative graph is scale-invariant);
+    // its component resolution is the pipeline's one eager step
+    CorpusPipeline(graft.Tables.documents(spark, dir))
+      .observeCount("s0_input")
+      .dedupExact()
+      .observeCount("s1_dedup_exact")
+      .removeRepeatedSpans()
+      .observeCount("s2_span_clean")
+      .dedupNearSimhash()
+      .observeCount("s3_dedup_near")
+      .decontaminate(benchmark)
+      .observeCount("s4_decontaminate")
+      .redactPii()
+      .filterRepetition()
+      .observeCount("s5_filter_repetition")
+      .filterBoilerplate()
+      .observeCount("s6_filter_boilerplate")
+      .filterQualityEnsemble()
+      .observeCount("s7_filter_quality")
+      .sampleStratified(Map("en" -> 0.5), default = 0.2)
+      .withSplit(trainPct = 90)
+      .observeCount("s8_sampled_split")
+      .chunks()
+  }
 
   /** How [[CorpusPipeline.decontaminate]] joins corpus to benchmark. */
   sealed trait DecontaminateStrategy

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -47,6 +48,30 @@ object StreamingQueries {
       // queries at these state sizes (OPTIMIZATION_r16.md)
       "spark.sql.legacy.parquet.nanosAsLong" -> "true")(f)
 
+  /** Where the table `glob` names under `dir` is read from: the path and
+    * the reader options that narrow it. A directory table (a Spark-written
+    * corpus: `<dir>/<table>.parquet/part-*`) is read as its own directory;
+    * otherwise `dir` is read through `pathGlobFilter` (the flat
+    * one-file-per-table layout, or a caller's glob over split files). The
+    * footer schema probe, `readStream` and the static reads all use it, so
+    * they address the same files. A glob that matches no data file fails
+    * here: the stream would otherwise read nothing and report an empty
+    * answer as a result.
+    */
+  private def streamTable(
+      spark: SparkSession, dir: String, glob: String): (String, Map[String, String]) = {
+    val pattern = new Path(dir, glob)
+    val fs = pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(pattern)).map(_.toSeq).getOrElse(Nil) match {
+      case Seq(table) if table.isDirectory &&
+          graft.etl.LakeFs.nonEmptyDataDir(spark, table.getPath.toString) =>
+        (table.getPath.toString, Map.empty)
+      case hits if hits.exists(_.isFile) => (dir, Map("pathGlobFilter" -> glob))
+      case _ => throw new IllegalArgumentException(
+        s"no parquet data file under $dir matches '$glob'")
+    }
+  }
+
   /** Events as a STREAM with `ts` normalized to raw epoch NANOS (long)
     * whatever the file's physical type — TIMESTAMP(NANOS) testdata
     * surfaces as a long under the scoped legacy conf and passes through;
@@ -59,11 +84,11 @@ object StreamingQueries {
   private def eventsRawStream(
       spark: SparkSession, dir: String, glob: String = "events.parquet",
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val batch = graft.ParquetFooters.read(spark, dir, glob = Some(glob))
-    val reader = spark.readStream.schema(batch.schema)
-      .option("pathGlobFilter", glob)
+    val (path, opts) = streamTable(spark, dir, glob)
+    val batch = graft.ParquetFooters.read(spark, path, glob = opts.get("pathGlobFilter"))
+    val reader = spark.readStream.schema(batch.schema).options(opts)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    val src = reader.parquet(dir)
+    val src = reader.parquet(path)
     batch.schema("ts").dataType match {
       case LongType => src
       case _ => src.withColumn("ts",
@@ -112,8 +137,6 @@ object StreamingQueries {
 
   def qStreamHourly(spark: SparkSession, dir: String): DataFrame =
       withStreamConfs(spark) {
-    // the file source requires a directory; pathGlobFilter narrows the
-    // listing to the events table
     val src = eventsRawStream(spark, dir)
       .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     val agg = src
@@ -366,23 +389,29 @@ object StreamingQueries {
     res
   }
 
-  /** The documents file-stream source (shared by the memory-sink query
-    * and the checkpointed-restart spec).
+  private val DocsSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType),
+    StructField("lang", StringType),
+    StructField("source", StringType),
+    StructField("n_chars", LongType)))
+
+  /** The documents file-stream source (shared by the document streaming
+    * queries and the checkpointed-restart spec).
     */
   private[graft] def docsStream(
       spark: SparkSession, dir: String, glob: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", glob)
+    val (path, opts) = streamTable(spark, dir, glob)
+    val reader = spark.readStream.schema(DocsSchema).options(opts)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(dir)
+    reader.parquet(path)
+  }
+
+  /** The same documents as one batch read (a query's static side). */
+  private def docsBatch(spark: SparkSession, dir: String, glob: String): DataFrame = {
+    val (path, opts) = streamTable(spark, dir, glob)
+    spark.read.schema(DocsSchema).options(opts).parquet(path)
   }
 
   /** Core of the streaming near-dedup: fingerprint in-flight, key by LSH
@@ -458,27 +487,15 @@ object StreamingQueries {
       spark: SparkSession, dir: String, glob: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame =
       withStreamConfs(spark) {
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
     def shingled(d: DataFrame): DataFrame = d
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("tk"))
       .filter(size(col("tk")) >= 3)
       .select(col("doc_id"), explode(graft.functions.ShinglesExpr.shingles(col("tk")))
         .as("shingle"))
     // static side: the FIXED benchmark set, batch-read once at query start
-    val benchSet = shingled(
-        spark.read.schema(docsSchema).option("pathGlobFilter", glob)
-          .parquet(dir).filter(col("doc_id") % 97 === 0))
+    val benchSet = shingled(docsBatch(spark, dir, glob).filter(col("doc_id") % 97 === 0))
       .select(col("shingle")).distinct()
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", glob)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val src = reader.parquet(dir)
+    val src = docsStream(spark, dir, glob, maxFilesPerTrigger)
     val hits = shingled(src.filter(col("doc_id") % 97 =!= 0))
       .join(broadcast(benchSet), "shingle")
       .groupBy(col("doc_id"))
@@ -532,20 +549,10 @@ object StreamingQueries {
       spark: SparkSession, dir: String, glob: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame =
       withStreamConfs(spark) {
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
     def toks(d: DataFrame): DataFrame = d
       .select(explode(split(trim(col("text")), "\\s+")).as("tok"))
       .filter(col("tok") =!= "")
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", glob)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val cells = toks(reader.parquet(dir))
+    val cells = toks(docsStream(spark, dir, glob, maxFilesPerTrigger))
       .withColumn("h", md5(concat(lit("cm:"), col("tok"))))
       .select(col("h"), explode(expr("sequence(0, 3)")).as("r"))
       .withColumn("bucket", expr(
@@ -561,8 +568,7 @@ object StreamingQueries {
       .start()
     q.awaitTermination()
     val sketch = spark.table(name)
-    val truth = toks(
-        spark.read.schema(docsSchema).option("pathGlobFilter", glob).parquet(dir))
+    val truth = toks(docsBatch(spark, dir, glob))
       .groupBy(col("tok")).agg(count(lit(1)).as("true_cnt"))
     truth
       .filter(col("tok").isin("spark", "window", "merge", "slow", "customer",

@@ -230,23 +230,20 @@ class CorpusPipelineSpec extends SparkSpec {
   }
 
   test("the composed chain runs as one plan with monotone row accounting") {
-    val pairs = SketchDedupQueries.qDedupSimhash(spark, sf)
-      .select(col("doc_a"), col("doc_b"))
-    val benchmark = docs.filter(col("doc_id") % 97 === 0)
-    val p0 = docs.count()
-    val p1 = CorpusPipeline(docs).dedupExact().df.count()
-    val chain = CorpusPipeline(docs)
-      .dedupExact()
-      .dedupNear(pairs)
-      .decontaminate(benchmark)
-      .sampleStratified(Map("en" -> 0.5), default = 0.2)
-      .withSplit(trainPct = 90)
-      .df
-    val end = chain.count()
-    assert(p1 <= p0 && end <= p1 && end > 0)
-    // split column present and binary
-    assert(chain.select(col("split")).distinct().collect()
-      .map(_.getString(0)).toSet.subsetOf(Set("train", "test")))
+    // sf0.001 is both the corpus and the benchmark dir
+    val folded = graft.Fold.frame(CorpusPipeline.composedChain(spark, sf, sf))
+    val chunks = folded.collect()(0).getLong(0)
+    // every stage counter rides THIS fold: a counter missing here would
+    // mean its stage ran in a separate execution
+    val observed = folded.queryExecution.observedMetrics
+    val stages = Seq("s0_input", "s1_dedup_exact", "s2_span_clean", "s3_dedup_near",
+      "s4_decontaminate", "s5_filter_repetition", "s6_filter_boilerplate",
+      "s7_filter_quality", "s8_sampled_split")
+    assert(observed.keySet === stages.toSet)
+    val rows = stages.map(observed(_).getLong(0))
+    assert(rows.head === docs.count())
+    assert(rows.zip(rows.tail).forall { case (a, b) => b <= a }, s"row counts $rows")
+    assert(rows.last > 0 && chunks > 0)
   }
 
   test("dedupExact null ids: non-null canonical wins; all-null groups keep a real row") {

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
 
 import graft.SparkSpec
 
@@ -72,6 +72,105 @@ class WatermarkLateDataSpec extends SparkSpec {
       // final watermark 11:15 finalizes hours 0..10; 11 and 12 stay pending
       assert(got.keySet === (0 to 10).toSet, s"emitted windows: ${got.keySet}")
       (0 to 10).filter(_ != 3).foreach(h => assert(got(h) === 1L))
+    } finally {
+      graft.etl.LakeFs.deleteRecursively(spark,
+        new org.apache.hadoop.fs.Path(dir))
+    }
+  }
+
+  /** Bounded state, the property that lets the daily load run as a
+    * stream at any volume: state tracks the watermark slack (windows
+    * still open) and the key cardinality, never the cumulative input.
+    * The 30-day sf0.01 events are sliced into one file per day with
+    * ascending mtimes and drained with `maxFilesPerTrigger=1`, so each
+    * day is its own micro-batch with real state carryover; the per-batch
+    * `StreamingQueryProgress` state rows are asserted for three operators.
+    */
+  test("streaming state plateaus at the watermark slack and the key cardinality") {
+    val dir = Files.createTempDirectory("wm-state").toString
+    val wmHours = 2
+    try {
+      val events = graft.Tables.events(spark, "/root/testdata/sf0.01")
+      events.withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
+        .repartition(col("day"))
+        .write.partitionBy("day").parquet(s"$dir/staged")
+      val days = new java.io.File(s"$dir/staged").listFiles()
+        .filter(_.getName.startsWith("day=")).sortBy(_.getName)
+      days.zipWithIndex.foreach { case (d, i) =>
+        val part = d.listFiles().filter(_.getName.endsWith(".parquet")).head
+        val target = Paths.get(dir, f"$i%02d.parquet")
+        Files.move(part.toPath, target)
+        Files.setLastModifiedTime(target, FileTime.fromMillis(1000000L + i * 60000L))
+      }
+      val perDay = events.groupBy(to_date(col("ts"))).count().collect().map(_.getLong(1))
+      val nTypes = events.select("event_type").distinct().count()
+      val nUsers = events.select("user_id").distinct().count()
+      assert(days.length === 30 && perDay.length === 30)
+
+      def src = spark.readStream.schema(events.schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(dir)
+      /** Drains `df` and returns, per batch that read input, the state
+        * rows of the operator `op`, with the last batch's state rows.
+        */
+      def stateRows(df: org.apache.spark.sql.DataFrame, mode: String, op: String)
+          : (Seq[Long], Long) = {
+        val name = "wm_state_" + java.util.UUID.randomUUID.toString.replace("-", "")
+        val q = df.writeStream.outputMode(mode).format("memory").queryName(name)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        spark.catalog.dropTempView(name)
+        def rows(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Long =
+          p.stateOperators.find(_.operatorName == op)
+            .getOrElse(fail(s"no $op operator in ${p.stateOperators.map(_.operatorName).toSeq}"))
+            .numRowsTotal
+        val data = q.recentProgress.filter(_.numInputRows > 0)
+        assert(data.length === 30, s"$op: one micro-batch per day")
+        (data.map(rows).toSeq, rows(q.recentProgress.last))
+      }
+
+      // windowed agg, append mode: open windows are the state. A batch
+      // holds one day (24 hourly windows) plus the slack still open from
+      // the day before, per event type; the input grid is ~25x larger
+      val (windowed, _) = stateRows(
+        src.withWatermark("ts", s"$wmHours hours")
+          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("n_events")),
+        "append", "stateStoreSave")
+      val gridBound = (24 + wmHours + 1) * nTypes
+      val allWindows = events.select(date_trunc("hour", col("ts")), col("event_type"))
+        .distinct().count()
+      assert(windowed.max <= gridBound, s"windowed state $windowed over $gridBound")
+      assert(allWindows > 10 * gridBound)
+
+      // dedup within the watermark: one state row per event id still
+      // inside the slack, so never more than two days of input
+      val (dedup, _) = stateRows(
+        src.withWatermark("ts", s"$wmHours hours")
+          .dropDuplicatesWithinWatermark("event_id")
+          .groupBy(window(col("ts"), "24 hours"))
+          .agg(count(lit(1)).as("n_unique")),
+        "append", "dedupeWithinWatermark")
+      assert(dedup.max <= 2 * perDay.max, s"dedup state $dedup over two days of input")
+      assert(dedup.max < perDay.sum)
+
+      // keyed running profile: one state row per user, however many rows
+      // flow through
+      import spark.implicits._
+      val (keyed, keyedLast) = stateRows(
+        src.select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
+          .as[(Long, Long)]
+          .groupByKey(_._1)
+          .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
+            (user: Long, rows: Iterator[(Long, Long)], state: GroupState[Long]) =>
+              val n = state.getOption.getOrElse(0L) + rows.size
+              state.update(n)
+              (user, n)
+          }
+          .toDF("user_id", "n_events"),
+        "update", "flatMapGroupsWithState")
+      assert(keyedLast === nUsers && keyed.max <= nUsers, s"keyed state $keyed vs $nUsers users")
     } finally {
       graft.etl.LakeFs.deleteRecursively(spark,
         new org.apache.hadoop.fs.Path(dir))
