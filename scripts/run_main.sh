@@ -18,5 +18,7 @@ exec java $OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Duser.timezone=UTC \
+  -Dsun.stdout.encoding=UTF-8 \
+  -Dsun.stderr.encoding=UTF-8 \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "$CP" "$CLS" "$@"

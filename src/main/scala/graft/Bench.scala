@@ -7,8 +7,10 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -31,7 +33,9 @@ import org.apache.spark.sql.execution.exchange.Exchange
   *
   * Per-query cost breakdown: after every sample one `[layers] {json}` row
   * goes to stderr ([[Layers]]), so a reader can tell scan-bound from
-  * shuffle-bound from dispatch-bound before touching a plan. Pointed at a
+  * shuffle-bound from dispatch-bound before touching a plan, or from
+  * compile-bound (`codegen_compiles`, `codegen_s`: the generated classes
+  * the sample compiled and the janino seconds they took). Pointed at a
   * [[ProbeCorpus]] (`SPARK_GRAFT_SF_DIR=/tmp/docs10x`) the same run is the
   * scale check ([[probeSplits]]).
   */
@@ -75,10 +79,12 @@ object Bench {
 
   /** Bench the queries named in `only` (all when empty) on `spark`:
     * `samples` full passes with one `[layers]` row per sample on stderr,
-    * then the two stdout lines. `box` runs after the passes and yields the
-    * host-health JSON object both lines carry.
+    * then the two stdout lines, with per-query ratios against the anchors
+    * file `anchorsPath` when it was taken at `sfDir`. `box` runs after the
+    * passes and yields the host-health JSON object both lines carry.
     */
-  def run(spark: SparkSession, sfDir: String, samples: Int, only: Set[String])
+  def run(spark: SparkSession, sfDir: String, samples: Int, only: Set[String],
+      anchorsPath: String = sys.env.getOrElse("SPARK_GRAFT_ANCHORS", "anchors.json"))
       (box: => String): Unit = {
     warmup(spark, sfDir)
     val sc = spark.sparkContext
@@ -101,6 +107,7 @@ object Bench {
     def sampleOnce(name: String, sample: Int,
         fn: (SparkSession, String) => DataFrame): Double = {
       val row = Json.createObjectNode().put("query", name).put("sample", sample)
+      val (compiles0, compileNs0) = codegen()
       val t0 = System.nanoTime()
       val ok =
         try {
@@ -120,7 +127,7 @@ object Bench {
           true
         }
         catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          Console.err.println(s"[bench] $name failed: ${e.getMessage}")
           false
         }
       val elapsed = (System.nanoTime() - t0) / 1e9 // before cache teardown
@@ -128,7 +135,10 @@ object Bench {
       CacheScope.drain(spark) // clearCache freed the data; drop the plan refs too
       // outside the timed region: wait until the sample's events landed
       ListenerBusDrain(sc)
-      layers.drainInto(row.put("ok", ok).put("wall_s", elapsed))
+      val (compiles1, compileNs1) = codegen()
+      layers.drainInto(row.put("ok", ok).put("wall_s", elapsed)
+        .put("codegen_compiles", compiles1 - compiles0)
+        .put("codegen_s", (compileNs1 - compileNs0) / 1e9))
       Console.err.println("[layers] " + Json.writeValueAsString(row))
       if (ok) elapsed else -1.0
     }
@@ -161,7 +171,6 @@ object Bench {
     // ratio so the round gate is computed by the instrument itself, not
     // re-derived from prose tables. Min-vs-min is the noise-robust
     // compare BASELINE.md prescribes for this intermittently-loaded box.
-    val anchorsPath = sys.env.getOrElse("SPARK_GRAFT_ANCHORS", "anchors.json")
     // (name, my_min, anchor_min) per anchored query, reused by the full
     // line AND the compact summary line below; None when no comparable
     // anchors exist
@@ -175,10 +184,19 @@ object Bench {
         // reporting cross-metric ratios (q_exact_substr would read ~29x).
         val anchorAction =
           if (root.has("action")) root.get("action").asText() else "count"
+        // Anchors taken at another scale factor are not comparable either:
+        // every sf0.01 query would read as a fraction (or, on a probe
+        // corpus, a multiple) of its sf0.1 anchor.
+        val anchorSf = if (root.has("sf")) root.get("sf").asText() else ""
         if (anchorAction != "fold") {
-          System.err.println(
+          Console.err.println(
             s"[bench] anchors file $anchorsPath has action=$anchorAction, " +
               "bench action=fold: ratios would be cross-metric, skipping")
+          None
+        } else if (!sameDir(anchorSf, sfDir)) {
+          Console.err.println(
+            s"[bench] anchors file $anchorsPath was taken at sf=$anchorSf, " +
+              s"bench sf=$sfDir: ratios would be cross-scale, skipping")
           None
         } else {
           val a = root.get("anchors")
@@ -188,7 +206,7 @@ object Bench {
           })
         }
       } catch { case e: Throwable =>
-        System.err.println(s"[bench] anchors unreadable: ${e.getMessage}")
+        Console.err.println(s"[bench] anchors unreadable: ${e.getMessage}")
         None
       }
     }
@@ -247,6 +265,17 @@ object Bench {
   }
 
   private val Json = new ObjectMapper()
+
+  private def sameDir(a: String, b: String): Boolean =
+    a.nonEmpty && new java.io.File(a).getCanonicalPath == new java.io.File(b).getCanonicalPath
+
+  /** JVM-wide (generated classes compiled, janino nanoseconds) so far. In
+    * local mode the driver and every executor thread share one codegen
+    * cache, and Bench runs one query at a time, so a sample's deltas are
+    * that query's compiles: a cache miss costs one compile.
+    */
+  private def codegen(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   /** Local property that tags a sample's fold jobs; a job started without
     * it ran inside the query's build: the eager work (the CC fixpoint, the

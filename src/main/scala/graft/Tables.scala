@@ -84,9 +84,74 @@ object Tables {
     if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target) else df
   }
 
-  /** The local session Bench, Verify, ProbeCorpus and the Sentinel all
-    * run on: shuffle partitions = cores, AQE with a 64 KB coalescing
-    * floor, UTC.
+  /** Generated classes the codegen cache holds: more than one full
+    * [[Bench]] pass over all 208 queries compiles, so no query's classes
+    * are evicted before it runs again. Measured at sf0.01 with no cap:
+    * pass 1 compiled 3301 entries (the driver thread and the executor
+    * compile under different class loaders, so most classes take two),
+    * the repeat pass 125 more: nothing was evicted, so each is code pass
+    * 1 never ran, such as the build side AQE picks for a self-join.
+    */
+  val CodegenCacheEntries = 4096
+
+  /** The settings every session of this program starts with, whatever
+    * its master and partition count: [[localSession]] and the test
+    * suite's shared session both apply them, so the tests run under the
+    * config the benchmarks time. The codegen cache is one static per
+    * JVM, sized by the session that compiles first, and the broadcast
+    * piece size is fixed when the SparkContext starts: a session built
+    * without these values would set them for every other session.
+    *
+    * - AQE on, with a 64 KB coalescing floor (optimization r15, guide
+    *   §2.2/§2.5): the default 1 MB floor sizes post-shuffle partitions by
+    *   BYTES, but several verify-stage operators (shingle-set
+    *   intersection, levenshtein, pair expansion) are CPU-dense per byte —
+    *   a 6 MB exchange was coalesced to 5 tasks of ~3 s each while the
+    *   other cores idled. 64 KB keeps small-byte compute-dense stages at
+    *   full parallelism; at production shuffle sizes (GBs) the advisory
+    *   size governs, so this is scale-neutral.
+    * - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]]:
+    *   Spark's default keeps 100 generated classes, keyed by (class
+    *   loader, source). The dedup trio alone needs about 250, so at 100
+    *   entries every `queries_dedup` operation compiled 41–83 classes
+    *   again (up to 1.3 s of janino per operation), and a warm-up was
+    *   evicted before the query it warmed ran again.
+    * - `spark.sql.artifact.isolation.enabled=false`: no caller adds
+    *   artifacts, so every session can share the one class loader. With
+    *   isolation on, each session's tasks compile under their own artifact
+    *   class loader, which is part of the cache key: a query warmed in a
+    *   `newSession()` compiled again in the caller's session (124 classes
+    *   in pass 1 of `queries_dedup` with the larger cache alone), and that
+    *   loader asked the driver over RPC for every name janino probed.
+    * - `spark.broadcast.blockSize=256k`: every broadcast (at least one per
+    *   stage, for the task binary) is cut into pieces of this size, and
+    *   the default 4 MB piece buffer is a humongous object on the 2 MB
+    *   regions of a 3 GB G1 heap. Once compiles stop making garbage, young
+    *   GCs come further apart and those buffers pile up between them:
+    *   without this line the two codegen settings raised `queries_dedup`
+    *   peak RSS 2342 → 2551 MB; with it the three together read 2378 →
+    *   2080 MB (`etl_daily` 2110 → 1798 MB; perfbench medians, 4 cores).
+    */
+  val FixedSettings: Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.broadcast.blockSize" -> "256k")
+
+  /** A builder with [[FixedSettings]] on `master`, with `partitions`
+    * shuffle partitions.
+    */
+  def sessionBuilder(master: String, partitions: Int): SparkSession.Builder =
+    FixedSettings.foldLeft(SparkSession.builder().master(master)) {
+      case (b, (k, v)) => b.config(k, v)
+    }.config("spark.sql.shuffle.partitions", partitions.toString)
+
+  /** The local session Bench, Verify, ProbeCorpus, the Sentinel,
+    * IncrementalRunner and the benchmark harness all run on: shuffle
+    * partitions = cores and [[FixedSettings]].
     *
     * `probeSplits = true` (ProbeCorpus dirs only) adds
     * scan-split overrides for the replicated probe corpora (round 12):
@@ -100,22 +165,7 @@ object Tables {
     * real-sized data the 1 MB override would schedule one task per megabyte.
     */
   def localSession(cores: Int = 32, probeSplits: Boolean = false): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor (optimization r15, guide §2.2/§2.5): the
-      // default 1 MB floor sizes post-shuffle partitions by BYTES, but
-      // several verify-stage operators (shingle-set intersection,
-      // levenshtein, pair expansion) are CPU-dense per byte —
-      // a 6 MB exchange was coalesced to 5 tasks of ~3 s each while the
-      // other cores idled. 64 KB keeps small-byte compute-dense stages
-      // at full parallelism; at production shuffle sizes (GBs) the floor
-      // is irrelevant (advisory size governs), so this is scale-neutral.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val b = sessionBuilder(s"local[$cores]", cores).appName("graft")
     val withSplits =
       if (probeSplits)
         b.config("spark.sql.files.maxPartitionBytes", (1 << 20).toString)

@@ -22,19 +22,27 @@ class BenchSpec extends SparkSpec {
   private val samples = 2
   private val json = new ObjectMapper()
 
-  /** One run's stdout lines and parsed `[layers]` rows. */
-  private lazy val (stdout, layers): (Seq[String], Seq[JsonNode]) = {
+  /** One run's stdout and stderr lines. */
+  private def bench(only: Seq[String], samples: Int, anchors: String)
+      : (Seq[String], Seq[String]) = {
     val out = new ByteArrayOutputStream()
     val err = new ByteArrayOutputStream()
     Console.withOut(out) {
       Console.withErr(err) {
-        Bench.run(spark, sf, samples, names.toSet)("""{"pre":null,"post":null}""")
+        Bench.run(spark, sf, samples, only.toSet, anchors)("""{"pre":null,"post":null}""")
       }
     }
-    val rows = err.toString("UTF-8").linesIterator.collect {
+    (out.toString("UTF-8").linesIterator.toSeq, err.toString("UTF-8").linesIterator.toSeq)
+  }
+
+  /** One run against the repo's anchors (taken at sf0.1): its stdout
+    * lines, stderr lines and parsed `[layers]` rows.
+    */
+  private lazy val (stdout, stderr, layers): (Seq[String], Seq[String], Seq[JsonNode]) = {
+    val (out, err) = bench(names, samples, "anchors.json")
+    (out, err, err.collect {
       case l if l.startsWith("[layers] ") => json.readTree(l.stripPrefix("[layers] "))
-    }.toSeq
-    (out.toString("UTF-8").linesIterator.toSeq, rows)
+    })
   }
 
   private def keys(n: JsonNode): Seq[String] = n.fieldNames().asScala.toSeq
@@ -51,15 +59,35 @@ class BenchSpec extends SparkSpec {
   test("stdout is exactly the metric line and the summary line, keys pinned") {
     assert(stdout.size == 2, stdout.mkString("\n"))
     val Seq(metric, summary) = stdout.map(json.readTree)
+    // the anchors were taken at sf0.1: no cross-scale ratios, one reason
+    assert(keys(metric) == Seq("metric", "value", "unit", "samples", "action", "sf",
+      "queries", "queries_min", "errors", "total_min", "box", "anchors_file"))
+    assert(metric.get("anchors_file").isNull)
+    assert(keys(summary) == Seq("bench_summary", "ratio_sum", "n_queries", "n_failed",
+      "total_min", "box", "samples", "action", "sf"))
+    assert(summary.get("ratio_sum").isNull)
+    assert(stderr.count(_.contains("ratios would be cross-scale, skipping")) == 1)
+    assert(keys(metric.get("queries")) == names.sorted)
+    assert(metric.get("errors").size == 0 && summary.get("n_failed").asInt == 0)
+    assert(metric.get("box").toString == """{"pre":null,"post":null}""")
+  }
+
+  test("anchors taken at the bench's sf dir give per-query ratios, keys pinned") {
+    val q = "qd_join_filter_count"
+    val anchors = Files.createTempFile("anchors", ".json")
+    Files.writeString(anchors,
+      s"""{"action":"fold","sf":"$sf/","anchors":{"$q":{"min":1000.0}}}""")
+    val (out, err) = bench(Seq(q), 1, anchors.toString)
+    assert(!err.exists(_.contains("skipping")), err.mkString("\n"))
+    val Seq(metric, summary) = out.map(json.readTree)
     assert(keys(metric) == Seq("metric", "value", "unit", "samples", "action", "sf",
       "queries", "queries_min", "errors", "total_min", "box", "anchors_file",
       "anchored_count", "ratios", "ratio_sum", "ratio_sum_large", "n_large"))
     assert(keys(summary) == Seq("bench_summary", "ratio_sum", "ratio_sum_large",
       "n_large", "max_ratio", "n_over_2x", "worst", "n_queries", "n_failed",
       "total_min", "box", "samples", "action", "sf"))
-    assert(keys(metric.get("queries")) == names.sorted)
-    assert(metric.get("errors").size == 0 && summary.get("n_failed").asInt == 0)
-    assert(metric.get("box").toString == """{"pre":null,"post":null}""")
+    assert(keys(metric.get("ratios")) == Seq(q))
+    assert(summary.get("n_over_2x").asInt == 0)
   }
 
   test("one [layers] row per query per sample, with the breakdown's keys") {
@@ -67,8 +95,8 @@ class BenchSpec extends SparkSpec {
       (for (s <- 1 to samples; n <- names) yield (n, s)).sorted)
     layers.foreach { r =>
       assert(keys(r) == Seq("query", "sample", "build_s", "exchanges", "rows", "digest", "ok",
-        "wall_s", "build_jobs", "stages", "tasks", "executor_run_s", "executor_cpu_s",
-        "shuffle_read_bytes", "shuffle_read_records", "shuffle_write_bytes",
+        "wall_s", "codegen_compiles", "codegen_s", "build_jobs", "stages", "tasks",
+        "executor_run_s", "executor_cpu_s", "shuffle_read_bytes", "shuffle_read_records", "shuffle_write_bytes",
         "shuffle_write_records", "input_bytes", "build_input_bytes", "spill_bytes",
         "max_task_s", "top_stages"))
       assert(r.get("ok").asBoolean)
@@ -76,6 +104,21 @@ class BenchSpec extends SparkSpec {
       assert(r.get("stages").asInt > 0 && r.get("tasks").asLong >= r.get("stages").asLong)
       assert(r.get("top_stages").size == math.min(3, r.get("stages").asInt))
     }
+  }
+
+  test("the second sample of a query compiles no generated class") {
+    // sample 1 may compile; sample 2 runs the same plans and finds every
+    // class in the codegen cache (CodegenCacheSpec pins the cache itself).
+    // q_dedup_components is left out: its banded self-join reads two
+    // identical shuffle stages and AQE broadcasts whichever finishes
+    // first, so a repeat can run a plan variant, with classes of its own,
+    // that sample 1 never ran.
+    val r = layers.find(r => r.get("query").asText == "qd_join_filter_count" &&
+      r.get("sample").asInt == 2).get
+    assert(r.get("codegen_compiles").asLong == 0)
+    assert(r.get("codegen_s").asDouble == 0.0)
+    assert(layers.forall(_.get("codegen_compiles").asLong >= 0))
+    assert(layers.exists(_.get("codegen_compiles").asLong > 0))
   }
 
   test("build_jobs counts the eager build; rows and exchanges match the fold frame") {

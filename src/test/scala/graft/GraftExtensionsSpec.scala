@@ -17,11 +17,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
+    val s = Tables.sessionBuilder("local[2]", partitions = 2)
       .appName("graft-ext-test")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     try {

@@ -38,13 +38,12 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** Four cores and four shuffle partitions, on the fixed settings every
+    * session of the program runs with ([[Tables.FixedSettings]]).
+    */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Tables.sessionBuilder("local[4]", partitions = 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
