@@ -1,7 +1,7 @@
 package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,70 +16,69 @@ import org.apache.spark.sql.functions._
   *  - insert-ignore (`INSERT IGNORE`): first-writer-wins — the daily
   *    violations path (ref: etl/daily_load/violation_etl_daily.py:281-311).
   *
-  * Scale design:
-  *  - insert-ignore never rewrites anything: one anti-join on the key
-  *    (reading only the key column of the lake) and an append of the
-  *    fresh rows. A re-run after a partial append self-heals — the
-  *    anti-join skips whatever landed.
-  *  - partitioned upsert merges and swaps ONLY the partitions the batch
-  *    touches: existing rows of affected partitions (partition-pruned
-  *    read) union the batch, keep-last per key, then a per-partition
-  *    directory swap. A daily increment touching one month never
-  *    rewrites history. By default the partition value must be stable
-  *    per key (true for violations: month is derived from the id's
-  *    date); `globalKeys = true` lifts that requirement by also merging
-  *    the partitions a batch key previously lived in.
-  *  - unpartitioned upsert rewrites the table with a crash-safe swap:
-  *    write tmp → rename current aside → rename tmp in → delete old.
-  *    No window where the table is deleted before its replacement exists.
-  *    Because that rewrite is O(history) per batch, it is size-guarded:
-  *    past `maxFullRewriteBytes` (default 4 GiB) it throws and demands
-  *    either `partitionBy` (partition-scoped merge — the production path
-  *    for large tables) or an explicit ceiling raise.
-  *  - batch-internal duplicates resolve before the merge (keep-last for
-  *    upsert / keep-first for insert-ignore by a stable tiebreak), making
-  *    both ops idempotent: same batch twice ≡ once (DEPLOYMENT.md:244-249).
+  * Batch-internal duplicates resolve first (upsert keeps the last row per
+  * key by `tiebreak`, insert-ignore the first), so both ops are
+  * idempotent: same batch twice ≡ once (DEPLOYMENT.md:244-249).
   *
-  * Execution-consistency invariant: every path evaluates the batch plan
+  * Routes. "Bulk" means the frame's PLAN STATISTICS (no job) reach
+  * [[DedupPrecheckMinBytes]], 256 MiB; both DSv2 sources report
+  * statistics, so a daily pull plans at its real size, and a scan that
+  * reports none plans at Spark's unknown-size default and routes bulk.
+  * Upsert gates on the merged frame (lake ∪ batch), insert-ignore on the
+  * batch.
+  * {{{
+  * route                 condition              actions                                persist
+  * small upsert          whole table, !bulk     dedup window rides the one tmp write,  none
+  *                       (or no lake yet)       then swap the table dir
+  * bulk first write      no lake, bulk          map-only tmp write, key check on the   none
+  *  (both ops)                                  WRITTEN bytes, rewrite only if dirty,
+  *                                              swap the table dir in
+  * bulk upsert merge     whole table, lake,     keys-only pre-check, window only if    the batch
+  *                       bulk                   dirty, tmp write, swap the table dir
+  * partitioned upsert    partitionBy, lake      probe the batch's partitions, read     the batch
+  *                                              just those, window (pre-checked when
+  *                                              bulk), tmp write, swap the leaf dirs
+  * small insert-ignore   !bulk                  window, anti-join on the lake's keys,  none
+  *                                              append
+  * bulk insert-ignore    lake, bulk             pre-check, window only if dirty,       the batch
+  *  merge                                       anti-join, append
+  * }}}
+  *
+  * Execution-consistency invariant: every route evaluates the batch plan
   * EXACTLY ONCE, so the key-uniqueness guarantee holds even for a
   * non-deterministic source (an HTTP pull that could return different
-  * rows on re-execution). Small batches run a single action (the dedup
-  * window rides the write); merge-path big batches persist across the
-  * dup pre-check and the write; and big FIRST writes (bulk loads too
-  * large to persist without re-creating the disk blowout the pre-check
-  * exists to avoid) use write-then-verify — the batch is written once,
-  * map-only, and the duplicate check runs against the WRITTEN parquet,
-  * so the verdict is about the bytes that actually landed, never about
-  * a different execution of the plan. Only when duplicates actually
-  * landed does a keep-last/keep-first rewrite (reading the written tmp,
-  * not the source) swap in. SinksExecOnceSpec pins the once-only
-  * execution with a counting batch plan.
+  * rows on re-execution). Small routes run a single action. Routes with a
+  * pre-check or a partition probe persist the batch across their actions
+  * ([[consistentBatch]]), unless it is a replayable file scan or the
+  * caller already holds it cached. Bulk FIRST writes (loads too large to
+  * persist without re-creating the disk blowout the pre-check exists to
+  * avoid) use write-then-verify ([[bulkFirstWrite]]): the verdict is
+  * about the bytes that landed, never about a different execution of the
+  * plan. SinksExecOnceSpec pins the once-only execution with a counting
+  * batch plan, SinkRouteJobsSpec the jobs of each route.
   *
-  * Routing between the small and big paths reads PLAN STATISTICS (no
-  * job): a frame under 256 MiB by `optimizedPlan.stats` is small. Both
-  * DSv2 sources report statistics (`SupportsReportStatistics`), so a
-  * daily pull plans at its real size and commits in one action; a scan
-  * that reports none plans at Spark's unknown-size default and takes
-  * the big-frame path.
+  * Table rewrites are crash-safe: the new version is written to a scratch
+  * directory beside the table and swapped in ([[swapDirs]]); the
+  * unpartitioned whole-table rewrite is O(history) per batch, so past
+  * `maxFullRewriteBytes` (default 4 GiB) it throws and demands
+  * `partitionBy` or an explicit ceiling raise. A partitioned merge reads
+  * and swaps ONLY the partitions the batch touches; by default the
+  * partition value must be stable per key (true for violations: month is
+  * derived from the id's date), and `globalKeys = true` lifts that by also
+  * merging the partitions a batch key previously lived in.
   *
-  * Lake reads start no schema-inference job either. Insert-ignore's
-  * anti-join reads the lake's keys with the batch's key schema; every
-  * other internal read ([[readRaw]]: the upsert merges, `compact`,
-  * write-then-verify) declares the schema of the lake's parquet footers,
-  * read on the driver by [[graft.ParquetFooters]] (with `mergeSchema`,
-  * their union). A lake past the footer reader's bounds (more files than
-  * [[graft.ParquetFooters.MaxFooters]], summary files) is inferred by
-  * Spark as before.
+  * Lake reads start no schema-inference job. Insert-ignore's anti-join
+  * reads the lake's keys with the batch's key schema; every other
+  * internal read ([[readRaw]]) declares the schema of the lake's parquet
+  * footers, read on the driver by [[graft.ParquetFooters]] (with
+  * `mergeSchema`, their union). A lake past the footer reader's bounds is
+  * inferred by Spark as before.
   *
-  * Corpus-scale batches merged into an EXISTING lake are the one shape
+  * A corpus-scale batch merged into an EXISTING lake is the one shape
   * that still materializes the batch (a persist, spilling linearly to
-  * executor disk — bounded by batch size, unlike the round-13 sort
-  * blowout, but real at multi-TB). If even that is too much, stage the
-  * batch yourself: one map-only parquet write, then call the sink on
-  * the staged SCAN — deterministic and cache-free by construction (the
-  * sink detects the replayable scan and skips its own persist entirely;
-  * the write-then-verify path does exactly this internally for first
-  * writes).
+  * executor disk). If even that is too much, stage the batch yourself:
+  * one map-only parquet write, then call the sink on the staged SCAN,
+  * which [[replayableScan]] recognises and merges cache-free.
   */
 object Sinks {
 
@@ -143,6 +142,18 @@ object Sinks {
     if (!fs.rename(from, to))
       throw new java.io.IOException(s"rename failed: $from -> $to")
 
+  /** A fresh 8-character tag for a scratch directory name. */
+  private def newTag(): String = java.util.UUID.randomUUID.toString.take(8)
+
+  /** A scratch directory BESIDE the table at `root` (never inside it, so
+    * Spark never scans it as table data): `<table><kind><tag>`, where
+    * `kind` is `._tmp_` (a write not yet swapped in), `._aside_` (a
+    * partition swap's asides) or `._compact_` (a compaction rewrite) —
+    * the names [[sweepLeftovers]] matches.
+    */
+  private def scratchDir(root: Path, kind: String, tag: String = newTag()): Path =
+    new Path(root.getParent, root.getName + kind + tag)
+
   /** Swap `target` with `replacement` (both directories): rename target
     * aside (under `asideParent` — NEVER inside a directory Spark scans as
     * a table, or the leftover reads as a duplicate partition after a
@@ -158,8 +169,7 @@ object Sinks {
       fs: FileSystem, target: Path, replacement: Path, asideParent: Path,
       asideBase: Option[String] = None): Unit = {
     val aside = new Path(asideParent,
-      asideBase.getOrElse(target.getName) +
-        "._old_" + java.util.UUID.randomUUID.toString.take(8))
+      asideBase.getOrElse(target.getName) + "._old_" + newTag())
     val hadOld = fs.exists(target)
     if (hadOld) {
       fs.mkdirs(asideParent)
@@ -171,22 +181,58 @@ object Sinks {
       throw new java.io.IOException(s"delete failed: $aside")
   }
 
-  /** Keep one row per key: highest `_precedence`, then tiebreak desc. */
-  private def keepLast(
-      df: DataFrame, keys: Seq[String], tiebreak: Option[String]): DataFrame = {
-    val order = col("_precedence").desc +: tiebreak.map(c => col(c).desc).toSeq
+  // ---- size route
+
+  /** Below this, dedup directly: the window on a small frame costs less
+    * than the pre-check's extra job dispatch (the bench's upsert-family
+    * queries regressed 20–30% when the check ran unconditionally). Above
+    * it, one narrow keys-only job is noise next to the full-width shuffle
+    * it can skip. A system property overrides for tests (set to 0 to
+    * force the bulk routes onto the row-scale law fixtures).
+    */
+  private def DedupPrecheckMinBytes: BigInt = BigInt(
+    sys.props.getOrElse("graft.dedup.precheck.min.bytes", (256L << 20).toString))
+
+  /** The size route: true when `df` takes the bulk path, by its plan
+    * statistics (no action, no job). Unknown sizes (e.g. a V2 source
+    * without statistics) report huge, which routes them bulk.
+    */
+  private def isBulk(df: DataFrame): Boolean =
+    BigInt(df.queryExecution.optimizedPlan.stats.sizeInBytes.toString) >= DedupPrecheckMinBytes
+
+  // ---- dedup
+
+  /** Keep one row per key: the first by `order`, which must be non-empty
+    * (a window's `row_number` needs an order; a constant serves).
+    */
+  private def keepOne(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
     df.withColumn("_rn", row_number().over(
         Window.partitionBy(keys.map(col): _*).orderBy(order: _*)))
       .filter(col("_rn") === 1)
-      .drop("_rn", "_precedence")
-  }
+      .drop("_rn")
 
-  /** Plan-stats size of a frame — no action, no job. Unknown sizes
-    * (e.g. a V2 source without statistics) report huge, which routes
-    * them to the conservative big-frame path.
+  /** True when any key occurs more than once — the keys-only duplicate
+    * pre-check (column-pruned, map-side combinable, one narrow job).
     */
-  private def statsBytes(df: DataFrame): BigInt =
-    BigInt(df.queryExecution.optimizedPlan.stats.sizeInBytes.toString)
+  private def hasDupKeys(df: DataFrame, keys: Seq[String]): Boolean = df
+    .groupBy(keys.map(col): _*).agg(count(lit(1)).as("_n"))
+    .filter(col("_n") > 1).limit(1).count() > 0
+
+  /** [[keepOne]], skipped when a bulk frame provably has no duplicate
+    * keys. The window shuffles and SORTS the full-width frame even when
+    * every key is already unique — for a bulk load that is a whole-table
+    * shuffle bought for nothing (a 50M-row signature-index build spilled
+    * past 70 GB of local disk before this check existed; with it the load
+    * is a map-only streaming write). The pre-check is a keys-only
+    * aggregation, hundreds of MB where the window moves tens of GB; small
+    * frames skip it and keep the one-action path. Skipping on a
+    * provably-clean frame returns identical rows by definition.
+    */
+  private def dedup(
+      df: DataFrame, keys: Seq[String], order: Seq[Column], bulk: Boolean): DataFrame =
+    if (bulk && !hasDupKeys(df, keys)) df else keepOne(df, keys, order)
+
+  // ---- consistency persist
 
   /** Persist `df` unless the CALLER already holds it cached, returning
     * whether THIS call persisted (and so owns the unpersist). Spark's
@@ -202,6 +248,19 @@ object Sinks {
     if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
       df.persist(); true
     } else false
+
+  /** Run `body`, whose actions read `batch`'s plan more than once when
+    * `multiAction` (a pre-check, a partition probe, then the write), over
+    * ONE execution of the batch: it is persisted for the duration, so a
+    * source straight off an HTTP pull evaluates once and every verdict
+    * describes the rows the write ships (cache substitution is
+    * plan-based, so frames derived from the batch read it). No persist
+    * for a [[replayableScan]] or a batch the caller already cached.
+    */
+  private def consistentBatch[T](batch: DataFrame, multiAction: Boolean)(body: => T): T = {
+    val ownPersist = multiAction && !replayableScan(batch) && persistIfNotCached(batch)
+    try body finally if (ownPersist) batch.unpersist()
+  }
 
   /** True when re-executing `df` is deterministic AND cheap: every leaf
     * reads files (or an existing cache), every expression is
@@ -250,54 +309,44 @@ object Sinks {
       plan.collectLeaves().forall(leafOk)
   }
 
-  /** True when any key occurs more than once — the keys-only duplicate
-    * pre-check shared by every skip gate (column-pruned, map-side
-    * combinable, one narrow job).
-    */
-  private def hasDupKeys(df: DataFrame, keys: Seq[String]): Boolean = df
-    .groupBy(keys.map(col): _*).agg(count(lit(1)).as("_n"))
-    .filter(col("_n") > 1).limit(1).count() > 0
+  // ---- writes
 
-  /** Below this, dedup directly: the window on a small frame costs less
-    * than the pre-check's extra job dispatch. Above it, one narrow
-    * keys-only job is noise next to the full-width shuffle it can skip.
-    * A system property overrides for tests (set to 0 to force the
-    * pre-check path onto the row-scale law fixtures).
-    */
-  private def DedupPrecheckMinBytes: BigInt = BigInt(
-    sys.props.getOrElse("graft.dedup.precheck.min.bytes", (256L << 20).toString))
-
-  /** [[keepLast]], skipped when `merged` provably has no duplicate keys.
+  /** How the sink lays out the files it writes.
     *
-    * The window dedup shuffles and SORTS the full-width merged frame
-    * even when every key is already unique — for an initial bulk load
-    * that is a whole-table shuffle bought for nothing (a 50M-row
-    * signature-index build spilled past 70 GB of local disk before this
-    * check existed; with it the load is a map-only streaming write).
-    * The pre-check is a keys-only aggregation — column-pruned to the
-    * key columns, combinable map-side, hundreds of MB where the window
-    * moves tens of GB. It costs one extra job per upsert, which is NOT
-    * noise for the reference's row-scale daily tables (the bench's
-    * upsert-family queries regressed 20–30% when the check ran
-    * unconditionally), so frames under [[DedupPrecheckMinBytes]] by
-    * plan stats keep the old direct-window path. Any duplicate at all
-    * falls back to the exact window; skipping on a provably-clean
-    * frame returns identical rows by definition.
+    * `sortBy` sorts rows within each write task so parquet row-group
+    * min/max statistics become selective — a scan filtered on a `sortBy`
+    * column prunes row groups instead of reading them (the poor man's
+    * Z-order; one column is usually the right call).
+    *
+    * `maxRecordsPerFile` caps records per output file so one fat task
+    * can't emit a multi-GB file (0 = no cap): listing cost, scan
+    * parallelism and retry granularity all key off file size at 100 TB.
     */
-  private def keepLastIfNeeded(
-      merged: DataFrame, keys: Seq[String], tiebreak: Option[String]): DataFrame = {
-    if (statsBytes(merged) < DedupPrecheckMinBytes)
-      return keepLast(merged, keys, tiebreak)
-    if (hasDupKeys(merged, keys)) keepLast(merged, keys, tiebreak)
-    else merged.drop("_precedence")
+  private final case class Layout(
+      partitionBy: Seq[String], sortBy: Seq[String], maxRecordsPerFile: Long) {
+
+    def write(df: DataFrame, mode: SaveMode, dest: String): Unit = {
+      val rows = if (sortBy.isEmpty) df else df.sortWithinPartitions(sortBy.map(col): _*)
+      val w = rows.write.mode(mode)
+      val capped =
+        if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile) else w
+      (if (partitionBy.nonEmpty) capped.partitionBy(partitionBy: _*) else capped).parquet(dest)
+    }
+
+    /** Write `df` to a fresh `._tmp_` dir beside the table at `root`. */
+    def writeTmp(df: DataFrame, root: Path): Path = {
+      val tmp = scratchDir(root, "._tmp_")
+      write(df, SaveMode.Overwrite, tmp.toString)
+      tmp
+    }
   }
 
-  /** Write-then-verify for a big FIRST write (no existing lake): write
-    * `batch` once to a fresh tmp dir (map-only — no window, no persist),
-    * run the keys-only duplicate check against the WRITTEN parquet, and
-    * only when duplicates actually landed rewrite tmp through `dedup`
+  /** Write-then-verify for a bulk FIRST write (no existing lake): write
+    * `batch` once to a tmp dir (map-only — no window, no persist), run
+    * the keys-only duplicate check against the WRITTEN parquet, and only
+    * when duplicates actually landed rewrite tmp through `dedupWritten`
     * (which reads the written data — deterministic by construction) into
-    * a second tmp. Returns the directory the caller swaps in.
+    * a second tmp. The result is swapped in as the table.
     *
     * This is what makes the pre-check skip sound for non-deterministic
     * sources: a persisted-batch pre-check verdict describes ONE
@@ -307,51 +356,43 @@ object Sinks {
     * next to the bulk write itself — while the clean path stays exactly
     * the map-only shape that replaced the 70 GB window spill (round 13).
     */
-  private def writeVerified(
+  private def bulkFirstWrite(
       spark: SparkSession, batch: DataFrame, path: String, keys: Seq[String],
-      partitionBy: Seq[String], sortBy: Seq[String], maxRecordsPerFile: Long,
-      dedup: DataFrame => DataFrame): Path = {
+      layout: Layout, dedupWritten: DataFrame => DataFrame): Unit = {
     val fs = fsFor(spark, path)
-    def write(df: DataFrame): Path = {
-      val tmp = path + "._tmp_" + java.util.UUID.randomUUID.toString.take(8)
-      val w = capped(sorted(df, sortBy).write.mode(SaveMode.Overwrite),
-        maxRecordsPerFile)
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tmp)
-      new Path(tmp)
-    }
-    val first = write(batch)
+    val root = new Path(path)
+    val first = layout.writeTmp(batch, root)
     // an empty batch writes no data files (nothing to dedup, and the
     // schema-less dir can't be read back)
-    if (!LakeFs.nonEmptyDataDir(spark, first.toString)) return first
-    val written = readRaw(spark, first.toString, mergeSchema = false)
-    if (!hasDupKeys(written, keys)) first
-    else {
-      // peak disk on this (rare: dirty BULK load) path is 2x the batch —
-      // the rewrite must read `first` so it cannot be deleted earlier,
-      // and a crash between the two writes orphans `first` beside the
-      // table (same leftover class as any interrupted tmp write here)
-      val second = write(dedup(written))
-      if (!fs.delete(first, true))
-        throw new java.io.IOException(s"delete failed: $first")
-      second
-    }
+    val landed =
+      if (!LakeFs.nonEmptyDataDir(spark, first.toString)) first
+      else {
+        val written = readRaw(spark, first.toString, mergeSchema = false)
+        if (!hasDupKeys(written, keys)) first
+        else {
+          // peak disk on this (rare: dirty BULK load) path is 2x the
+          // batch — the rewrite must read `first` so it cannot be deleted
+          // earlier, and a crash between the two writes orphans `first`
+          // beside the table (same leftover class as any interrupted tmp)
+          val second = layout.writeTmp(dedupWritten(written), root)
+          if (!fs.delete(first, true))
+            throw new java.io.IOException(s"delete failed: $first")
+          second
+        }
+      }
+    swapDirs(fs, root, landed, root.getParent)
   }
 
-  /** Sort rows within each write task so parquet row-group min/max
-    * statistics become selective — the data-skipping layout knob: a scan
-    * filtered on a `sortBy` column prunes row groups instead of reading
-    * them (the poor man's Z-order; one column is usually the right call).
-    */
-  private def sorted(df: DataFrame, sortBy: Seq[String]): DataFrame =
-    if (sortBy.isEmpty) df else df.sortWithinPartitions(sortBy.map(col): _*)
+  // ---- the sinks
 
-  /** File-size hygiene at scale: cap records per output file so one fat
-    * task can't emit a multi-GB file (0 = no cap). Listing cost, scan
-    * parallelism, and retry granularity all key off file size at 100 TB.
+  /** Default ceiling for the O(history) whole-table rewrite: an
+    * unpartitioned upsert into a lake larger than this throws instead of
+    * silently rewriting everything per batch. The reference's weather
+    * table is ≤488 rows — nowhere near it; a 100 TB fact table must use
+    * `partitionBy` (partition-scoped merge) or explicitly raise the
+    * ceiling to state "yes, rewrite it all".
     */
-  private def capped(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
-      maxRecordsPerFile: Long) =
-    if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile) else w
+  val DefaultMaxFullRewriteBytes: Long = 4L << 30 // 4 GiB
 
   /** Last-writer-wins upsert of `batch` into the lake table at `path`.
     * One shuffle on `keys`; with `partitionBy` given, only the batch's
@@ -367,15 +408,6 @@ object Sinks {
     * column — leave it off when keys can't move (the reference's
     * month-from-id layout), turn it on when they can.
     */
-  /** Default ceiling for the O(history) whole-table rewrite: an
-    * unpartitioned upsert into a lake larger than this throws instead of
-    * silently rewriting everything per batch. The reference's weather
-    * table is ≤488 rows — nowhere near it; a 100 TB fact table must use
-    * `partitionBy` (partition-scoped merge) or explicitly raise the
-    * ceiling to state "yes, rewrite it all".
-    */
-  val DefaultMaxFullRewriteBytes: Long = 4L << 30 // 4 GiB
-
   def upsert(
       spark: SparkSession,
       batch: DataFrame,
@@ -389,6 +421,12 @@ object Sinks {
       maxFullRewriteBytes: Long = DefaultMaxFullRewriteBytes): Unit = {
     val fs = fsFor(spark, path)
     val tableRoot = new Path(path)
+    val layout = Layout(partitionBy, sortBy, maxRecordsPerFile)
+    // batch rows carry _precedence 1 and lake rows 0: the last writer wins
+    val lastWins = col("_precedence").desc +: tiebreak.map(c => col(c).desc).toSeq
+    def keepLast(df: DataFrame, bulk: Boolean): DataFrame =
+      dedup(df, keys, lastWins, bulk).drop("_precedence")
+    val newRows = batch.withColumn("_precedence", lit(1))
 
     if (partitionBy.isEmpty || !LakeFs.nonEmptyDataDir(spark, path)) {
       // whole-table merge + crash-safe swap (or first write).
@@ -405,140 +443,100 @@ object Sinks {
             "opt in to the full rewrite.")
       }
       val lake = readLake(spark, path)
-      val newRows = batch.withColumn("_precedence", lit(1))
-      // the first-write gate reads the SAME frame keepLastIfNeeded would
-      // gate on (merged == newRows when the lake is absent): gating on
-      // bare `batch` left a stats band (batch under the threshold,
-      // merged over it) where a big first write slipped into the else
-      // branch unpersisted and keepLastIfNeeded's pre-check became a
-      // second execution of the batch plan
-      if (lake.isEmpty && statsBytes(newRows) >= DedupPrecheckMinBytes) {
-        // big FIRST write (bulk load): write-then-verify — one execution
-        // of the batch plan, dup check on the written bytes, rewrite only
-        // if duplicates actually landed (see writeVerified)
-        val tmp = writeVerified(spark, batch, path, keys, partitionBy,
-          sortBy, maxRecordsPerFile,
-          w => keepLast(w.withColumn("_precedence", lit(1)), keys, tiebreak))
+      // schema evolution: a batch may add columns (existing rows
+      // null-fill them) or omit columns the lake has (batch rows
+      // null-fill — the upserted row carries exactly what the batch
+      // declared, like ON DUPLICATE KEY UPDATE of every batch column)
+      val merged = lake.fold(newRows)(_.withColumn("_precedence", lit(0))
+        .unionByName(newRows, allowMissingColumns = true))
+      // the first-write gate and the pre-check route on the same frame:
+      // a bulk first write taking the merge route would run its pre-check
+      // as a second, unpersisted execution of the batch
+      val bulk = isBulk(merged)
+      if (lake.isEmpty && bulk)
+        bulkFirstWrite(spark, batch, path, keys, layout,
+          w => keepLast(w.withColumn("_precedence", lit(1)), bulk = false))
+      else consistentBatch(batch, multiAction = bulk) {
+        val tmp = layout.writeTmp(keepLast(merged, bulk), tableRoot)
         swapDirs(fs, tableRoot, tmp, tableRoot.getParent)
-      } else {
-        val merged = lake match {
-          case None => newRows
-          case Some(existing) =>
-            // schema evolution: a batch may add columns (existing rows
-            // null-fill them) or omit columns the lake has (batch rows
-            // null-fill — the upserted row carries exactly what the batch
-            // declared, like ON DUPLICATE KEY UPDATE of every batch column)
-            existing.withColumn("_precedence", lit(0))
-              .unionByName(newRows, allowMissingColumns = true)
-        }
-        // when the dup pre-check will run (big merged frame), it adds an
-        // action before the write and the batch plan would execute twice.
-        // Persist the batch so the source (possibly straight off an HTTP
-        // pull) evaluates once and the check's verdict describes the same
-        // rows the write ships; cache substitution is plan-based, so the
-        // merged plan reads it. Small frames (incl. any small first
-        // write) skip the check entirely and keep the one-action path.
-        // A batch the CALLER already persisted is left alone either way.
-        val ownPersist = lake.isDefined &&
-          statsBytes(merged) >= DedupPrecheckMinBytes &&
-          !replayableScan(batch) && persistIfNotCached(batch)
-        try {
-          val tmp = path + "._tmp_" + java.util.UUID.randomUUID.toString.take(8)
-          val w = capped(sorted(keepLastIfNeeded(merged, keys, tiebreak), sortBy)
-            .write.mode(SaveMode.Overwrite), maxRecordsPerFile)
-          (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tmp)
-          swapDirs(fs, tableRoot, new Path(tmp), tableRoot.getParent)
-        } finally if (ownPersist) batch.unpersist()
       }
-    } else {
+    } else consistentBatch(batch, multiAction = true) {
       // partition-scoped merge: touch only the partitions in the batch
       // (one or MORE partition columns — e.g. year/month). The batch plan
-      // feeds both the affected-partition probe and the merge write —
-      // persist so an expensive upstream (API fetch + transform)
-      // evaluates once. A caller-held cache is reused, never clobbered.
-      val b = batch
-      val ownPersist = !replayableScan(b) && persistIfNotCached(b)
-      try {
-        val newRows = b.withColumn("_precedence", lit(1))
-        val pcols = partitionBy.map(col)
-        // partition values normalize to their STRING form at collection
-        // time — the sink's internal reads keep partition columns as
-        // strings (see readRaw), so string-vs-string predicates stay
-        // partition-prunable whatever type the batch declared
-        def tupOf(r: org.apache.spark.sql.Row): Seq[String] =
-          partitionBy.indices.map(i =>
-            if (r.isNullAt(i)) null else r.get(i).toString)
-        val batchParts = b.select(pcols: _*).distinct().collect().map(tupOf)
-        // mergeSchema (as readLake): rewritten partitions keep evolved columns
-        val existing = readRaw(spark, path, mergeSchema = true)
-        // with globalKeys, partitions holding a previous version of a
-        // batch key are merged too — their stale copies lose keepLast
-        val staleParts: Array[Seq[String]] =
-          if (!globalKeys) Array.empty
-          else existing.select((partitionBy ++ keys).distinct.map(col): _*)
-            .join(broadcast(b.select(keys.map(col): _*).distinct()), keys, "left_semi")
-            .select(pcols: _*).distinct().collect().map(tupOf)
-        val affected: Seq[Seq[String]] = (batchParts ++ staleParts).distinct.toSeq
-        // disjunction of per-partition-tuple conjunctions: IsNull matches
-        // a __HIVE_DEFAULT_PARTITION__ dir, equality the rest — both
-        // participate in partition pruning, so the read below only
-        // lists/touches the affected directories
-        val partPred =
-          if (affected.isEmpty) lit(false)
-          else affected.map { tup =>
-            partitionBy.zip(tup).map {
-              case (c, null) => col(c).isNull
-              case (c, v) => col(c) === lit(v)
-            }.reduce(_ && _)
-          }.reduce(_ || _)
-        val merged = keepLastIfNeeded(
-          existing.filter(partPred).withColumn("_precedence", lit(0))
-            .unionByName(newRows, allowMissingColumns = true),
-          keys, tiebreak)
-        val tmp = path + "._tmp_" + java.util.UUID.randomUUID.toString.take(8)
-        capped(sorted(merged, sortBy).write.mode(SaveMode.Overwrite),
-          maxRecordsPerFile).partitionBy(partitionBy: _*).parquet(tmp)
-        // swap exactly the LEAF partition dirs the merge produced (nested
-        // one level per partition column; names carry Hive-escaped values
-        // — no re-encoding here); asides live OUTSIDE the table root so a
-        // crash never leaves a directory Spark would discover as a bogus
-        // partition
-        val asideRoot = new Path(tableRoot.getParent,
-          tableRoot.getName + "._aside_" + java.util.UUID.randomUUID.toString.take(8))
-        def leafRels(base: Path, cols: Seq[String], prefix: String): Seq[String] =
-          if (cols.isEmpty) Seq(prefix)
-          else fs.listStatus(base)
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith(cols.head + "="))
-            .toSeq.flatMap { s =>
-              val rel = if (prefix.isEmpty) s.getPath.getName
-                        else prefix + "/" + s.getPath.getName
-              leafRels(s.getPath, cols.tail, rel)
-            }
-        val producedRels = leafRels(new Path(tmp), partitionBy, "")
-        producedRels.foreach { rel =>
-          // aside carries the FULL rel ("year=2020%2Fmonth=09._old_*"),
-          // not just the leaf name: after a crash mid-swap sweepLeftovers
-          // must find the exact target dir to decide whether the aside is
-          // the only surviving copy
-          swapDirs(fs, new Path(path, rel), new Path(tmp, rel), asideRoot,
-            Some(encodeRel(rel)))
-        }
-        // globalKeys: an affected partition whose rows ALL moved elsewhere
-        // produces no output dir — its stale directory is deleted outright
-        // (dir names via Spark's own Hive escaping, so values round-trip)
-        if (globalKeys) {
-          import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          val producedSet = producedRels.toSet
-          affected.map { tup =>
-            partitionBy.zip(tup).map {
-              case (c, null) => s"$c=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"
-              case (c, v) => s"$c=${ExternalCatalogUtils.escapePathName(v.toString)}"
-            }.mkString("/")
-          }.filterNot(producedSet).foreach(n => fs.delete(new Path(path, n), true))
-        }
-        fs.delete(new Path(tmp), true)
-        fs.delete(asideRoot, true)
-      } finally if (ownPersist) b.unpersist()
+      // feeds both the affected-partition probe and the merge write.
+      val pcols = partitionBy.map(col)
+      // partition values normalize to their STRING form at collection
+      // time — the sink's internal reads keep partition columns as
+      // strings (see readRaw), so string-vs-string predicates stay
+      // partition-prunable whatever type the batch declared
+      def tupOf(r: org.apache.spark.sql.Row): Seq[String] =
+        partitionBy.indices.map(i =>
+          if (r.isNullAt(i)) null else r.get(i).toString)
+      val batchParts = batch.select(pcols: _*).distinct().collect().map(tupOf)
+      // mergeSchema (as readLake): rewritten partitions keep evolved columns
+      val existing = readRaw(spark, path, mergeSchema = true)
+      // with globalKeys, partitions holding a previous version of a
+      // batch key are merged too — their stale copies lose the dedup
+      val staleParts: Array[Seq[String]] =
+        if (!globalKeys) Array.empty
+        else existing.select((partitionBy ++ keys).distinct.map(col): _*)
+          .join(broadcast(batch.select(keys.map(col): _*).distinct()), keys, "left_semi")
+          .select(pcols: _*).distinct().collect().map(tupOf)
+      val affected: Seq[Seq[String]] = (batchParts ++ staleParts).distinct.toSeq
+      // disjunction of per-partition-tuple conjunctions: IsNull matches
+      // a __HIVE_DEFAULT_PARTITION__ dir, equality the rest — both
+      // participate in partition pruning, so the read below only
+      // lists/touches the affected directories
+      val partPred =
+        if (affected.isEmpty) lit(false)
+        else affected.map { tup =>
+          partitionBy.zip(tup).map {
+            case (c, null) => col(c).isNull
+            case (c, v) => col(c) === lit(v)
+          }.reduce(_ && _)
+        }.reduce(_ || _)
+      val merged = existing.filter(partPred).withColumn("_precedence", lit(0))
+        .unionByName(newRows, allowMissingColumns = true)
+      val tmp = layout.writeTmp(keepLast(merged, isBulk(merged)), tableRoot)
+      // swap exactly the LEAF partition dirs the merge produced (nested
+      // one level per partition column; names carry Hive-escaped values
+      // — no re-encoding here); asides live OUTSIDE the table root so a
+      // crash never leaves a directory Spark would discover as a bogus
+      // partition
+      val asideRoot = scratchDir(tableRoot, "._aside_")
+      def leafRels(base: Path, cols: Seq[String], prefix: String): Seq[String] =
+        if (cols.isEmpty) Seq(prefix)
+        else fs.listStatus(base)
+          .filter(s => s.isDirectory && s.getPath.getName.startsWith(cols.head + "="))
+          .toSeq.flatMap { s =>
+            val rel = if (prefix.isEmpty) s.getPath.getName
+                      else prefix + "/" + s.getPath.getName
+            leafRels(s.getPath, cols.tail, rel)
+          }
+      val producedRels = leafRels(tmp, partitionBy, "")
+      producedRels.foreach { rel =>
+        // aside carries the FULL rel ("year=2020%2Fmonth=09._old_*"),
+        // not just the leaf name: after a crash mid-swap sweepLeftovers
+        // must find the exact target dir to decide whether the aside is
+        // the only surviving copy
+        swapDirs(fs, new Path(path, rel), new Path(tmp, rel), asideRoot,
+          Some(encodeRel(rel)))
+      }
+      // globalKeys: an affected partition whose rows ALL moved elsewhere
+      // produces no output dir — its stale directory is deleted outright
+      // (dir names via Spark's own Hive escaping, so values round-trip)
+      if (globalKeys) {
+        import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        val producedSet = producedRels.toSet
+        affected.map { tup =>
+          partitionBy.zip(tup).map {
+            case (c, null) => s"$c=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"
+            case (c, v) => s"$c=${ExternalCatalogUtils.escapePathName(v.toString)}"
+          }.mkString("/")
+        }.filterNot(producedSet).foreach(n => fs.delete(new Path(path, n), true))
+      }
+      fs.delete(tmp, true)
+      fs.delete(asideRoot, true)
     }
   }
 
@@ -546,15 +544,14 @@ object Sinks {
     * year of daily insert-ignore appends leaves one file per day per
     * partition, and scan/listing cost grows with file count, not data.
     * Rewrites every directory holding more than `maxFiles` parquet files
-    * into `targetFiles` files via the crash-safe swap; directories at or
-    * below the threshold are untouched.
+    * into one file via the crash-safe swap; directories at or below the
+    * threshold are untouched.
     */
   def compact(
       spark: SparkSession,
       path: String,
       partitioned: Boolean = false,
-      maxFiles: Int = 4,
-      targetFiles: Int = 1): Unit = {
+      maxFiles: Int = 4): Unit = {
     val fs = fsFor(spark, path)
     val root = new Path(path)
     if (!LakeFs.nonEmptyDataDir(spark, path)) return
@@ -568,13 +565,13 @@ object Sinks {
       // after the PARTITION ("month=09._old_*") would be invisible to
       // sweepLeftovers' <table>-prefix match, so a crash between the
       // aside rename and its delete would leak it forever
-      val tag = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(root.getParent, root.getName + "._compact_" + tag)
-      val asideRoot = new Path(root.getParent, root.getName + "._aside_" + tag)
+      val tag = newTag()
+      val tmp = scratchDir(root, "._compact_", tag)
+      val asideRoot = scratchDir(root, "._aside_", tag)
       // mergeSchema: appends that added a column must not lose it here
-      readRaw(spark, dir.toString, mergeSchema = true)
-        .coalesce(targetFiles)
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      Layout(Nil, Nil, 0L).write(
+        readRaw(spark, dir.toString, mergeSchema = true).coalesce(1),
+        SaveMode.Overwrite, tmp.toString)
       swapDirs(fs, dir, tmp, asideRoot)
       fs.delete(asideRoot, true) // empty (or absent) after a clean swap
       ()
@@ -732,24 +729,10 @@ object Sinks {
       tiebreak: Option[String] = None,
       sortBy: Seq[String] = Nil,
       maxRecordsPerFile: Long = 0L): Unit = {
-    // batch-internal dedup: keep-first by tiebreak asc (stable). On a
-    // big batch (plan stats), a keys-only pre-check first — the window
-    // shuffles and sorts the full batch, bought for nothing on a clean
-    // bulk pull. Against an existing lake the batch persists across
-    // check+write so an HTTP source is pulled once and the verdict
-    // describes the rows that ship; a big FIRST write skips the persist
-    // (materializing a corpus-scale frame is its own disk blowout) and
-    // uses write-then-verify instead — the check runs on the written
-    // bytes, so non-determinism cannot slip duplicates past the skip.
-    // Small daily batches keep the old direct one-action path.
-    def keepFirst(df: DataFrame): DataFrame = {
-      val order = tiebreak.map(c => col(c).asc).toSeq :+ lit(1).asc
-      df.withColumn("_rn", row_number().over(
-          Window.partitionBy(keys.map(col): _*).orderBy(order: _*)))
-        .filter(col("_rn") === 1)
-        .drop("_rn")
-    }
-    val willCheck = statsBytes(batch) >= DedupPrecheckMinBytes
+    val layout = Layout(partitionBy, sortBy, maxRecordsPerFile)
+    // keep-first by tiebreak asc; the constant makes the order non-empty
+    val firstWins = tiebreak.map(c => col(c).asc).toSeq :+ lit(1).asc
+    val bulk = isBulk(batch)
     // only the lake's keys feed the anti-join: read them with the batch's
     // key schema, so no footer-inference job runs (a schema-less or
     // mergeSchema read opens footers first), and a lake whose key column
@@ -760,27 +743,12 @@ object Sinks {
       if (!LakeFs.nonEmptyDataDir(spark, path)) None
       else Some(spark.read.schema(batch.select(keyCols: _*).schema).parquet(path)
         .select(keyCols: _*))
-    if (willCheck && lakeKeys.isEmpty) {
-      val fs = fsFor(spark, path)
-      val tableRoot = new Path(path)
-      val tmp = writeVerified(spark, batch, path, keys, partitionBy,
-        sortBy, maxRecordsPerFile, keepFirst)
-      swapDirs(fs, tableRoot, tmp, tableRoot.getParent)
-    } else {
-      val ownPersist = willCheck &&
-        !replayableScan(batch) && persistIfNotCached(batch)
-      try {
-        val hasDups = willCheck && hasDupKeys(batch, keys)
-        val dedupedBatch =
-          if (willCheck && !hasDups) batch else keepFirst(batch)
-        val fresh = lakeKeys match {
-          case None => dedupedBatch
-          case Some(existing) => dedupedBatch.join(existing, keys, "left_anti")
-        }
-        val w = capped(sorted(fresh, sortBy).write.mode(SaveMode.Append),
-          maxRecordsPerFile)
-        (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-      } finally if (ownPersist) batch.unpersist()
+    if (bulk && lakeKeys.isEmpty)
+      bulkFirstWrite(spark, batch, path, keys, layout, keepOne(_, keys, firstWins))
+    else consistentBatch(batch, multiAction = bulk) {
+      val deduped = dedup(batch, keys, firstWins, bulk)
+      val fresh = lakeKeys.fold(deduped)(deduped.join(_, keys, "left_anti"))
+      layout.write(fresh, SaveMode.Append, path)
     }
   }
 }

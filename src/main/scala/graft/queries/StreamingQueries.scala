@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.streaming.MemoryDrain
+
 /** Streaming semantics (SURVEY.md §2.9) as Structured Streaming: the
   * reference's daily micro-batch incremental load maps to a file source +
   * event-time windowed aggregation + AvailableNow trigger (process all
@@ -111,15 +113,7 @@ object StreamingQueries {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-    val name = "stream_sliding_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    MemoryDrain(agg, OutputMode.Complete(), "stream_sliding_")
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
         col("event_type"), col("n_events"))
@@ -145,15 +139,7 @@ object StreamingQueries {
       .agg(
         count(lit(1)).as("n_events"),
         sum(col("value").cast(DecimalType(18, 3))).cast(DoubleType).as("value_sum"))
-    val name = "stream_hourly_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    MemoryDrain(agg, OutputMode.Complete(), "stream_hourly_")
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
         col("event_type"), col("n_events"), col("value_sum"))
@@ -199,15 +185,7 @@ object StreamingQueries {
               .format(java.time.format.DateTimeFormatter
                 .ofPattern("yyyy-MM-dd HH:mm:ss")))
       }
-    val name = "stream_users_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = updated.writeStream
-      .outputMode(OutputMode.Update())
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    MemoryDrain(updated, OutputMode.Update(), "stream_users_")
       .groupBy(col("user_id"))
       .agg(max(col("n_events")).as("n_events"), max(col("max_ts")).as("max_ts"))
       .orderBy(col("user_id"))
@@ -317,15 +295,7 @@ object StreamingQueries {
       .dropDuplicates("event_id")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_unique"))
-    val name = "stream_dedup_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = src.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy(col("event_type"))
+    MemoryDrain(src, OutputMode.Complete(), "stream_dedup_").orderBy(col("event_type"))
   }
 
   val qStreamDedupOracle: String =
@@ -500,15 +470,7 @@ object StreamingQueries {
       .join(broadcast(benchSet), "shingle")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_hits"))
-    val name = "stream_contam_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = hits.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    MemoryDrain(hits, OutputMode.Complete(), "stream_contam_")
       .filter(col("n_hits") >= 2)
       .orderBy(col("doc_id"))
   }
@@ -559,15 +521,7 @@ object StreamingQueries {
         "cast(conv(substring(h, 8 * r + 1, 8), 16, 10) as bigint) % 64"))
       .groupBy(col("r"), col("bucket"))
       .agg(count(lit(1)).as("cell"))
-    val name = "stream_countmin_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = cells.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val sketch = spark.table(name)
+    val sketch = MemoryDrain(cells, OutputMode.Complete(), "stream_countmin_")
     val truth = toks(docsBatch(spark, dir, glob))
       .groupBy(col("tok")).agg(count(lit(1)).as("true_cnt"))
     truth
@@ -609,15 +563,8 @@ object StreamingQueries {
     val src = eventsRawStream(spark, dir)
       .select(keyCol)
     val mg = udaf(new graft.functions.MisraGries(16))
-    val name = "stream_heavy_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = src.agg(mg(col("key")).as("cand")).writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val sketch = spark.table(name)
+    val sketch = MemoryDrain(
+      src.agg(mg(col("key")).as("cand")), OutputMode.Complete(), "stream_heavy_")
     val keyed = graft.Tables.events(spark, dir).select(keyCol)
     val totals = keyed.agg(count(lit(1)).as("n_total"))
     keyed
@@ -686,15 +633,7 @@ object StreamingQueries {
           prev.foreach(state.update)
           counts.toVector.map { case ((a, b), n) => MkPairN(a, b, n) }.iterator
       }
-    val name = "stream_markov_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = pairs.writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    MemoryDrain(pairs, OutputMode.Append(), "stream_markov_")
       .groupBy(col("prev_type"), col("next_type"))
       .agg(sum(col("n")).as("n"))
       .orderBy(col("prev_type"), col("next_type"))

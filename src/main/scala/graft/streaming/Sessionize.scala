@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** Gap-based sessionization as a stateful streaming operator
@@ -110,14 +110,6 @@ object Sessionize {
             closed.result().iterator
           }
       }
-    val name = "sessions_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = sessions.writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    MemoryDrain(sessions, OutputMode.Append(), "sessions_")
   }
 }

@@ -77,8 +77,7 @@ class CompactSweepConcurrencySpec extends SparkSpec {
     val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val done = new AtomicBoolean(false)
     val compactor = new Thread(() => {
-      try Sinks.compact(spark, path, partitioned = true,
-        maxFiles = 4, targetFiles = 1)
+      try Sinks.compact(spark, path, partitioned = true, maxFiles = 4)
       catch { case t: Throwable => failed.set(t) }
       finally done.set(true)
     })

@@ -17,11 +17,10 @@ import graft.{SparkSpec, Tables}
   * fails here, where `SinksLawSpec` and `SinksRecoverySpec` pin each
   * law on its own.
   *
-  * `graft.dedup.precheck.min.bytes` is lowered to 0 so the sf0.01 corpus
-  * takes the bulk-load branches (write-then-verify, the keys-only
-  * duplicate pre-check) that production takes past 256 MB. A dirty bulk
-  * load that skipped write-then-verify's rewrite would land duplicate
-  * keys.
+  * The size route is forced to bulk so the sf0.01 corpus takes the
+  * bulk-load branches (write-then-verify, the keys-only duplicate
+  * pre-check) that production takes past 256 MB. A dirty bulk load that
+  * skipped write-then-verify's rewrite would land duplicate keys.
   */
 class SinkLifecycleSpec extends SparkSpec {
 
@@ -43,8 +42,6 @@ class SinkLifecycleSpec extends SparkSpec {
 
   test("bulk load, sweep and recovery, daily merges, appends and compact " +
     "leave exactly the tables") {
-    val prop = "graft.dedup.precheck.min.bytes"
-    sys.props(prop) = "0"
     val work = Files.createTempDirectory("sink-lifecycle").toFile
     val parentDir = new File(work, "lake")
     assert(parentDir.mkdirs())
@@ -52,7 +49,7 @@ class SinkLifecycleSpec extends SparkSpec {
       Option(parentDir.listFiles()).getOrElse(Array.empty).map(_.getName).toSet
     def assertDirs(expect: Set[String], phase: String): Unit =
       assert(dirSet() === expect, s"[$phase] directory set")
-    try {
+    try SinkRouteJobsSpec.withBulkRoute {
       val docs = Tables.documents(spark, sf)
       val nDocs = docs.count()
 
@@ -134,13 +131,10 @@ class SinkLifecycleSpec extends SparkSpec {
       }
       val monthDir = new File(append, "month=2024-09")
       assert(parquetFiles(monthDir) >= 8)
-      Sinks.compact(spark, append, partitioned = true, maxFiles = 4, targetFiles = 1)
+      Sinks.compact(spark, append, partitioned = true, maxFiles = 4)
       assert(parquetFiles(monthDir) === 1)
       assert(spark.read.parquet(append).count() === nDocs)
       assertDirs(Set("docs_bulk", "docs_daily", "docs_append"), "compact")
-    } finally {
-      sys.props.remove(prop)
-      LakeFs.deleteRecursively(spark, new Path(work.toString))
-    }
+    } finally LakeFs.deleteRecursively(spark, new Path(work.toString))
   }
 }

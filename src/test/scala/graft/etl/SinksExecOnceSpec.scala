@@ -22,6 +22,7 @@ import graft.SparkSpec
   */
 class SinksExecOnceSpec extends SparkSpec {
   import spark.implicits._
+  import SinkRouteJobsSpec.withBulkRoute
 
   private def tmpDir(): String =
     Files.createTempDirectory("graft-sink-once").resolve("t").toString
@@ -36,14 +37,8 @@ class SinksExecOnceSpec extends SparkSpec {
         col("id").cast("int").as("seq"),
         lit("2024-09").as("month"))
 
-  private def withForcedCheck(body: => Unit): Unit = {
-    val prop = "graft.dedup.precheck.min.bytes"
-    sys.props(prop) = "0"
-    try body finally sys.props.remove(prop)
-  }
-
   test("big first-write upsert evaluates the batch once (clean and dirty)") {
-    withForcedCheck {
+    withBulkRoute {
       // clean keys: verify on the written bytes, no rewrite, no re-pull
       SinksExecOnceSpec.evals.set(0)
       val p1 = tmpDir()
@@ -69,7 +64,7 @@ class SinksExecOnceSpec extends SparkSpec {
   }
 
   test("big first-write insert-ignore evaluates the batch once (clean and dirty)") {
-    withForcedCheck {
+    withBulkRoute {
       SinksExecOnceSpec.evals.set(0)
       val p1 = tmpDir()
       Sinks.insertIgnore(spark, countingBatch(50, keyMod = 1000), p1,
@@ -91,7 +86,7 @@ class SinksExecOnceSpec extends SparkSpec {
   }
 
   test("big MERGE paths evaluate the batch once (persist, not re-pull)") {
-    withForcedCheck {
+    withBulkRoute {
       val p = tmpDir()
       Sinks.upsert(spark, countingBatch(10, keyMod = 1000), p,
         Seq("violation_id"), tiebreak = Some("seq"))
@@ -119,7 +114,7 @@ class SinksExecOnceSpec extends SparkSpec {
     // updateIndex AND the pair detection, and an unconditional sink
     // unpersist silently re-executed the batch source downstream
     import org.apache.spark.storage.StorageLevel
-    withForcedCheck {
+    withBulkRoute {
       // unpartitioned merge path
       val p = tmpDir()
       Sinks.upsert(spark, countingBatch(10, keyMod = 1000), p,
@@ -161,7 +156,7 @@ class SinksExecOnceSpec extends SparkSpec {
     // sink the scan — replayableScan detects it and the merge paths skip
     // their consistency persist (deterministic files, column-pruned
     // re-scans beat materializing every column)
-    withForcedCheck {
+    withBulkRoute {
       val stage = tmpDir()
       countingBatch(50, keyMod = 1000).write.parquet(stage)
       val staged = spark.read.parquet(stage)

@@ -8,7 +8,7 @@ import org.scalacheck.rng.Seed
 import graft.SparkSpec
 
 /** Generator-law coverage of the sinks' key semantics — the round-13
-  * lesson applied to `keepLastIfNeeded` and the write-then-verify
+  * lesson applied to the gated dedup and the write-then-verify
   * first-write path: fixtures and corpus pins can miss boundary key
   * patterns nobody wrote down, so both sinks are checked against an
   * in-memory model over GENERATED duplicate patterns, across the full
@@ -100,10 +100,57 @@ class SinksLawSpec extends SparkSpec {
 
   test("generated key patterns match the model (pre-check FORCED: " +
     "write-then-verify first writes, persisted-check merges)") {
-    val prop = "graft.dedup.precheck.min.bytes"
-    sys.props(prop) = "0"
-    try checkGrid(seedBase = 0x51B0L, runs = 6)
-    finally sys.props.remove(prop)
+    SinkRouteJobsSpec.withBulkRoute(checkGrid(seedBase = 0x51B0L, runs = 6))
+  }
+
+  // ---- degenerate batches through every route ----
+
+  private type NullableRow = (String, Option[Double], Option[Int], Option[String])
+
+  test("degenerate batches (empty, one row, all-null non-key columns) through " +
+    "every route match the model and leave a readable lake") {
+    val base: Seq[NullableRow] = Seq(("k1", Some(1.0), Some(0), Some("2024-09")),
+      ("k2", Some(2.0), Some(1), Some("2024-10")), ("k3", Some(3.0), Some(2), Some("2024-09")))
+    val degenerate: Map[String, Seq[NullableRow]] = Map(
+      "empty" -> Nil,
+      "one row" -> Seq(("k2", Some(20.0), Some(5), Some("2024-10"))),
+      "all-null non-key columns" -> Seq(("k2", None, None, None), ("k4", None, None, None)))
+    type Lake = Map[String, (Option[Double], Option[String])]
+    def model(batches: Seq[Seq[NullableRow]], lastWins: Boolean): Lake =
+      batches.foldLeft(Map.empty: Lake) { (acc, b) =>
+        val rows = b.map(r => r._1 -> ((r._2, r._4))).toMap
+        if (lastWins) acc ++ rows else rows ++ acc
+      }
+    def lake(path: String): Lake =
+      if (!LakeFs.nonEmptyDataDir(spark, path)) Map.empty
+      else spark.read.parquet(path).collect().map { r =>
+        r.getAs[String]("violation_id") ->
+          ((Option(r.getAs[java.lang.Double]("fine_amount")).map(_.doubleValue),
+            Option(r.getAs[String]("month"))))
+      }.toMap
+    def routes(): Unit =
+      for {
+        (shape, b) <- degenerate
+        onLake <- Seq(false, true)
+        partitioned <- Seq(false, true)
+        upsert <- Seq(true, false)
+      } {
+        val path = Files.createTempDirectory("graft-sink-degenerate").resolve("t").toString
+        val pby = if (partitioned) Seq("month") else Nil
+        val batches = if (onLake) Seq(base, b) else Seq(b)
+        batches.foreach { rows =>
+          val df = rows.toDF("violation_id", "fine_amount", "seq", "month")
+          if (upsert) Sinks.upsert(spark, df, path, Seq("violation_id"),
+            partitionBy = pby, tiebreak = Some("seq"))
+          else Sinks.insertIgnore(spark, df, path, Seq("violation_id"),
+            partitionBy = pby, tiebreak = Some("seq"))
+        }
+        val want = model(batches, lastWins = upsert)
+        assert(lake(path) == want, s"$shape onLake=$onLake partitioned=$partitioned " +
+          s"upsert=$upsert")
+      }
+    routes()
+    SinkRouteJobsSpec.withBulkRoute(routes())
   }
 
   // ---- globalKeys: keys MOVE partitions (the directory-swap surface) ----
@@ -186,7 +233,7 @@ class SinksLawSpec extends SparkSpec {
         val before = spark.read.parquet(path).collect()
           .map(r => (r.getAs[String]("violation_id"), r.getAs[Double]("fine_amount"),
             r.getAs[String]("month"))).toSet
-        Sinks.compact(spark, path, partitioned = true, maxFiles = 2, targetFiles = 1)
+        Sinks.compact(spark, path, partitioned = true, maxFiles = 2)
         val after = spark.read.parquet(path).collect()
           .map(r => (r.getAs[String]("violation_id"), r.getAs[Double]("fine_amount"),
             r.getAs[String]("month"))).toSet

@@ -93,9 +93,7 @@ class SinksSpec extends SparkSpec {
     // skip the full-width dedup window (the 50M-row index build that
     // blew local disk); force it onto the row-scale fixtures so both
     // branches carry the same semantics
-    val prop = "graft.dedup.precheck.min.bytes"
-    sys.props(prop) = "0"
-    try {
+    SinkRouteJobsSpec.withBulkRoute {
       val p1 = tmpDir()
       // clean batches: check runs, window skipped — rows identical
       Sinks.upsert(spark, batch(("a", 1.0, 0, "2024-09"), ("b", 2.0, 0, "2024-09")),
@@ -124,7 +122,7 @@ class SinksSpec extends SparkSpec {
       Sinks.upsert(spark, batch(("a", 5.0, 1, "2024-09")),
         p4, Seq("violation_id"), partitionBy = Seq("month"), tiebreak = Some("seq"))
       assert(asMap(p4) == Map("a" -> 5.0, "c" -> 3.0))
-    } finally sys.props.remove(prop)
+    }
   }
 
   test("partitioned upsert keeps the month lake layout") {
@@ -309,9 +307,7 @@ class SinksSpec extends SparkSpec {
     // the rewrite would land under month=9 — a renamed partition on the
     // very first load. The tmp read runs with inference off (readRaw);
     // pin the round trip through the forced big-batch path.
-    val prop = "graft.dedup.precheck.min.bytes"
-    sys.props(prop) = "0"
-    try {
+    SinkRouteJobsSpec.withBulkRoute {
       val path = tmpDir()
       Sinks.upsert(spark,
         batch(("a", 1.0, 0, "09"), ("a", 9.0, 1, "09"), ("b", 2.0, 0, "10")),
@@ -320,7 +316,7 @@ class SinksSpec extends SparkSpec {
         .filter(_.isDirectory).map(_.getName).toSet
       assert(dirs == Set("month=09", "month=10"), s"partition renamed: $dirs")
       assert(asMap(path) == Map("a" -> 9.0, "b" -> 2.0))
-    } finally sys.props.remove(prop)
+    }
   }
 
   test("whole-table upsert refuses an O(history) rewrite past the size ceiling") {

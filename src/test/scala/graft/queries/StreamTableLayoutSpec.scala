@@ -8,6 +8,7 @@ import graft.{Fold, ProbeCorpus, SparkSpec}
   * Spark-written directory table (the `ProbeCorpus` layout Bench and the
   * Sentinel run on) streams the same rows as the flat one-file testdata,
   * and a table that matches no file fails instead of streaming nothing.
+  * A drained stream leaves nothing behind in the session's catalog.
   */
 class StreamTableLayoutSpec extends SparkSpec {
 
@@ -39,5 +40,16 @@ class StreamTableLayoutSpec extends SparkSpec {
         StreamingQueries.queries("q_stream_neardedup")(spark, empty.toString))
       assert(err.getMessage.contains("documents.parquet"))
     } finally Files.delete(empty)
+  }
+
+  test("two drains of q_stream_hourly leave the catalog unchanged and read the same rows") {
+    // the memory sink's view is dropped once the result frame is resolved
+    def tables(): Set[String] = spark.catalog.listTables().collect().map(_.name).toSet
+    val before = tables()
+    val first = StreamingQueries.queries("q_stream_hourly")(spark, sf).collect().toSeq
+    val second = StreamingQueries.queries("q_stream_hourly")(spark, sf).collect().toSeq
+    assert(tables() == before)
+    assert(first.nonEmpty)
+    assert(second == first)
   }
 }
