@@ -17,10 +17,10 @@ import org.apache.parquet.schema.LogicalTypeAnnotation.DateLogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.Type.Repetition
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.graftshim.Shims
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Driver-side answers from a parquet table's footers, so a read that
   * only needs the schema or a column's maximum starts no Spark job.
@@ -59,9 +59,11 @@ object ParquetFooters {
   private[graft] val MaxFooters = 1024
 
   /** A table's data files in Spark's inference order (sorted by path) and
-    * the lower-cased names of its partition columns.
+    * the names of its partition columns, in directory order.
     */
-  private case class Listing(files: Seq[FileStatus], partitionCols: Set[String])
+  private case class Listing(files: Seq[FileStatus], partitionCols: Seq[String]) {
+    def isPartitionCol(name: String): Boolean = partitionCols.exists(_.equalsIgnoreCase(name))
+  }
 
   private val summaryFiles =
     Set(ParquetFileWriter.PARQUET_METADATA_FILE, ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
@@ -76,8 +78,7 @@ object ParquetFooters {
       spark, Seq(qualified), glob.map("pathGlobFilter" -> _).toMap, None)
     val files = index.allFiles().sortBy(_.getPath.toString)
     if (files.isEmpty || files.exists(f => summaryFiles(f.getPath.getName))) None
-    else Some(Listing(files,
-      index.partitionSpec().partitionColumns.fieldNames.map(_.toLowerCase).toSet))
+    else Some(Listing(files, index.partitionSpec().partitionColumns.fieldNames.toSeq))
   }
 
   /** `f` over one call's files, in parallel on the global execution
@@ -104,7 +105,13 @@ object ParquetFooters {
     */
   def schema(
       spark: SparkSession, path: String, mergeSchema: Boolean,
-      glob: Option[String] = None): Option[StructType] = orDefer {
+      glob: Option[String] = None): Option[StructType] =
+    schemaAndPartitions(spark, path, mergeSchema, glob).map(_._1)
+
+  /** [[schema]] with the names of the partition columns the listing found. */
+  private def schemaAndPartitions(
+      spark: SparkSession, path: String, mergeSchema: Boolean,
+      glob: Option[String]): Option[(StructType, Seq[String])] = orDefer {
     list(spark, path, glob).flatMap { l =>
       val touched = if (mergeSchema) l.files else l.files.take(1)
       if (touched.size > MaxFooters) None
@@ -122,7 +129,7 @@ object ParquetFooters {
           .reduceLeft(Shims.merge(_, _, conf.caseSensitiveAnalysis))
         // a data column named like a partition column takes the partition
         // column's type in Spark's relation: leave that to Spark
-        Some(merged).filterNot(_.fieldNames.exists(n => l.partitionCols(n.toLowerCase)))
+        Some(merged -> l.partitionCols).filterNot(_._1.fieldNames.exists(l.isPartitionCol))
       }
     }
   }
@@ -132,17 +139,39 @@ object ParquetFooters {
     * session's `spark.sql.parquet.mergeSchema` decides, as in Spark) that
     * declares the footer schema instead of inferring it, or the inferring
     * read when [[schema]] defers.
+    *
+    * With `stringPartitions`, the read also declares every partition
+    * column as a string, so Spark parses its directory values without
+    * type inference (SPARK-26188): `month=09` reads "09", never 9. Where
+    * the footers defer, the inferring read's schema is declared again
+    * with its partition columns retyped, which starts no second job.
+    * The session conf is never touched, so concurrent readers on the
+    * same session see no change.
     */
   def read(
       spark: SparkSession, path: String, mergeSchema: Option[Boolean] = None,
-      glob: Option[String] = None): DataFrame = {
+      glob: Option[String] = None, stringPartitions: Boolean = false): DataFrame = {
     val reader = glob.foldLeft(spark.read)((r, g) => r.option("pathGlobFilter", g))
     val merge = mergeSchema.getOrElse(Shims.sqlConf(spark).isParquetSchemaMergingEnabled)
-    schema(spark, path, merge, glob) match {
-      case Some(s) => reader.schema(s).parquet(path)
-      case None => mergeSchema.foldLeft(reader)((r, m) => r.option("mergeSchema", m)).parquet(path)
+    schemaAndPartitions(spark, path, merge, glob) match {
+      case Some((s, parts)) =>
+        val declared = if (stringPartitions) parts.map(StructField(_, StringType)) else Nil
+        reader.schema(StructType(s.fields ++ declared)).parquet(path)
+      case None =>
+        val inferred = mergeSchema.foldLeft(reader)((r, m) => r.option("mergeSchema", m))
+          .parquet(path)
+        val parts = if (stringPartitions) partitionColumns(inferred).toSet else Set.empty[String]
+        if (parts.isEmpty) inferred
+        else reader.schema(StructType(inferred.schema.map(f =>
+          if (parts(f.name)) f.copy(dataType = StringType) else f))).parquet(path)
     }
   }
+
+  /** The partition columns of a file read's relation. */
+  private def partitionColumns(df: DataFrame): Seq[String] =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.partitionSchema.fieldNames.toSeq
+    }.getOrElse(Nil)
 
   // the Julian/Gregorian switch day: on and after it the calendars agree,
   // so no datetime rebase mode can change a stored value
@@ -158,7 +187,7 @@ object ParquetFooters {
   def maxDate(spark: SparkSession, path: String, column: String): Option[Option[LocalDate]] =
     orDefer {
       list(spark, path, None)
-        .filter(l => !l.partitionCols(column.toLowerCase) && l.files.size <= MaxFooters)
+        .filter(l => !l.isPartitionCol(column) && l.files.size <= MaxFooters)
         .flatMap { l =>
           val perFile = parMap(l.files)(f => fileMaxDay(footer(spark, f, rowGroups = true), column))
           if (perFile.contains(None)) None

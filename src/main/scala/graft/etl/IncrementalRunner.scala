@@ -16,12 +16,20 @@ import org.apache.spark.sql.functions._
   *    DEPLOYMENT.md §6.2 cron 06:10) — ArcGIS per-day fetches,
   *    INSERT IGNORE into the month-partitioned violations lake.
   *
-  * The reference staggers the two crons "to avoid concurrent DB load"
-  * (DEPLOYMENT.md §6.3); here the stagger survives as strict ordering
-  * inside one invocation — weather first, then violations — so the
-  * weather-joining queries (Qd/Qh) never see a violations day whose
-  * weather hasn't landed. Scheduling itself stays external (SURVEY §2.9
-  * ST6): cron/Airflow/EventBridge invoke `main` once a day.
+  * The reference staggers the two crons only "to avoid concurrent DB
+  * load" (DEPLOYMENT.md §6.3). A lake has no such load, so the two legs
+  * run at the same time: weather on a thread of its own, violations on
+  * the caller's. Each leg is bound by job dispatch rather than by cores,
+  * so a day costs its longer leg, not the sum of both.
+  *
+  * The contract: when `runDaily` returns, both legs have committed. The
+  * legs write disjoint tables and share no mutable session state. No
+  * order between them is promised (none held before either: a failed
+  * weather day never kept its violations day from landing, and the
+  * weather upsert's swap leaves the table absent for a moment), so a
+  * reader joining the two tables (Qd/Qh) reads after `runDaily` returns.
+  * Scheduling itself stays external (SURVEY §2.9 ST6): cron/Airflow/
+  * EventBridge invoke `main` once a day.
   *
   * Both legs run the full watermark loop (Incremental.run): MAX-date
   * probe, [watermark+1, yesterday] range, cold-start defaults, per-day
@@ -43,9 +51,17 @@ object IncrementalRunner {
       weather: Incremental.RunReport,
       violations: Incremental.RunReport)
 
-  /** One staggered daily run. `fetch*Day` produce the RAW-side frame for
-    * one date (already transformed to the sink schema); the runner owns
-    * watermarks, ranges, and sink semantics.
+  /** One daily run, both legs at once. `fetch*Day` produce the RAW-side
+    * frame for one date (already transformed to the sink schema); the
+    * runner owns watermarks, ranges, and sink semantics.
+    *
+    * The weather leg runs on a thread started for this call, so it
+    * inherits the caller's Spark local properties (job group,
+    * description, scheduler pool); a pooled thread would not. A leg that
+    * throws outside its per-day isolation does not stop the other one.
+    * `runDaily` returns or throws only once both legs have ended, so no
+    * job it started outlives it; it rethrows a leg's own exception (the
+    * weather leg's first, with the violations leg's suppressed in it).
     */
   def runDaily(
       spark: SparkSession,
@@ -56,20 +72,42 @@ object IncrementalRunner {
       backfillGaps: Boolean = false,
       weatherColdStart: LocalDate = WeatherColdStart,
       violationsColdStart: LocalDate = ViolationsColdStart): DailyReport = {
-    // weather first (06:00 before 06:10)
-    val w = Incremental.run(spark, weatherPath(base), "weather_date",
-      coldStart = weatherColdStart, today = today,
-      fetchDay = fetchWeatherDay,
-      sink = (df, _) => Sinks.upsert(spark, df, weatherPath(base),
-        keys = Seq("weather_date")),
-      backfillGaps = backfillGaps)
-    val v = Incremental.run(spark, violationsPath(base), "violation_date",
-      coldStart = violationsColdStart, today = today,
-      fetchDay = fetchViolationsDay,
-      sink = (df, _) => Sinks.insertIgnore(spark, df, violationsPath(base),
-        keys = Seq("violation_id"), partitionBy = Seq("month")),
-      backfillGaps = backfillGaps)
-    DailyReport(w, v)
+    var w: Either[Throwable, Incremental.RunReport] = null
+    val weather = new Thread(() => w = attempt(
+      Incremental.run(spark, weatherPath(base), "weather_date",
+        coldStart = weatherColdStart, today = today,
+        fetchDay = fetchWeatherDay,
+        sink = (df, _) => Sinks.upsert(spark, df, weatherPath(base),
+          keys = Seq("weather_date")),
+        backfillGaps = backfillGaps)), "graft-daily-weather")
+    weather.start()
+    val v = attempt(
+      Incremental.run(spark, violationsPath(base), "violation_date",
+        coldStart = violationsColdStart, today = today,
+        fetchDay = fetchViolationsDay,
+        sink = (df, _) => Sinks.insertIgnore(spark, df, violationsPath(base),
+          keys = Seq("violation_id"), partitionBy = Seq("month")),
+        backfillGaps = backfillGaps))
+    joinUninterruptibly(weather)
+    (w, v) match {
+      case (Right(wr), Right(vr)) => DailyReport(wr, vr)
+      case (Left(e), other) =>
+        other.left.foreach(o => if (o ne e) e.addSuppressed(o))
+        throw e
+      case (_, Left(e)) => throw e
+    }
+  }
+
+  private def attempt[A](body: => A): Either[Throwable, A] =
+    try Right(body) catch { case t: Throwable => Left(t) }
+
+  /** `t.join()` that an interrupt does not cut short; the caller's
+    * interrupt status is restored once `t` has ended.
+    */
+  private def joinUninterruptibly(t: Thread): Unit = {
+    var interrupted = false
+    while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread.interrupt()
   }
 
   /** Day-scoped ArcGIS fetch through the DSv2 source: the pushed

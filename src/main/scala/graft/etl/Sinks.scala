@@ -71,8 +71,8 @@ import org.apache.spark.sql.functions._
   * reads the lake's keys with the batch's key schema; every other
   * internal read ([[readRaw]]) declares the schema of the lake's parquet
   * footers, read on the driver by [[graft.ParquetFooters]] (with
-  * `mergeSchema`, their union). A lake past the footer reader's bounds is
-  * inferred by Spark as before.
+  * `mergeSchema`, their union), and its partition columns as strings. A
+  * lake past the footer reader's bounds is inferred by Spark as before.
   *
   * A corpus-scale batch merged into an EXISTING lake is the one shape
   * that still materializes the batch (a persist, spilling linearly to
@@ -85,32 +85,24 @@ object Sinks {
   private def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The sink's internal lake reads run with partition-column TYPE
-    * INFERENCE OFF: a numeric-looking string partition value ("09")
-    * would otherwise read back as int 9, and the next merge would write
+  /** The sink's internal lake reads declare every partition column a
+    * STRING: a numeric-looking partition value ("09") read with type
+    * inference would come back as int 9, and the next merge would write
     * its rows under a NEW directory (month=9) beside the stale original
-    * (month=09) — a silent fork of the partition. With inference off the
-    * value round-trips verbatim; union-by-name coercion still accepts an
-    * int-typed batch (string result, same directory names), so
-    * consumer-facing reads (which may infer freely) are unaffected.
+    * (month=09) — a silent fork of the partition. Declared, the value
+    * round-trips verbatim; union-by-name coercion still accepts an
+    * int-typed batch (string result, same directory names), and
+    * consumer-facing reads (which may infer freely) are unaffected. The
+    * declaration lives in the read's schema, not the session conf, so a
+    * concurrent reader of the session never sees inference switched off.
     *
     * The data schema (the first file's, or with `mergeSchema` the union
     * of every file's) comes from the footers on the driver
     * ([[graft.ParquetFooters]]), so the read starts no inference job; a
     * lake past the footer reader's bounds is inferred by Spark as before.
     */
-  private def readRaw(spark: SparkSession, path: String, mergeSchema: Boolean): DataFrame = {
-    val k = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prev = spark.conf.getOption(k)
-    spark.conf.set(k, "false")
-    // inference happens eagerly at relation resolution, so scoping the
-    // conf around the read call is sufficient
-    try graft.ParquetFooters.read(spark, path, Some(mergeSchema))
-    finally prev match {
-      case Some(v) => spark.conf.set(k, v)
-      case None => spark.conf.unset(k)
-    }
-  }
+  private def readRaw(spark: SparkSession, path: String, mergeSchema: Boolean): DataFrame =
+    graft.ParquetFooters.read(spark, path, Some(mergeSchema), stringPartitions = true)
 
   // mergeSchema: a lake written by batches whose schema evolved (new
   // columns appearing over time) reads as the union schema, older files

@@ -12,8 +12,9 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sql(q: String): org.apache.spark.sql.DataFrame = spark.sql(q)
 
-  /** Spark jobs `body` runs on this thread (its job group), counted by a
-    * listener once the bus has delivered every event.
+  /** Spark jobs `body` runs on this thread and on the threads it starts
+    * (they inherit its job group), counted by a listener once the bus has
+    * delivered every event.
     */
   def jobsOf[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext

@@ -3,9 +3,11 @@ package graft.etl
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.time.LocalDate
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.SparkException
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -168,9 +170,21 @@ class IncrementalRunnerSpec extends SparkSpec {
   test("daily job budget: one new day onto a warm lake") {
     val (base, fw, fv) = newJob()
     runDay(base, fw, fv, "2024-09-03") // warm: 09-01 and 09-02 land
-    val (r, jobs) = jobsOf(runDay(base, fw, fv, "2024-09-04"))
+    // the job group the weather leg's thread runs its jobs under
+    var weatherGroup: Option[String] = None
+    val groupFw = (d: LocalDate) => {
+      weatherGroup = Option(spark.sparkContext.getLocalProperty("spark.jobGroup.id"))
+      fw(d)
+    }
+    val ((r, group), jobs) = jobsOf((runDay(base, groupFw, fv, "2024-09-04"),
+      spark.sparkContext.getLocalProperty("spark.jobGroup.id")))
     assert(r.weather.loaded == Seq(ld("2024-09-03")))
     assert(r.violations.loaded == Seq(ld("2024-09-03")))
+    // the count covers both legs only if the weather thread inherited
+    // the caller's job group; without it the count drops to 3 and the
+    // budget below would pass on half a day
+    assert(group != null && weatherGroup.contains(group),
+      s"weather leg ran under group $weatherGroup, the caller under $group")
     // 6 jobs under SparkSpec's config (local[4], 4 shuffle partitions,
     // AQE on): the weather pull (1), its upsert (2) and the violations
     // insert-ignore (3). Both watermarks come from parquet footers and the
@@ -179,6 +193,40 @@ class IncrementalRunnerSpec extends SparkSpec {
     // statistics. A higher count means a sink call left its one-action
     // path or a lake read started inferring again.
     assert(jobs <= 6, s"jobs for one daily run: $jobs")
+  }
+
+  test("the weather and violations legs run at the same time") {
+    val (base, fw, fv) = newJob()
+    // the weather fetch waits for the violations fetch to start: run one
+    // after the other, the wait times out and the weather day fails
+    val violationsStarted = new CountDownLatch(1)
+    val waitingFw = (d: LocalDate) => {
+      if (!violationsStarted.await(60, TimeUnit.SECONDS))
+        sys.error("the violations leg did not start while the weather leg ran")
+      fw(d)
+    }
+    val signallingFv = (d: LocalDate) => { violationsStarted.countDown(); fv(d) }
+    val r = runDay(base, waitingFw, signallingFv, "2024-09-02")
+    assert(r.weather.failed.isEmpty, r.weather.failed)
+    assert(r.weather.loaded == Seq(ld("2024-09-01")))
+    assert(r.violations.loaded == Seq(ld("2024-09-01")))
+  }
+
+  test("a leg that throws outside its per-day isolation: the other leg lands, then it rethrows") {
+    val (base, fw, fv) = newJob()
+    // a corrupt file in the weather lake fails the weather watermark
+    // probe, before any day is fetched
+    val weatherLake = Files.createDirectories(
+      java.nio.file.Paths.get(IncrementalRunner.weatherPath(base)))
+    Files.write(weatherLake.resolve("part-00000-corrupt.parquet"),
+      "not a parquet file".getBytes(StandardCharsets.UTF_8))
+    val e = intercept[Exception](runDay(base, fw, fv, "2024-09-03"))
+    // the probe's own exception, not a wrapper from the leg's thread
+    assert(e.getClass == classOf[SparkException], e)
+    // the violations leg ran to its end before runDaily threw
+    assert(Incremental.watermark(spark,
+      IncrementalRunner.violationsPath(base), "violation_date").contains(ld("2024-09-02")))
+    assert(spark.read.parquet(IncrementalRunner.violationsPath(base)).count() == 6)
   }
 
   test("the weather leg pulls VisualCrossing once per day, over live HTTP") {

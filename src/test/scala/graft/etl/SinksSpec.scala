@@ -319,6 +319,40 @@ class SinksSpec extends SparkSpec {
     }
   }
 
+  test("numeric-looking partition strings round-trip where the footers defer to Spark") {
+    // a data column named like the partition column makes the footer
+    // reader defer to Spark's inferring read; the merge must still read
+    // month "09" as a string, or it writes month=9 beside month=09
+    val path = tmpDir()
+    batch(("a", 1.0, 0, "09")).write.parquet(s"$path/month=09")
+    assert(graft.ParquetFooters.schema(spark, path, mergeSchema = true).isEmpty)
+    Sinks.upsert(spark, batch(("a", 2.0, 1, "09"), ("b", 3.0, 1, "09")),
+      path, Seq("violation_id"), partitionBy = Seq("month"), tiebreak = Some("seq"))
+    val dirs = new java.io.File(path).listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+    assert(dirs == Set("month=09"), s"partition forked: $dirs")
+    assert(asMap(path) == Map("a" -> 2.0, "b" -> 3.0))
+  }
+
+  test("the sink's lake reads never flip the session conf a concurrent reader sees") {
+    // the partition declaration lives in the read's schema: a thread
+    // polling the session conf while partitioned upserts run beside it
+    // must never see partition type inference switched off
+    val k = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    val path = tmpDir()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val flipped = new java.util.concurrent.atomic.AtomicInteger(0)
+    val watcher = new Thread(() =>
+      while (!done.get) if (spark.conf.getOption(k).contains("false")) flipped.incrementAndGet())
+    watcher.start()
+    try (0 until 6).foreach(i =>
+      Sinks.upsert(spark, batch((s"v$i", i.toDouble, i, "09")),
+        path, Seq("violation_id"), partitionBy = Seq("month"), tiebreak = Some("seq")))
+    finally { done.set(true); watcher.join() }
+    assert(flipped.get == 0, s"the watcher saw $k = false ${flipped.get} times")
+    assert(asMap(path).size == 6)
+  }
+
   test("whole-table upsert refuses an O(history) rewrite past the size ceiling") {
     val path = tmpDir()
     Sinks.upsert(spark, batch(("a", 1.0, 0, "2024-09"), ("b", 2.0, 0, "2024-09")),
