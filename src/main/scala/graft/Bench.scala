@@ -37,31 +37,34 @@ import org.apache.spark.sql.execution.exchange.Exchange
   * compile-bound (`codegen_compiles`, `codegen_s`: the generated classes
   * the sample compiled and the janino seconds they took). Pointed at a
   * [[ProbeCorpus]] (`SPARK_GRAFT_SF_DIR=/tmp/docs10x`) the same run is the
-  * scale check ([[probeSplits]]).
+  * scale check ([[probeSplits]]). The timed loop ([[sample]]) is also the
+  * [[Sentinel]]'s.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val samples = sys.env.getOrElse("SPARK_GRAFT_BENCH_SAMPLES", "3").toInt.max(1)
-    // host health before the JVM warms anything: lets a reader of the
-    // emitted artifact tell box degradation from code regression without
-    // any external context (thresholds in HostProbe/BASELINE.md)
-    val boxPre = HostProbe.measure()
+    val stamp = box()
     val spark = Tables.localSession(cores = cpus.toInt, probeSplits = probeSplits(sfDir))
     // Optional args name a subset to bench (local iteration only; the
     // driver passes no args and benches everything).
-    run(spark, sfDir, samples, args.toSet) {
-      // host health again after the passes: a burst that arrived
-      // mid-sweep shows as pre-healthy/post-degraded (or vice versa).
-      // Measured after spark.stop() plus a short settle so the session's
-      // draining thread pools don't pollute the wakeup-latency reading
-      // (they inflate it ~7x; even settled, an in-JVM post reads somewhat
-      // above a cold probe — compare post against pre directionally, pre
-      // against the BASELINE.md thresholds absolutely).
+    run(spark, sfDir, samples, args.toSet)(stamp(spark))
+  }
+
+  /** Host health read now, before the JVM warms anything (thresholds in
+    * HostProbe/BASELINE.md), and the thunk both instruments call after their
+    * passes: it reads again after `spark.stop()` plus a settle (the
+    * session's draining pools inflate the wakeup latency ~7x; compare post
+    * against pre directionally, pre against the thresholds absolutely) and
+    * yields the `{"pre":…,"post":…}` object they print.
+    */
+  def box(): SparkSession => String = {
+    val pre = HostProbe.measure()
+    spark => {
       spark.stop()
       Thread.sleep(1000)
-      s"""{"pre":${boxPre.json},"post":${HostProbe.measure().json}}"""
+      s"""{"pre":${pre.json},"post":${HostProbe.measure().json}}"""
     }
   }
 
@@ -78,84 +81,23 @@ object Bench {
   }
 
   /** Bench the queries named in `only` (all when empty) on `spark`:
-    * `samples` full passes with one `[layers]` row per sample on stderr,
-    * then the two stdout lines, with per-query ratios against the anchors
-    * file `anchorsPath` when it was taken at `sfDir`. `box` runs after the
+    * `samples` full passes of the [[sample]] loop in name order, then the
+    * two stdout lines, with per-query ratios against the anchors file
+    * `anchorsPath` when it was taken at `sfDir`. `box` runs after the
     * passes and yields the host-health JSON object both lines carry.
     */
   def run(spark: SparkSession, sfDir: String, samples: Int, only: Set[String],
       anchorsPath: String = sys.env.getOrElse("SPARK_GRAFT_ANCHORS", "anchors.json"))
       (box: => String): Unit = {
-    warmup(spark, sfDir)
-    val sc = spark.sparkContext
-    val layers = new Layers
-    sc.addSparkListener(layers)
-    // the warmup's events must not land in the first sample's row
-    ListenerBusDrain(sc)
-    layers.reset()
-
-    // A failing query must read as a failure, not as a fast success: its
-    // time is reported as -1 and it is excluded from the totals. Cached
-    // intermediates (sketch/similarity persists) are cleared after each
-    // sample so cache occupancy doesn't grow across the run and every
-    // sample pays the same cold-cache cost.
-    //
-    // The timed action is Fold: every output value folds into one row,
-    // never count() (see Fold for why). anchors.json carries the metric
-    // in its "action" field; "count"-action anchors are NOT comparable
-    // per-query.
-    def sampleOnce(name: String, sample: Int,
-        fn: (SparkSession, String) => DataFrame): Double = {
-      val row = Json.createObjectNode().put("query", name).put("sample", sample)
-      val (compiles0, compileNs0) = codegen()
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          val raw = fn(spark, sfDir)
-          row.put("build_s", (System.nanoTime() - t0) / 1e9)
-          // jobs started from here on are the fold's; every job before
-          // this ran eagerly inside the build
-          sc.setLocalProperty(PhaseKey, "fold")
-          try {
-            val folded = Fold.frame(raw)
-            row.put("exchanges", exchanges(folded.queryExecution.executedPlan))
-            val r = folded.collect()(0)
-            // the fold's bit_xor: two runs computed the same output iff
-            // rows and digest agree (up to a hash collision)
-            row.put("rows", r.getLong(0)).put("digest", r.getLong(1))
-          } finally sc.setLocalProperty(PhaseKey, null)
-          true
-        }
-        catch { case e: Throwable =>
-          Console.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-      val elapsed = (System.nanoTime() - t0) / 1e9 // before cache teardown
-      spark.catalog.clearCache()
-      CacheScope.drain(spark) // clearCache freed the data; drop the plan refs too
-      // outside the timed region: wait until the sample's events landed
-      ListenerBusDrain(sc)
-      val (compiles1, compileNs1) = codegen()
-      layers.drainInto(row.put("ok", ok).put("wall_s", elapsed)
-        .put("codegen_compiles", compiles1 - compiles0)
-        .put("codegen_s", (compileNs1 - compileNs0) / 1e9))
-      Console.err.println("[layers] " + Json.writeValueAsString(row))
-      if (ok) elapsed else -1.0
-    }
-    // full passes over the query list (not N back-to-back runs of one
-    // query) so a load burst degrades one PASS, not one query's samples.
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
-    val passes =
-      try (1 to samples).map { s =>
-        names.map { case (name, fn) => name -> sampleOnce(name, s, fn) }.toMap
-      } finally sc.removeSparkListener(layers)
+    val passes = sample(spark, sfDir, samples, names)
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
     val results = names.map { case (name, _) =>
-      val xs = passes.map(_(name))
+      val xs = passes.map(_(name).secs)
       if (xs.exists(_ < 0)) (name, -1.0, -1.0)
       else (name, median(xs), xs.min)
     }
@@ -254,14 +196,81 @@ object Bench {
     println(summary)
   }
 
+  /** A sample's wall seconds and fold row count; both -1 when it threw. */
+  final case class Sample(secs: Double, rows: Long)
+
+  /** The timed loop of Bench and the Sentinel: after the [[warmup]],
+    * `passes` full passes over `builds` in order (so a load burst degrades
+    * one pass, not one build's samples). A sample times the build, then
+    * [[Fold]] — never count(); anchors.json's "action" names the metric —
+    * prints its `[layers]` row on stderr ([[Layers]]) and drains the cache,
+    * so every sample pays the same cold-cache cost. A build or fold that
+    * throws reads as a failure (-1), not as a fast success.
+    */
+  def sample(spark: SparkSession, sfDir: String, passes: Int,
+      builds: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[Map[String, Sample]] = {
+    warmup(spark, sfDir)
+    val sc = spark.sparkContext
+    val layers = new Layers
+    sc.addSparkListener(layers)
+    // the warmup's events must not land in the first sample's row
+    ListenerBusDrain(sc)
+    layers.reset()
+
+    def sampleOnce(name: String, pass: Int, fn: (SparkSession, String) => DataFrame): Sample = {
+      val row = Json.createObjectNode().put("query", name).put("sample", pass)
+      val (compiles0, compileNs0) = codegen()
+      val t0 = System.nanoTime()
+      val rows =
+        try {
+          val raw = fn(spark, sfDir)
+          row.put("build_s", (System.nanoTime() - t0) / 1e9)
+          // jobs started from here on are the fold's; every job before
+          // this ran eagerly inside the build
+          sc.setLocalProperty(PhaseKey, "fold")
+          try {
+            val folded = Fold.frame(raw)
+            row.put("exchanges", exchanges(folded.queryExecution.executedPlan))
+            val r = folded.collect()(0)
+            // the fold's bit_xor: two runs computed the same output iff
+            // rows and digest agree (up to a hash collision)
+            row.put("rows", r.getLong(0)).put("digest", r.getLong(1))
+            r.getLong(0)
+          } finally sc.setLocalProperty(PhaseKey, null)
+        }
+        catch { case e: Throwable =>
+          Console.err.println(s"[bench] $name failed: ${e.getMessage}")
+          -1L
+        }
+      val elapsed = (System.nanoTime() - t0) / 1e9 // before cache teardown
+      spark.catalog.clearCache()
+      CacheScope.drain(spark) // clearCache freed the data; drop the plan refs too
+      // outside the timed region: wait until the sample's events landed
+      ListenerBusDrain(sc)
+      val (compiles1, compileNs1) = codegen()
+      layers.drainInto(row.put("ok", rows >= 0).put("wall_s", elapsed)
+        .put("codegen_compiles", compiles1 - compiles0)
+        .put("codegen_s", (compileNs1 - compileNs0) / 1e9))
+      Console.err.println("[layers] " + Json.writeValueAsString(row))
+      Sample(if (rows >= 0) elapsed else -1.0, rows)
+    }
+    try (1 to passes).map { p =>
+      builds.map { case (name, fn) => name -> sampleOnce(name, p, fn) }.toMap
+    } finally sc.removeSparkListener(layers)
+  }
+
   /** JVM + codegen + parquet reader paths, so startup doesn't land on
-    * whichever query happens to be timed first.
+    * whichever build happens to be timed first. A corpus without `nation`
+    * (the Sentinel's, built with only the tables its ops read) warms with
+    * `documents`, which every gate tier builds.
     */
   private def warmup(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    Tables.nation(spark, sfDir).count()
-    SparkEntry.queries.get("qd_join_filter_count")
-      .foreach(q => q(spark, sfDir).count())
+    if (new java.io.File(s"$sfDir/nation.parquet").exists()) {
+      Tables.nation(spark, sfDir).count()
+      SparkEntry.queries.get("qd_join_filter_count")
+        .foreach(q => q(spark, sfDir).count())
+    } else Tables.documents(spark, sfDir).count()
   }
 
   private val Json = new ObjectMapper()

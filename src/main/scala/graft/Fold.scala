@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The timed action every instrument runs: fold EVERY output value into
-  * one row of (rows, bit_xor of xxhash64 over each row), as one aggregate
-  * and so one job.
+/** The timed action every instrument runs ([[Bench.sample]], the loop of
+  * Bench and the Sentinel): fold EVERY output value into one row of (rows,
+  * bit_xor of xxhash64 over each row), as one aggregate and so one job.
   *
   * Not count(): under count() Catalyst legitimately prunes all columns and
   * eliminates unique-key joins, so a projection-shaped query (pii_redact,

@@ -3,7 +3,9 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Standing scale-regression gate (VERDICT r10 item 1; tiers r11 item 5).
@@ -37,8 +39,16 @@ import org.apache.spark.sql.functions._
   *
   * The corpus (default per tier) is regenerated via [[ProbeCorpus]]
   * if missing — only the tables the tier's ops read, so a wiped /tmp
-  * costs one rebuild, not a lost gate. Cache is fully dropped between
-  * ops (same hygiene as Bench).
+  * costs one rebuild, not a lost gate.
+  *
+  * The timed action is Bench's: each op is a builder like a
+  * [[SparkEntry.queries]] entry, and one pass of [[Bench.sample]] times
+  * its build plus [[Fold]] of every output value (not count(), which
+  * Catalyst prunes to a bare scan), prints its `[layers]` row on stderr
+  * (exchanges, stages, shuffle, spill, max task) and drains the cache. A
+  * gated second and row count is that sample's `wall_s` and `rows`. Only
+  * incremental_daily has setup, its standing index, which runs before the
+  * pass, outside the timed region.
   */
 object Sentinel {
 
@@ -63,79 +73,136 @@ object Sentinel {
       "- BASELINE.md - and every regression this gate exists for " +
       "measured 3-10x). On a breach, re-run once to rule out an extreme burst."
 
-  /** An op returns (rows, optional self-timed seconds). Self-timing is
-    * for ops with untimed SETUP (the incremental index build is the
-    * one-time cost; the gate watches the steady-state daily path).
+  /** The gated ops in registry order: builders over the corpus, like
+    * [[SparkEntry.queries]]. `baseDir` holds the constant benchmark the
+    * decontamination ops read; `lake` is incremental_daily's
+    * [[standingIndex]].
     */
-  private type Op = (SparkSession, String, String) => (Long, Option[Double])
-  private def timed(f: (SparkSession, String, String) => Long): Op =
-    (s, d, b) => (f(s, d, b), None)
-
-  private[graft] val ops: Seq[(String, Op)] = Seq(
-    "dedup_simhash" -> timed((s, d, _) =>
-      queries.SketchDedupQueries.qDedupSimhash(s, d).count()),
-    "dedup_minhash_lsh" -> timed((s, d, _) =>
-      queries.SketchDedupQueries.qDedupMinhashLsh(s, d).count()),
-    "dedup_components" -> timed((s, d, _) =>
-      queries.SketchDedupQueries.qDedupComponents(s, d).count()),
+  private[graft] def ops(baseDir: String, lake: String)
+      : Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "dedup_simhash" -> queries.SketchDedupQueries.qDedupSimhash,
+    "dedup_minhash_lsh" -> queries.SketchDedupQueries.qDedupMinhashLsh,
+    "dedup_components" -> queries.SketchDedupQueries.qDedupComponents,
     // the documented recommended path for trio users: three frames over
     // ONE shared signature pass + component resolution. The shared-pass
     // plan shape (one CacheScope persist feeding three frames) is
     // exactly what a refactor can silently break — gate the whole trio
-    // as one receipt (VERDICT r12 item 5).
-    "dedup_group_bundle" -> timed((s, d, _) => {
+    // as one receipt (VERDICT r12 item 5): one frame of all three
+    // frames' rows, each row as its JSON
+    "dedup_group_bundle" -> ((s, d) => {
       val frames = queries.SketchDedupQueries.dedupGroupBundle(s, d)
-      // consume in the documented order; all three must materialize
-      frames("components").count() + frames("apply").count() +
-        frames("cluster_stats").count()
+      Seq("components", "apply", "cluster_stats")
+        .map(frames(_).select(to_json(struct(col("*"))).as("row")))
+        .reduce(_ union _)
     }),
-    "semdedup" -> timed((s, d, _) =>
-      queries.SimilarityQueries.qSemDedup(s, d).count()),
-    "phash_neardup" -> timed((s, d, _) =>
-      queries.MultimodalQueries.qPhashNeardup(s, d).count()),
-    "er_clusters" -> timed((s, d, _) =>
-      queries.CurationQueries.qErClusters(s, d).count()),
+    "semdedup" -> queries.SimilarityQueries.qSemDedup,
+    "phash_neardup" -> queries.MultimodalQueries.qPhashNeardup,
+    "er_clusters" -> queries.CurationQueries.qErClusters,
     // production decontamination shape: CONSTANT benchmark (an eval
     // suite does not grow with the corpus), broadcast strategy
-    "decontaminate_const" -> timed((s, d, b) =>
+    "decontaminate_const" -> ((s, d) =>
       pipeline.CorpusPipeline(Tables.documents(s, d))
-        .decontaminate(Tables.documents(s, b).filter(col("doc_id") % 97 === 0))
-        .df.count()),
-    // projection-shaped: fold, or Catalyst times a bare scan
-    "exact_substr" -> timed((s, d, _) =>
-      Fold.digest(queries.CorpusOpsQueries.qExactSubstr(s, d)
-        .select(col("clean_hash")))._1),
+        .decontaminate(Tables.documents(s, baseDir).filter(col("doc_id") % 97 === 0))
+        .df),
+    "exact_substr" -> ((s, d) =>
+      queries.CorpusOpsQueries.qExactSubstr(s, d).select(col("clean_hash"))),
     // the per-token trio, collapse-carrying since round 11
-    "langid_nb" -> timed((s, d, _) =>
-      queries.TextQueries.qLangIdNb(s, d).count()),
-    "lm_quality" -> timed((s, d, _) =>
-      queries.TextQueries.qLmQuality(s, d).count()),
-    "perplexity" -> timed((s, d, _) =>
-      queries.CurationQueries.qPerplexity(s, d).count()),
-    "pipeline_composed" -> timed((s, d, b) =>
-      Fold.digest(pipeline.CorpusPipeline.composedChain(s, d, b))._1),
-    // steady-state daily dedup: standing index build is SETUP (untimed);
-    // the gate watches one day's batch (signatures → upsert → pairs)
-    "incremental_daily" -> ((s, d, b) => {
+    "langid_nb" -> queries.TextQueries.qLangIdNb,
+    "lm_quality" -> queries.TextQueries.qLmQuality,
+    "perplexity" -> queries.CurationQueries.qPerplexity,
+    "pipeline_composed" -> ((s, d) =>
+      pipeline.CorpusPipeline.composedChain(s, d, baseDir)),
+    // steady-state daily dedup: one day's batch (signatures → upsert →
+    // pairs) onto the standing index built before the timed region
+    "incremental_daily" -> ((s, d) => {
       import queries.IncrementalDedupQueries._
-      val docs = Tables.documents(s, d)
-      val isBase = col("doc_id") < 10000000L
-      val batchPred = isBase && col("doc_id") % 5 === 4
-      val lake = java.nio.file.Files.createTempDirectory("sentinel-inc")
-        .resolve("sig").toString
-      updateIndex(s, signatures(docs.filter(!batchPred)), lake,
-        ingestDate = Some("2026-08-12"))
-      val t0 = System.nanoTime()
-      val sigs = signatures(docs.filter(batchPred)).persist()
+      val sigs = signatures(Tables.documents(s, d).filter(DailyBatch)).persist()
       updateIndex(s, sigs, lake, ingestDate = Some("2026-08-13"))
-      val nPairs = pairsForBatchSigs(s.read.parquet(lake), sigs).count()
-      val daySecs = (System.nanoTime() - t0) / 1e9
-      sigs.unpersist()
-      etl.LakeFs.deleteRecursively(s,
-        new org.apache.hadoop.fs.Path(lake).getParent)
-      (nPairs, Some(daySecs))
+      pairsForBatchSigs(s.read.parquet(lake), sigs)
     })
   )
+
+  /** The registry's op names, in order. */
+  private[graft] val opNames: Seq[String] = ops(baseDir = "", lake = "").map(_._1)
+
+  /** incremental_daily's batch: every fifth document of the base copy. */
+  private val DailyBatch = col("doc_id") < 10000000L && col("doc_id") % 5 === 4
+
+  /** incremental_daily's setup: the standing signature index over every
+    * other document of `corpus`, in a fresh scratch lake whose path it
+    * returns. It is the one-time cost, so [[gate]] runs it outside the
+    * timed region (the gate watches the steady-state daily path).
+    */
+  private[graft] def standingIndex(spark: SparkSession, corpus: String): String = {
+    import queries.IncrementalDedupQueries._
+    val lake = java.nio.file.Files.createTempDirectory("sentinel-inc")
+      .resolve("sig").toString
+    updateIndex(spark, signatures(Tables.documents(spark, corpus).filter(!DailyBatch)),
+      lake, ingestDate = Some("2026-08-12"))
+    lake
+  }
+
+  /** Each op's sample and status: `ok` or `BREACH` against its ceiling,
+    * `recorded` without one, `FAILED` when its build or fold threw.
+    */
+  private[graft] final case class Verdict(results: Seq[(String, Bench.Sample, String)]) {
+    def failed: Seq[String] = results.collect { case (n, _, "FAILED") => n }
+    def passed: Boolean = results.forall(r => r._3 == "ok" || r._3 == "recorded")
+  }
+
+  /** Time the ops named in `names` on `spark` against `corpus` (a
+    * [[ProbeCorpus]]): one pass of [[Bench.sample]] in registry order, so
+    * each op prints its `[layers]` row, then one `[sentinel]` line per op.
+    * A failed op reads -1 and fails the gate, never as a fast pass.
+    * incremental_daily's [[standingIndex]] is built before the pass, only
+    * when that op is named, and deleted after it.
+    */
+  private[graft] def gate(spark: SparkSession, corpus: String, baseDir: String,
+      names: Seq[String], ceilings: Map[String, Double]): Verdict = {
+    // layout invariant: no receipt is recorded or gated against a corpus
+    // whose scans would run effectively serial (round-12 instrument bug)
+    require(Bench.probeSplits(corpus), s"$corpus is not a ProbeCorpus layout")
+    val lake = if (names.contains("incremental_daily")) Some(standingIndex(spark, corpus)) else None
+    val builds = ops(baseDir, lake.getOrElse("")).filter { case (n, _) => names.contains(n) }
+    val pass =
+      try Bench.sample(spark, corpus, 1, builds).head
+      finally lake.foreach(l =>
+        etl.LakeFs.deleteRecursively(spark, new org.apache.hadoop.fs.Path(l).getParent))
+    Verdict(builds.map { case (name, _) =>
+      val s = pass(name)
+      val status =
+        if (s.secs < 0) "FAILED"
+        else ceilings.get(name) match {
+          case Some(c) if s.secs > c => "BREACH"
+          case Some(_) => "ok"
+          case None => "recorded"
+        }
+      println(f"[sentinel] $name%-20s ${s.secs}%8.2f s   rows=${s.rows}%-10d $status")
+      (name, s, status)
+    })
+  }
+
+  /** `root` (a parsed sentinels.json, or an empty object) with `tier`'s
+    * node replaced by the verdict's receipts, ceilings at the
+    * [[CeilingMultiplier]] policy. A failed op has no receipt, so a run
+    * with one is refused.
+    */
+  private[graft] def recordTier(root: ObjectNode, tier: Tier, corpus: String,
+      baseDir: String, v: Verdict): ObjectNode = {
+    require(v.failed.isEmpty, s"--record refuses a run with failed ops: ${v.failed.mkString(", ")}")
+    // the 100x tier keeps its historical top-level layout
+    val node = if (tier.name == "100x") root else root.putObject(s"tier_${tier.name}")
+    val opsNode = node.put("corpus", corpus).put("built_from", baseDir)
+      .put("copies", tier.copies).put("note", note(tier.name)).putObject("ops")
+    v.results.foreach { case (n, s, _) =>
+      // ceiling derives from the ROUNDED receipt — the value the file
+      // stores and SentinelConfigSpec re-derives the policy from
+      val receipt = math.rint(s.secs * 10) / 10
+      opsNode.putObject(n).put("receipt_sec", receipt)
+        .put("ceiling_sec", ceilingFor(receipt)).put("rows", s.rows)
+    }
+    root
+  }
 
   /** A gate tier: which corpus, which ops, which sentinels.json node.
     * The 100x tier keeps its historical top-level layout ("ops" plus
@@ -151,7 +218,7 @@ object Sentinel {
 
   private[graft] val Tiers: Map[String, Tier] = Map(
     "100x" -> Tier("100x", "/tmp/docs100x", 100,
-      Set("documents", "embeddings", "customer"), ops.map(_._1)),
+      Set("documents", "embeddings", "customer"), opNames),
     // the document-only §10.17 ledger ops: per-commit they'd be too slow
     // (incremental_daily's untimed index build alone is ~4 min at 1000×);
     // run before a release or after changing a gated plan shape
@@ -215,30 +282,8 @@ object Sentinel {
     // host health BEFORE the Spark JVM warms anything, like Bench's pre:
     // a breach line that carries pre ctx_switch_us over the BASELINE.md
     // threshold is a box reading, not an op regression — the artifact
-    // says so itself. (Measured pre-session so the cold-probe absolute
-    // thresholds apply; an in-session probe reads high from the
-    // session's own thread pools.)
-    val boxPre = HostProbe.measure()
-
-    // --ops names must resolve to gated ops of THIS tier: a typo (or an
-    // op with no recorded ceiling) would otherwise filter the run to
-    // zero ops and exit 0 — a clean gate for an op that never ran
-    onlyOps.foreach { sel =>
-      val unknown = sel.filterNot(tier.opNames.contains)
-      require(unknown.isEmpty,
-        s"--ops names not in tier ${tier.name}: ${unknown.mkString(", ")} " +
-          s"(tier ops: ${tier.opNames.mkString(", ")})")
-    }
-
-    val spark = Tables.localSession(cores = 32, probeSplits = true)
-    if (!new java.io.File(s"$corpus/documents.parquet").exists()) {
-      println(s"[sentinel] corpus $corpus missing — regenerating ${tier.copies}x from $baseDir")
-      ProbeCorpus.build(spark, baseDir, corpus, copies = tier.copies,
-        onlyTables = Some(tier.tables))
-    }
-    // layout invariant: no receipt is recorded or gated against a corpus
-    // whose scans would run effectively serial (round-12 instrument bug)
-    ProbeCorpus.assertScanParallel(corpus)
+    // says so itself
+    val stamp = Bench.box()
 
     // ceilings from sentinels.json (gate mode)
     val ceilings: Map[String, Double] =
@@ -250,55 +295,29 @@ object Sentinel {
         val o = tierOpsNode(mapper.readTree(f), tier.name)
         require(o != null, s"no recorded receipts for tier ${tier.name} in " +
           s"$sentinelsPath (run with --tier ${tier.name} --record first)")
-        val it = o.fieldNames()
-        val b = Map.newBuilder[String, Double]
-        while (it.hasNext) {
-          val n = it.next()
-          b += n -> o.get(n).get("ceiling_sec").asDouble()
-        }
-        b.result()
+        o.properties().asScala.map(e => e.getKey -> e.getValue.get("ceiling_sec").asDouble()).toMap
       }
-
-    // warmup: JVM + codegen + parquet reader, same spirit as Bench
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    Tables.documents(spark, corpus).count()
-
-    var breaches = List.empty[(String, Double, Double)]
-    val tierOps = ops.filter { case (n, _) =>
-      tier.opNames.contains(n) && onlyOps.forall(_(n)) }
-    // in gate mode every selected op must actually gate: an --ops name
-    // whose ceiling is missing from sentinels.json would silently drop
-    // out of `results` below and read as a pass
+    // gate mode gates the tier's ops that have a ceiling. --ops names must
+    // be among them: a typo (or an op with no recorded ceiling) would
+    // otherwise drop out of the run and exit 0 — a clean gate for an op
+    // that never ran
+    val gated = tier.opNames.filter(n => record || ceilings.contains(n))
     onlyOps.foreach { sel =>
-      val ungated = sel.filterNot(n => record || ceilings.contains(n))
-      require(ungated.isEmpty,
-        s"--ops names have no recorded ceiling for tier ${tier.name}: " +
-          s"${ungated.mkString(", ")} (record the tier first)")
+      val unknown = sel.filterNot(gated.contains)
+      require(unknown.isEmpty,
+        s"--ops names not gated in tier ${tier.name}: ${unknown.mkString(", ")} " +
+          s"(gated ops: ${gated.mkString(", ")})")
     }
-    val results = tierOps
-      .filter { case (n, _) => record || ceilings.contains(n) }
-      .map { case (name, op) =>
-        val t0 = System.nanoTime()
-        val (rows, selfTimed) = op(spark, corpus, baseDir)
-        val secs = selfTimed.getOrElse((System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache()
-        CacheScope.drain(spark)
-        val status = ceilings.get(name) match {
-          case Some(c) if secs > c => breaches ::= (name, secs, c); "BREACH"
-          case Some(_) => "ok"
-          case None => "recorded"
-        }
-        println(f"[sentinel] $name%-20s $secs%8.2f s   rows=$rows%-10d $status")
-        (name, secs, rows)
-      }
 
-    // post reading after spark.stop() plus a short settle so the
-    // session's draining thread pools don't pollute the wakeup-latency
-    // number (~7x inflation unsettled; see Bench for the read rule)
-    spark.stop()
-    Thread.sleep(1000)
-    val boxPost = HostProbe.measure()
-    println(s"[sentinel] box pre=${boxPre.json} post=${boxPost.json}")
+    val spark = Tables.localSession(cores = 32, probeSplits = true)
+    if (!new java.io.File(s"$corpus/documents.parquet").exists()) {
+      println(s"[sentinel] corpus $corpus missing — regenerating ${tier.copies}x from $baseDir")
+      ProbeCorpus.build(spark, baseDir, corpus, copies = tier.copies,
+        onlyTables = Some(tier.tables))
+    }
+    val verdict = gate(spark, corpus, baseDir, gated.filter(n => onlyOps.forall(_(n))), ceilings)
+    val box = stamp(spark)
+    println(s"[sentinel] box $box")
 
     if (record) {
       // merge fresh receipts for THIS TIER into the existing file and
@@ -307,38 +326,15 @@ object Sentinel {
       val root: ObjectNode =
         if (f.isFile) mapper.readTree(f).asInstanceOf[ObjectNode]
         else mapper.createObjectNode()
-      val opsNode = mapper.createObjectNode()
-      results.foreach { case (n, s, r) =>
-        val o = opsNode.putObject(n)
-        // ceiling derives from the ROUNDED receipt — the value the file
-        // stores and SentinelConfigSpec re-derives the policy from
-        val receipt = math.rint(s * 10) / 10
-        o.put("receipt_sec", receipt)
-        o.put("ceiling_sec", ceilingFor(receipt))
-        o.put("rows", r)
-      }
-      if (tier.name == "100x") {
-        root.put("corpus", corpus)
-        root.put("built_from", baseDir)
-        root.put("copies", tier.copies)
-        root.put("note", note(tier.name))
-        root.set[ObjectNode]("ops", opsNode)
-      } else {
-        val t = mapper.createObjectNode()
-        t.put("corpus", corpus)
-        t.put("built_from", baseDir)
-        t.put("copies", tier.copies)
-        t.put("note", note(tier.name))
-        t.set[ObjectNode]("ops", opsNode)
-        root.set[ObjectNode](s"tier_${tier.name}", t)
-      }
-      println(mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
+      println(mapper.writerWithDefaultPrettyPrinter().writeValueAsString(
+        recordTier(root, tier, corpus, baseDir, verdict)))
     } else {
-      val summary = breaches.map { case (n, s, c) =>
-        f""""$n": {"sec": $s%.1f, "ceiling_sec": $c%.1f}""" }
+      val breaches = verdict.results.collect { case (n, s, "BREACH") =>
+        f""""$n": {"sec": ${s.secs}%.1f, "ceiling_sec": ${ceilings(n)}%.1f}""" }
         .mkString("{", ",", "}")
-      println(s"""{"sentinel":1,"tier":"${tier.name}","corpus":"$corpus","n_ops":${results.size},"n_breach":${breaches.size},"breaches":$summary,"box":{"pre":${boxPre.json},"post":${boxPost.json}}}""")
+      val failed = verdict.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+      println(s"""{"sentinel":1,"tier":"${tier.name}","corpus":"$corpus","n_ops":${verdict.results.size},"n_breach":${verdict.results.count(_._3 == "BREACH")},"breaches":$breaches,"failed":$failed,"box":$box}""")
     }
-    if (breaches.nonEmpty) sys.exit(1)
+    if (!verdict.passed) sys.exit(1)
   }
 }

@@ -33,11 +33,10 @@ object Tables {
     * (double division would lose precision on ~1.7e18 nano values).
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(spark, dir, "events")
     raw.schema("ts").dataType match {
       // driver testdata: TIMESTAMP(NANOS), surfaced as a long under the
-      // legacy conf — integer-divide to micros
+      // legacy conf ([[FixedSettings]]) — integer-divide to micros
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts",
           org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
@@ -54,7 +53,6 @@ object Tables {
     * conf; micros-timestamp corpora convert (value-preserving, UTC).
     */
   def eventsNanos(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(spark, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => raw
@@ -131,6 +129,11 @@ object Tables {
     *   without this line the two codegen settings raised `queries_dedup`
     *   peak RSS 2342 → 2551 MB; with it the three together read 2378 →
     *   2080 MB (`etl_daily` 2110 → 1798 MB; perfbench medians, 4 cores).
+    * - `spark.sql.legacy.parquet.nanosAsLong=true`: the driver testdata's
+    *   `events.ts` is parquet TIMESTAMP(NANOS), which Spark reads only as
+    *   a raw long under this flag ([[events]], [[eventsNanos]], the
+    *   streaming sources). Set here, once, rather than by each read, so
+    *   no query's result depends on which read ran first on the session.
     */
   val FixedSettings: Seq[(String, String)] = Seq(
     "spark.sql.adaptive.enabled" -> "true",
@@ -139,7 +142,8 @@ object Tables {
     "spark.ui.enabled" -> "false",
     "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
     "spark.sql.artifact.isolation.enabled" -> "false",
-    "spark.broadcast.blockSize" -> "256k")
+    "spark.broadcast.blockSize" -> "256k",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   /** A builder with [[FixedSettings]] on `master`, with `partitions`
     * shuffle partitions.

@@ -119,12 +119,11 @@ object IncrementalRunner {
   def fetchViolationsViaSource(
       spark: SparkSession, readerOpts: Map[String, String])(
       d: LocalDate): DataFrame = {
-    val lo = d.atStartOfDay(ZoneOffset.UTC).toInstant.toEpochMilli
-    val hi = d.plusDays(1).atStartOfDay(ZoneOffset.UTC).toInstant.toEpochMilli
+    val (lo, hi) = LayerRouting.dayToMsRange(d)
     val raw = spark.read.format("arcgis").options(readerOpts).load()
       .filter(col("ISSUE_DATE") >= lo && col("ISSUE_DATE") < hi)
     Transforms.violationsFromArcGis(raw, useSyntheticId = true,
-      monthOfRecord = Some(d.toString.substring(0, 7)))
+      monthOfRecord = Some(LayerRouting.monthKey(d)))
   }
 
   /** Single-day VisualCrossing pull (the reference's

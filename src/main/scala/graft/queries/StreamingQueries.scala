@@ -19,36 +19,26 @@ import graft.streaming.MemoryDrain
   */
 object StreamingQueries {
 
-  /** Runs `f` with scoped session confs, restoring (or unsetting) each
-    * key afterwards — no global conf mutation survives a query call.
-    *
-    * Every streaming query here scopes two confs:
-    *  - `spark.sql.shuffle.partitions` (a HARNESS knob, not a semantic
-    *    one): streaming state is partitioned by the setting at query
-    *    start, and a per-core value (32) means 32 state stores + 32 sink
-    *    tasks for tables this size — pure overhead. Results are
-    *    partition-count independent (counts + decimal-routed sums), so
-    *    the fixed 8 is a sizing choice for these tables, not a semantic one.
-    *  - `spark.sql.legacy.parquet.nanosAsLong`: the events fixture is
-    *    TIMESTAMP(NANOS), which Spark only reads as raw longs with this
-    *    flag; scoped so a caller's session is not left in legacy mode.
+  /** Runs `f` with `spark.sql.shuffle.partitions` at 8, restoring (or
+    * unsetting) it afterwards. A HARNESS knob, not a semantic one:
+    * streaming state is partitioned by the setting at query start, and a
+    * per-core value (32) means 32 state stores + 32 sink tasks for tables
+    * this size — pure overhead. Results are partition-count independent
+    * (counts + decimal-routed sums), so the fixed 8 is a sizing choice for
+    * these tables, not a semantic one. The state store is Spark's default
+    * (HDFS-backed, in-memory) provider: RocksDB measured 1.07x slower
+    * across the 12 streaming queries at these state sizes
+    * (OPTIMIZATION_r16.md).
     */
-  private def withScopedConf[A](spark: SparkSession, kvs: (String, String)*)(f: => A): A = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+  private def withStreamConfs[A](spark: SparkSession)(f: => A): A = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "8")
+    try f finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
     }
   }
-
-  private def withStreamConfs[A](spark: SparkSession)(f: => A): A =
-    withScopedConf(spark,
-      "spark.sql.shuffle.partitions" -> "8",
-      // the state store is Spark's default (HDFS-backed, in-memory)
-      // provider: RocksDB measured 1.07x slower across the 12 streaming
-      // queries at these state sizes (OPTIMIZATION_r16.md)
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true")(f)
 
   /** Where the table `glob` names under `dir` is read from: the path and
     * the reader options that narrow it. A directory table (a Spark-written

@@ -66,7 +66,6 @@ object Sessionize {
       gapMinutes: Int = 30,
       watermarkDelay: String = "0 seconds"): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val gapMs = gapMinutes * 60000L
     val src = rawStream(spark, dir)
       .withColumn("ets", expr("timestamp_micros(ts div 1000)"))

@@ -17,7 +17,7 @@ class SentinelConfigSpec extends AnyFunSuite {
 
   private def checkOpsNode(ops: com.fasterxml.jackson.databind.JsonNode,
       where: String): Int = {
-    val registry = Sentinel.ops.map(_._1).toSet
+    val registry = Sentinel.opNames.toSet
     val it = ops.fieldNames()
     var n = 0
     while (it.hasNext) {
@@ -43,7 +43,7 @@ class SentinelConfigSpec extends AnyFunSuite {
 
   test("100x: every registry op is gated") {
     val ops = root.get("ops")
-    Sentinel.ops.foreach { case (name, _) =>
+    Sentinel.opNames.foreach { name =>
       assert(ops.has(name), s"registry op '$name' missing from sentinels.json")
     }
   }
@@ -66,7 +66,7 @@ class SentinelConfigSpec extends AnyFunSuite {
   }
 
   test("every tier's op list is drawn from the registry") {
-    val registry = Sentinel.ops.map(_._1).toSet
+    val registry = Sentinel.opNames.toSet
     Sentinel.Tiers.values.foreach { tier =>
       tier.opNames.foreach(o => assert(registry.contains(o),
         s"tier ${tier.name} references unknown op '$o'"))

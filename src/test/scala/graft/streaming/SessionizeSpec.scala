@@ -17,6 +17,19 @@ import graft.SparkSpec
 class SessionizeSpec extends SparkSpec {
   import spark.implicits._
 
+  test("reading events or running the sessionizer leaves the session conf as it was") {
+    val sf = "/root/testdata/sf0.001"
+    val dir = Files.createTempDirectory("sess-conf")
+    Files.copy(Paths.get(s"$sf/events.parquet"), dir.resolve("events.parquet"))
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    graft.Tables.events(s, sf).collect()
+    graft.Tables.eventsNanos(s, sf).collect()
+    assert(s.conf.getAll == before)
+    assert(Sessionize.sessionizeStream(s, dir.toString).collect().nonEmpty)
+    assert(s.conf.getAll == before)
+  }
+
   test("event-time-timeout sessionization equals the batch lag+cumsum form") {
     val sf = "/root/testdata/sf0.001"
     val dir = Files.createTempDirectory("sess-stream")
