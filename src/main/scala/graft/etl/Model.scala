@@ -38,32 +38,6 @@ object Model {
       conditions: Option[String],
       is_rain: Int)
 
-  val violationSchema: StructType = StructType(Seq(
-    StructField("violation_id", StringType, nullable = false),
-    StructField("issue_date", TimestampType),
-    StructField("violation_date", DateType),
-    StructField("issuing_agency_name", StringType),
-    StructField("accident_indicator", StringType),
-    StructField("location", StringType),
-    StructField("violation_code", StringType),
-    StructField("violation_desc", StringType),
-    StructField("fine_amount", DoubleType),
-    StructField("total_paid", DoubleType),
-    StructField("latitude", DoubleType),
-    StructField("longitude", DoubleType),
-    StructField("month", StringType, nullable = false)))
-
-  val weatherSchema: StructType = StructType(Seq(
-    StructField("weather_date", DateType, nullable = false),
-    StructField("tempmax", DoubleType),
-    StructField("tempmin", DoubleType),
-    StructField("temp", DoubleType),
-    StructField("precip", DoubleType),
-    StructField("humidity", DoubleType),
-    StructField("windspeed", DoubleType),
-    StructField("conditions", StringType),
-    StructField("is_rain", IntegerType, nullable = false)))
-
   /** Raw ArcGIS feature attributes as they arrive from the API
     * (ref: etl/daily_load/violation_etl_daily.py:180-184; FIXTURES.md §1).
     */

@@ -53,13 +53,6 @@ object Transforms {
     when(coalesce(precip, lit(0.0)) > 0.0
       || lower(coalesce(conditions, lit(""))).contains("rain"), 1).otherwise(0)
 
-  /** Null-only field coalesce across lower/upper-case attribute names.
-    * The reference's `a.get("x") or a.get("X")` also falls through on
-    * falsy non-nulls (0, ""); we implement null-only semantics and record
-    * the divergence (SURVEY.md §8.5).
-    */
-  def coalesceCase(lowerC: Column, upperC: Column): Column = coalesce(lowerC, upperC)
-
   /** Raw ArcGIS attributes (Model.arcgisAttributesSchema) → canonical
     * violations rows. Narrow projection: no shuffle, fully codegen'd.
     * ref: etl/daily_load/violation_etl_daily.py:227-278 (transform_row).

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.ops.{MinHashLsh, ShingleSets}
 
 /** Incremental near-dedup: dedup a NEW batch of documents against a
   * persisted MinHash signature index instead of re-fingerprinting the
@@ -17,9 +18,10 @@ import graft.Tables._
   *
   *   doc_id BIGINT | m ARRAY<BIGINT>[16] | sarr ARRAY<STRING> | n_shingles INT
   *
-  * `m` is the 16-permutation MinHash signature (same permutation family
-  * as [[SketchDedupQueries]], so batch-vs-index pairs are bit-identical
-  * to whole-corpus pairs); `sarr` is the distinct 3-shingle set, kept so
+  * `m` is the 16-permutation MinHash signature ([[graft.ops.MinHashLsh]],
+  * the family [[SketchDedupQueries]] uses too, so batch-vs-index pairs
+  * are bit-identical to whole-corpus pairs); `sarr` is the distinct
+  * 3-shingle set ([[graft.ops.ShingleSets.base]]), kept so
   * the exact-Jaccard verify never touches raw text — candidate
   * verification reads only index rows.
   *
@@ -32,19 +34,18 @@ import graft.Tables._
   *    on (band, band_hash) whose probe side is the (small) batch; the
   *    index side scans 4 band hashes per doc derived from 16 longs, not
   *    text, and Spark broadcasts the batch side when it fits;
-  *  - verification is in-row: a candidate pair fetches the two docs'
-  *    shingle arrays by doc_id (equi-joins against the index) and
-  *    computes exact Jaccard via `array_intersect` — per-pair work, no
-  *    shingle-level shuffle at all.
+  *  - verification is in-row: both docs' shingle arrays ride the band
+  *    join itself and exact Jaccard is an `array_intersect` per hit —
+  *    per-pair work, no index row or shingle is ever shuffled.
   */
 object IncrementalDedupQueries {
 
-  import SketchDedupQueries.{P, K, Bands, as, bs}
+  import MinHashLsh.Bands
 
   private val JaccardMin = 0.5
 
   /** Ceiling (plan-stats bytes of the batch's payload-carrying band
-    * rows) past which [[pairsFromBatchBands]] refuses to BROADCAST the
+    * rows) past which [[pairsForBatchSigs]] refuses to BROADCAST the
     * batch side and fails fast instead of OOMing the driver. The verify
     * payload rides the broadcast by design — O(daily batch), ~4 band
     * rows/doc each carrying the signature and shingle arrays — so a
@@ -82,34 +83,9 @@ object IncrementalDedupQueries {
     * (doc_id, m, sarr, n_shingles). Documents under 3 tokens carry no
     * 3-shingle and are excluded, matching the whole-corpus query.
     */
-  def signatures(docs: DataFrame): DataFrame = docs
-    .select(col("doc_id"), split(trim(col("text")), "\\s+").as("tk"))
-    .filter(size(col("tk")) >= 3)
-    .withColumn("sarr", graft.functions.ShinglesExpr.shingles(col("tk")))
-    // all K permutation minima in one compiled pass (MinHashSigSpec pins
-    // it to the md5-lambda + K×array_min(transform) chain it replaced)
-    .select(col("doc_id"),
-      graft.functions.MinHashSigExpr.sig(col("sarr"), as, bs, P).as("m"),
-      col("sarr"), size(col("sarr")).as("n_shingles"))
-
-  /** Signature-ONLY rows (doc_id, m) in one fused text walk
-    * ([[graft.functions.MinHashTextExpr]]) — for consumers that never
-    * read the stored shingle array (the streaming ingest gate keys LSH
-    * bands off `m` alone). Bit-identical minima to [[signatures]]
-    * (MinHashTextSpec), and `m IS NOT NULL` selects exactly the
-    * `size(tk) >= 3` documents, so band rows derived from either frame
-    * are interchangeable. Measured A/B on the 100x probe corpus
-    * (SURVEY §10.19, min of 4 runs): 1.42 s -> 1.21 s signature pass, a
-    * ~1.2x wall win — smaller than the SimHash fused walk's 1.6x
-    * because [[graft.functions.MinHashSigExpr]] had already eliminated
-    * the hex round-trip, so md5 (unchanged by fusion) dominates what
-    * remains; the fused pass lands near the bare-scan floor (scan_len
-    * 1.28 s on the same runs).
-    */
-  def signaturesSigOnly(docs: DataFrame): DataFrame = docs
-    .select(col("doc_id"),
-      graft.functions.MinHashTextExpr.sig(col("text"), as, bs, P).as("m"))
-    .filter(col("m").isNotNull)
+  def signatures(docs: DataFrame): DataFrame = ShingleSets.base(docs)
+    .select(col("doc_id"), MinHashLsh.sig(col("sarr")).as("m"),
+      col("sarr"), col("n_shingles"))
 
   /** Merge a day's signatures into the persisted index (last-writer-wins
     * on doc_id — a re-ingested or corrected document replaces its row).
@@ -132,124 +108,19 @@ object IncrementalDedupQueries {
       keys = Seq("doc_id"), partitionBy = Seq("ingest_date"), globalKeys = true)
   }
 
-  /** LSH band rows (doc_id, band, bh) from index signature rows — 4 band
-    * hashes per doc, derived from the 16 stored minima (never from text).
-    */
-  private[graft] def bandRows(sigs: DataFrame): DataFrame = {
-    val bandStructs = (0 until Bands).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat_ws(",",
-          (0 until 4).map(r => element_at(col("m"), 4 * b + r + 1)): _*)).as("bh"))
-    }
-    sigs
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-  }
-
-  /** Band rows CARRYING the verify payload (m, sarr, n_shingles) — the
-    * shape [[pairsFromBatchBands]] joins on. Inside whole-stage codegen
-    * the Generate fuses with the probe of the broadcast join that
-    * consumes it, so a non-matching band row never copies its payload;
-    * only the ~4-per-pair hits materialize the arrays.
-    */
-  private def bandPayload(sigs: DataFrame): DataFrame = {
-    val bandStructs = (0 until Bands).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat_ws(",",
-          (0 until 4).map(r => element_at(col("m"), 4 * b + r + 1)): _*)).as("bh"))
-    }
-    sigs
-      .select(col("doc_id"), col("m"), col("sarr"), col("n_shingles"),
-        explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("m"), col("sarr"), col("n_shingles"),
-        col("bb.band").as("band"), col("bb.bh").as("bh"))
-  }
-
   /** Near-dup pairs TOUCHING the batch: every (doc_a, doc_b, minhash_est,
-    * jaccard) with jaccard >= 0.5 where at least one side is a batch doc.
+    * jaccard) with jaccard >= 0.5 where at least one side is a batch doc,
+    * from the batch's own [[signatures]] rows (the daily path holds them:
+    * it just fingerprinted the batch and upserted those rows, so finding
+    * the batch never scans the index). `index` must already hold them.
     * Equal by construction to the whole-corpus [[SketchDedupQueries]]
     * pair set restricted to batch-touching pairs: the band family is
-    * identical, so `batch bands ⋈ index bands` yields exactly the
-    * whole-corpus candidates with a batch side, and the verify arithmetic
-    * (signature-position agreement, exact Jaccard over the distinct
-    * shingle sets) is the same.
-    */
-  /** Generous in-memory bound on one doc's post-explode broadcast
-    * payload (Bands copies of the 16-long signature + the distinct
-    * shingle strings). A batch whose id count × this clears the ceiling
-    * is accepted with NO index job at all — the common daily case.
-    */
-  private val PreGuardBytesPerDoc: Long = 16 * 1024
-
-  /** Parquet bytes undercount the in-memory arrays the broadcast
-    * actually carries (dictionary/RLE on shingle strings) — the
-    * pre-guard's per-row estimate scales by this before comparing, so
-    * a batch passing the cheap gate cannot be off by a compression
-    * factor from the byte-accurate in-memory guard downstream.
-    */
-  private val ParquetToMemoryMargin: Long = 8
-
-  def pairsAgainstIndex(index: DataFrame, batchIds: DataFrame): DataFrame = {
-    // the id projection persists FIRST and feeds both the pre-guard
-    // count and the semi-join below, so batchIds evaluates exactly once:
-    // a non-deterministic id source cannot show the guard different ids
-    // than the join consumes, and no extra job runs per call. The cache
-    // is ids-only — O(batch) narrow rows, orders of magnitude under the
-    // signature rows the guard protects against caching.
-    // CacheScope, not a persist released before return: batchSigs below
-    // is cached from ids' lineage, and if its blocks were ever dropped
-    // (storage pressure, an early drain) a recompute would re-evaluate
-    // batchIds — so ids must stay cached for as long as the returned
-    // plan can execute, i.e. until the caller's own drain.
-    val ids = graft.CacheScope.persist(batchIds.select(col("doc_id")))
-    // cheap refusal BEFORE materializing the signature rows: a
-    // corpus-sized id list would otherwise get its full signature rows
-    // CACHED below (the storage blowout arriving via the cache instead
-    // of the broadcast) before the byte-accurate guard could throw.
-    // Small batches accept on the generous per-doc bound alone (one
-    // id-only count, no index job); larger ones estimate from the
-    // index's average parquet row size × the compression margin × the
-    // band fan-out. A refusal unpersists everything on the way out — it
-    // must not leave batch-scale storage resident until the next drain.
-    try {
-      val nBatch = ids.count()
-      if (BigInt(nBatch) * PreGuardBytesPerDoc > maxBatchBroadcastBytes) {
-        val nIndex = index.count()
-        if (nIndex > 0) {
-          val perRow = BigInt(
-            index.queryExecution.optimizedPlan.stats.sizeInBytes.toString) / nIndex
-          val estPre = perRow * ParquetToMemoryMargin * nBatch * Bands
-          if (estPre > maxBatchBroadcastBytes) refuseBroadcast(estPre)
-        }
-      }
-      // materialize the batch's signature rows (the index must be scanned
-      // to fetch them anyway): basic stats put a semi-join at its LEFT
-      // side's size — O(index) — which would spuriously trip the broadcast
-      // guard for every daily batch against a big index; the cached frame
-      // reports its REAL O(batch) bytes.
-      val batchSigs = graft.CacheScope.persist(
-        index.join(ids, Seq("doc_id"), "left_semi"))
-      batchSigs.count()
-      try pairsFromBatchBands(index, bandPayload(batchSigs))
-      catch {
-        case e: IllegalStateException => batchSigs.unpersist(); throw e
-      }
-    } catch {
-      case e: Throwable => ids.unpersist(); throw e
-    }
-  }
-
-  /** Steady-state daily form of [[pairsAgainstIndex]]: the batch's band
-    * rows derive from its OWN signature rows — identical to the index's
-    * copy, since the last-writer-wins upsert just wrote them — so finding
-    * the batch never scans the index. Same output by construction
-    * (IncrementalDedupSpec pins the id-based form; the gated
-    * q_dedup_incremental runs THIS form).
-    */
-  def pairsForBatchSigs(index: DataFrame, batchSigs: DataFrame): DataFrame =
-    pairsFromBatchBands(index, bandPayload(batchSigs))
-
-  /** The verify rides IN the band join: the batch's band rows broadcast
+    * identical ([[graft.ops.MinHashLsh]]), so `batch bands ⋈ index bands`
+    * yields exactly the whole-corpus candidates with a batch side, and
+    * the verify arithmetic (signature-position agreement, exact Jaccard
+    * over the distinct shingle sets) is the same.
+    *
+    * The verify rides IN the band join: the batch's band rows broadcast
     * WITH their payload (a daily batch × ~1 KB — a "batch" approaching
     * corpus size trips the [[DefaultMaxBatchBroadcastBytes]] guard and
     * must use the whole-corpus [[SketchDedupQueries]] path
@@ -273,8 +144,12 @@ object IncrementalDedupQueries {
     * on. The 4× per-hit verify arithmetic (vs once per distinct pair)
     * is map-side and costs less than one index shuffle.
     */
-  private def pairsFromBatchBands(
-      index: DataFrame, batchBands: DataFrame): DataFrame = {
+  def pairsForBatchSigs(index: DataFrame, batchSigs: DataFrame): DataFrame = {
+    // band rows carrying the verify payload: on the index side the
+    // Generate fuses with the join's probe in whole-stage codegen, so a
+    // band row that matches nothing never copies its arrays
+    def payload(sigs: DataFrame) = MinHashLsh.bands(sigs, "doc_id", "m", "sarr", "n_shingles")
+    val batchBands = payload(batchSigs)
     // structural form of the "daily batch" contract above: refuse to
     // broadcast a corpus-sized batch instead of OOMing the driver.
     // Generate's stats scale from the pre-explode child, so compare the
@@ -287,7 +162,7 @@ object IncrementalDedupQueries {
         s"post-explode (ceiling $maxBatchBroadcastBytes)")
     if (est > maxBatchBroadcastBytes) refuseBroadcast(est)
     broadcast(batchBands.as("a"))
-      .join(bandPayload(index).as("b"),
+      .join(payload(index).as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh")
           && col("a.doc_id") =!= col("b.doc_id"))
       .select(
@@ -299,19 +174,18 @@ object IncrementalDedupQueries {
       // in-row on the carried payload, not ShingleSets.verify's fetch
       // by id: the index side must never shuffle (see the scaladoc)
       .withColumn("common", size(array_intersect(col("shka"), col("shkb"))))
-      .select(col("doc_a"), col("doc_b"),
-        // est/jaccard are symmetric, so the a/b orientation of ma/mb and
-        // shka/shkb (which crosses doc_a/doc_b when a.doc_id > b.doc_id)
-        // cannot change either value
-        expr(s"""CAST(aggregate(zip_with(ma, mb,
-                |  (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END),
-                |  0, (acc, v) -> acc + v) AS DOUBLE) / $K""".stripMargin)
-          .as("minhash_est"),
-        (col("common").cast("double") / (col("na") + col("nb") - col("common")))
-          .as("jaccard"))
+      // est/jaccard are symmetric, so the a/b orientation of ma/mb and
+      // shka/shkb (which crosses doc_a/doc_b when a.doc_id > b.doc_id)
+      // cannot change either value
+      .select(col("doc_a"), col("doc_b"), col("ma"), col("mb"),
+        ShingleSets.jaccard.as("jaccard"))
       .filter(col("jaccard") >= JaccardMin)
       .groupBy(col("doc_a"), col("doc_b"))
-      .agg(min(col("minhash_est")).as("minhash_est"),
+      // the estimate is evaluated inside its aggregate, which codegen
+      // splits into a method of its own: projected before the aggregate
+      // it grew the fused join stage's loop to 9,137 bytecode bytes, past
+      // the 8,000 above which HotSpot never JIT-compiles a method
+      .agg(min(MinHashLsh.estimate(col("ma"), col("mb"))).as("minhash_est"),
         min(col("jaccard")).as("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
-import graft.ops.ShingleSets
+import graft.ops.{MinHashLsh, ShingleSets}
 
 /** Sketch-based near-dedup for training-data pipelines: MinHash + LSH
   * banding and SimHash, over the documents table.
@@ -23,14 +23,7 @@ import graft.ops.ShingleSets
   */
 object SketchDedupQueries {
 
-  // shared with IncrementalDedupQueries — the incremental index stores
-  // signatures under the SAME permutation family, so batch-vs-index pairs
-  // are bit-identical to whole-corpus pairs
-  private[graft] val P = 1000000007L
-  private[graft] val K = 16          // minhash functions
-  private[graft] val Bands = 4       // 4 bands x 4 rows
-  private[graft] val as: Seq[Long] = (1 to K).map(i => (123456789L * i + 987654321L) % P)
-  private[graft] val bs: Seq[Long] = (1 to K).map(i => (362436069L * i + 521288629L) % P)
+  import MinHashLsh.{Bands, K, P, Rows, as, bs}
 
   // ---------------------------------------------------------------- MinHash
   def qDedupMinhashLsh(spark: SparkSession, dir: String): DataFrame =
@@ -60,35 +53,20 @@ object SketchDedupQueries {
   private[queries] def minhashCand(base: DataFrame): DataFrame = {
     val reps = ShingleSets.reps(base)
     // all K permutation minima per document in ONE compiled row-grain pass
-    // (MinHashSigExpr — the same expression the incremental index uses, so
-    // batch-vs-index pairs stay bit-identical) instead of exploding and
-    // shuffling per-shingle rows into a MinPermVec aggregate; arithmetic
-    // unchanged, so the oracle's per-column mins still match bit-for-bit
-    val sig = reps.select(col("doc_id"),
-        graft.functions.MinHashSigExpr.sig(col("sarr"), as, bs, P).as("m"))
+    // (the same signature the incremental index stores) instead of
+    // exploding and shuffling per-shingle rows into a MinPermVec
+    // aggregate; the oracle's per-column mins still match bit-for-bit
+    val sig = reps.select(col("doc_id"), MinHashLsh.sig(col("sarr")).as("m"))
       .transform(graft.CacheScope.persist) // both sides of the band self-join
-
-    def m(side: String, i: Int) = element_at(col(s"$side.m"), i + 1)
-    val bandStructs = (0 until Bands).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat_ws(",",
-          (0 until 4).map(r => element_at(col("m"), 4 * b + r + 1)): _*)).as("bh"))
-    }
-    val bands = sig
-      .select(col("doc_id"), col("m"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("m"),
-        col("bb.band").as("band"), col("bb.bh").as("bh"))
-
-    val estExpr = ((0 until K)
-      .map(i => when(m("a", i) === m("b", i), 1).otherwise(0))
-      .reduce(_ + _).cast("double") / K).as("minhash_est")
+    val bands = MinHashLsh.bands(sig, "doc_id", "m")
     // A zero-overlap candidate scores jaccard 0 and falls to the
     // detector's >= 0.5 filter.
     bands.as("a")
       .join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh")
           && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"), estExpr)
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        MinHashLsh.estimate(col("a.m"), col("b.m")).as("minhash_est"))
       .distinct()
       // Each path reads this frame once (the detector's verify join-back,
       // or the agreement audit's candidate union), so the persist saves
@@ -111,7 +89,7 @@ object SketchDedupQueries {
     val minCols = (0 until K)
       .map(i => s"min((${as(i)} * xm + ${bs(i)}) % $P) AS m$i").mkString(",\n      ")
     val bandSelects = (0 until Bands).map { b =>
-      val cols = (0 until 4).map(r => s"m${4 * b + r}").mkString(", ")
+      val cols = (0 until Rows).map(r => s"m${Rows * b + r}").mkString(", ")
       s"SELECT *, $b AS band, md5(concat_ws(',', $cols)) AS bh FROM sig"
     }.mkString("\n  UNION ALL ")
     s"""WITH d AS (
@@ -564,17 +542,14 @@ object SketchDedupQueries {
     // aggregate over the re-exploded sets (the sketch min is insensitive
     // to the dedup, so the set frame loses nothing)
     val bySrc = srcSets.select(explode(col("ss")).as("source"),
-      (graft.functions.Md5Hash60Expr.of(col("shingle")) % 1000000007L).as("xm"))
+      (graft.functions.Md5Hash60Expr.of(col("shingle")) % P).as("xm"))
     val minVec = udaf(new graft.functions.MinPermVec(as.toArray, bs.toArray, P))
     val sig = bySrc.groupBy(col("source"))
       .agg(minVec(col("xm")).as("m"), count(lit(1)).as("n_sh"))
-    def m(side: String, i: Int) = element_at(col(s"$side.m"), i + 1)
-    val est = ((0 until K)
-      .map(i => when(m("a", i) === m("b", i), 1).otherwise(0))
-      .reduce(_ + _).cast("double") / K).as("minhash_est")
     val pairs = sig.as("a").join(sig.as("b"), col("a.source") < col("b.source"))
       .select(col("a.source").as("source_a"), col("b.source").as("source_b"),
-        est, col("a.n_sh").as("na"), col("b.n_sh").as("nb"))
+        MinHashLsh.estimate(col("a.m"), col("b.m")).as("minhash_est"),
+        col("a.n_sh").as("na"), col("b.n_sh").as("nb"))
     // exact per-pair overlap: expand each multi-source shingle's ordered
     // source pairs in-row — the source universe is tiny (a catalog
     // dimension), so the fan-out is bounded by k² and almost every

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.ops.MinHashLsh
 import graft.streaming.MemoryDrain
 
 /** Streaming semantics (SURVEY.md §2.9) as Structured Streaming: the
@@ -149,18 +150,12 @@ object StreamingQueries {
 
   /** Custom per-key state via `mapGroupsWithState` (the §2.9 stateful-
     * operator surface): a running per-user event counter + latest event
-    * time, maintained incrementally in the state store.
-    *
-    * Counters are monotone, so even if the file source splits input into
-    * several micro-batches, the final value per user is the max over
-    * emitted updates — which is what the terminal aggregation takes.
+    * time, maintained incrementally in the state store. Each micro-batch
+    * emits the updated `UserAgg` of every user it saw.
     */
-  def qStreamUserCounts(spark: SparkSession, dir: String): DataFrame =
-      withStreamConfs(spark) {
+  private def userCounts(spark: SparkSession, dir: String): Dataset[UserAgg] = {
     import spark.implicits._
-    val src = eventsRawStream(spark, dir)
-      .as[RawEvent]
-    val updated = src
+    eventsRawStream(spark, dir).as[RawEvent]
       .groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
         (user: Long, events: Iterator[RawEvent], state: GroupState[UserState]) =>
@@ -175,7 +170,17 @@ object StreamingQueries {
               .format(java.time.format.DateTimeFormatter
                 .ofPattern("yyyy-MM-dd HH:mm:ss")))
       }
-    MemoryDrain(updated, OutputMode.Update(), "stream_users_")
+  }
+
+  /** The per-user counters ([[userCounts]]) drained to memory.
+    *
+    * Counters are monotone, so even if the file source splits input into
+    * several micro-batches, the final value per user is the max over
+    * emitted updates — which is what the terminal aggregation takes.
+    */
+  def qStreamUserCounts(spark: SparkSession, dir: String): DataFrame =
+      withStreamConfs(spark) {
+    MemoryDrain(userCounts(spark, dir), OutputMode.Update(), "stream_users_")
       .groupBy(col("user_id"))
       .agg(max(col("n_events")).as("n_events"), max(col("max_ts")).as("max_ts"))
       .orderBy(col("user_id"))
@@ -233,27 +238,9 @@ object StreamingQueries {
     */
   def qStreamUpsert(spark: SparkSession, dir: String): DataFrame =
       withStreamConfs(spark) {
-    import spark.implicits._
     val lake = java.nio.file.Files.createTempDirectory("stream-upsert")
       .resolve("t").toString
-    val src = eventsRawStream(spark, dir)
-      .as[RawEvent]
-    val updated = src
-      .groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (user: Long, events: Iterator[RawEvent], state: GroupState[UserState]) =>
-          val prev = state.getOption.getOrElse(UserState(0L, Long.MinValue))
-          val next = events.foldLeft(prev) { (s, e) =>
-            UserState(s.n_events + 1, math.max(s.max_ts_micros, e.ts / 1000))
-          }
-          state.update(next)
-          UserAgg(user, next.n_events,
-            java.time.Instant.ofEpochMilli(next.max_ts_micros / 1000)
-              .atZone(java.time.ZoneOffset.UTC)
-              .format(java.time.format.DateTimeFormatter
-                .ofPattern("yyyy-MM-dd HH:mm:ss")))
-      }
-    val q = updated.toDF().writeStream
+    val q = userCounts(spark, dir).toDF().writeStream
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         graft.etl.Sinks.upsert(spark, batch.toDF(), lake,
@@ -382,13 +369,12 @@ object StreamingQueries {
   private[graft] def nearDedupEmits(
       spark: SparkSession, src: DataFrame): Dataset[BandEmit] = {
     import spark.implicits._
-    // signature-only fingerprinting: this path never reads the shingle
-    // array (bands derive from `m` alone), so it takes the fused text
-    // walk — same minima bit-for-bit (MinHashTextSpec), ~1.2x the
-    // signature-pass throughput and near the bare-scan floor
-    // (A/B at 100x, SURVEY §10.19)
-    val bands = IncrementalDedupQueries.bandRows(
-      IncrementalDedupQueries.signaturesSigOnly(src)).as[DocBand]
+    // signature-only fingerprinting: bands derive from `m` alone, so the
+    // shingle array is never built (the fused text walk; NULL marks a
+    // doc under 3 tokens, which the whole-corpus detector drops too)
+    val sigs = src.select(col("doc_id"), MinHashLsh.textSig(col("text")).as("m"))
+      .filter(col("m").isNotNull)
+    val bands = MinHashLsh.bands(sigs, "doc_id").as[DocBand]
     bands
       .groupByKey(r => (r.band, r.bh))
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {

@@ -165,9 +165,10 @@ class ArcGisReaderFactory(
         new GenericInternalRow(values.asInstanceOf[Array[Any]])
       }
 
-      /** Case-coalescing field access: exact name, then lower, then upper
-        * (null-only semantics; the reference's falsy-or is §8.5's bug).
-        * ref: etl/full_load/violation_etl_history.py:108-119.
+      /** Case-coalescing field access: exact name, then lower, then upper.
+        * Null-only: the reference's `a.get("x") or a.get("X")` also falls
+        * through on falsy non-nulls (0, ""); that divergence is SURVEY
+        * §8.5. ref: etl/full_load/violation_etl_history.py:108-119.
         */
       private def attr(node: JsonNode, name: String): JsonNode = {
         def ok(n: JsonNode) = n != null && !n.isNull

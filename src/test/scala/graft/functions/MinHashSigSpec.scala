@@ -11,7 +11,7 @@ import graft.SparkSpec
   */
 class MinHashSigSpec extends SparkSpec {
 
-  import graft.queries.SketchDedupQueries.{P, K, as, bs}
+  import graft.ops.MinHashLsh.{P, K, as, bs}
 
   private val minCols = (0 until K).map { i =>
     expr(s"array_min(transform(xmarr, x -> (${as(i)} * x + ${bs(i)}) % $P))")

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.queries.SketchDedupQueries.{as, bs, P}
+import graft.ops.MinHashLsh.{as, bs, P}
 
 /** Pins [[MinHashTextExpr]] (fused tokenize+shingle+hash+min-fold walk)
   * to the unfused chain it shadows —

@@ -125,9 +125,9 @@ class CorpusPipelineSpec extends SparkSpec {
 
     // expected: the gated pair computation over the (now merged) index,
     // applied through the batch-global dedupNear stage
-    val pairs = IncrementalDedupQueries.pairsAgainstIndex(
+    val pairs = IncrementalDedupQueries.pairsForBatchSigs(
         spark.read.parquet(lake),
-        batch.select(col("doc_id")))
+        IncrementalDedupQueries.signatures(batch))
       .select(col("doc_a"), col("doc_b"))
     assert(pairs.count() > 0, "batch produced no near-dup pairs; test is vacuous")
     val expect = CorpusPipeline(batch).dedupNear(pairs).df

@@ -9,12 +9,8 @@ import graft.Tables.documents
   * verify payload — sound only under the "daily batch" contract. This
   * spec makes the contract structural: a batch whose payload-carrying
   * band rows estimate past the ceiling fails fast with a pointer to the
-  * whole-corpus path (instead of OOMing the driver mid-broadcast), a
-  * normal daily shape passes the DEFAULT ceiling with wide margin, and
-  * the id-based entry point reports O(batch) — not O(index) — bytes to
-  * the guard (basic stats put a semi-join at its left side's size, so
-  * an unmaterialized batch side would spuriously trip on every daily
-  * batch against a big index).
+  * whole-corpus path (instead of OOMing the driver mid-broadcast), and a
+  * normal daily shape passes the DEFAULT ceiling with wide margin.
   */
 class IncrementalDedupGuardSpec extends SparkSpec {
 
@@ -46,61 +42,5 @@ class IncrementalDedupGuardSpec extends SparkSpec {
     assert(pairs.columns.toSeq ==
       Seq("doc_a", "doc_b", "minhash_est", "jaccard"))
     pairs.count() // executes the broadcast for real
-  }
-
-  test("id-based entry refuses a corpus-sized id list with nothing left cached") {
-    val docs = documents(spark, sf)
-    val lake = java.nio.file.Files.createTempDirectory("inc-preguard")
-      .resolve("sig").toString
-    IncrementalDedupQueries.updateIndex(
-      spark, IncrementalDedupQueries.signatures(docs), lake)
-    val index = spark.read.parquet(lake)
-    sys.props(prop) = "1"
-    try {
-      val before = spark.sparkContext.getPersistentRDDs.size
-      val e = intercept[IllegalStateException] {
-        IncrementalDedupQueries.pairsAgainstIndex(
-          index, index.select(col("doc_id")))
-      }
-      assert(e.getMessage.contains("SketchDedupQueries"))
-      // the refusal must come from the metadata pre-guard, before the
-      // batch SIGNATURE rows were persisted, and the ids-only probe
-      // cache (which feeds both the guard count and the semi-join, so
-      // batchIds evaluates once) must be released on the refusal path —
-      // nothing left in the cache
-      assert(spark.sparkContext.getPersistentRDDs.size == before,
-        "refusal left batch-scale storage cached")
-    } finally {
-      sys.props.remove(prop)
-      graft.etl.LakeFs.deleteRecursively(spark,
-        new org.apache.hadoop.fs.Path(lake).getParent)
-    }
-  }
-
-  test("id-based entry reports O(batch) bytes, not O(index)") {
-    val docs = documents(spark, sf)
-    val lake = java.nio.file.Files.createTempDirectory("inc-guard")
-      .resolve("sig").toString
-    IncrementalDedupQueries.updateIndex(
-      spark, IncrementalDedupQueries.signatures(docs), lake)
-    val index = spark.read.parquet(lake)
-    val indexBytes = new java.io.File(lake).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
-    // a ceiling that an O(index) estimate would blow (the guard compares
-    // post-explode bytes, so a buggy index-sized estimate reads as
-    // ~4x indexBytes) but a 3-doc batch clears with margin
-    assert(indexBytes > 64L * 1024,
-      s"fixture too small to discriminate: index only $indexBytes bytes")
-    val ceiling = 2L * indexBytes
-    sys.props(prop) = ceiling.toString
-    try {
-      val tiny = index.select(col("doc_id")).limit(3)
-      val pairs = IncrementalDedupQueries.pairsAgainstIndex(index, tiny)
-      pairs.count()
-    } finally {
-      sys.props.remove(prop)
-      graft.etl.LakeFs.deleteRecursively(spark,
-        new org.apache.hadoop.fs.Path(lake).getParent)
-    }
   }
 }

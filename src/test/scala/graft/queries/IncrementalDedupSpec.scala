@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.Tables.documents
+import graft.ops.MinHashLsh
 
 /** Incremental near-dedup against a persisted signature index must lose
   * nothing versus whole-corpus recompute: after each daily batch lands,
@@ -37,8 +38,8 @@ class IncrementalDedupSpec extends SparkSpec {
     // day 1 lands: fingerprint the batch alone, merge, dedup vs the index
     val sigs1 = IncrementalDedupQueries.signatures(docs.filter(day1))
     IncrementalDedupQueries.updateIndex(spark, sigs1, lake)
-    val got1 = pairSet(IncrementalDedupQueries.pairsAgainstIndex(
-      spark.read.parquet(lake), sigs1.select(col("doc_id"))))
+    val got1 = pairSet(IncrementalDedupQueries.pairsForBatchSigs(
+      spark.read.parquet(lake), sigs1))
     val want1 = pairSet(
       SketchDedupQueries.minhashPairs(docs.filter(standing || day1))
         .filter(col("doc_a") % 5 === 3 || col("doc_b") % 5 === 3))
@@ -47,8 +48,8 @@ class IncrementalDedupSpec extends SparkSpec {
     // day 2 lands on the SAME index
     val sigs2 = IncrementalDedupQueries.signatures(docs.filter(day2))
     IncrementalDedupQueries.updateIndex(spark, sigs2, lake)
-    val got2 = pairSet(IncrementalDedupQueries.pairsAgainstIndex(
-      spark.read.parquet(lake), sigs2.select(col("doc_id"))))
+    val got2 = pairSet(IncrementalDedupQueries.pairsForBatchSigs(
+      spark.read.parquet(lake), sigs2))
     val want2 = pairSet(
       SketchDedupQueries.minhashPairs(docs)
         .filter(col("doc_a") % 5 === 4 || col("doc_b") % 5 === 4))
@@ -57,8 +58,8 @@ class IncrementalDedupSpec extends SparkSpec {
 
     // idempotent replay (ST5): re-ingesting day 2 changes nothing
     IncrementalDedupQueries.updateIndex(spark, sigs2, lake)
-    val replay = pairSet(IncrementalDedupQueries.pairsAgainstIndex(
-      spark.read.parquet(lake), sigs2.select(col("doc_id"))))
+    val replay = pairSet(IncrementalDedupQueries.pairsForBatchSigs(
+      spark.read.parquet(lake), sigs2))
     assert(replay == got2)
 
     // the index holds exactly one signature row per ingested document
@@ -96,34 +97,13 @@ class IncrementalDedupSpec extends SparkSpec {
       .map(_.getString(0)).toSeq == Seq("2026-08-12"))
 
     // the extra partition column changes nothing about pair detection
-    val got = pairSet(IncrementalDedupQueries.pairsAgainstIndex(
-      index, day2Docs.select(col("doc_id"))))
+    val got = pairSet(IncrementalDedupQueries.pairsForBatchSigs(
+      index, IncrementalDedupQueries.signatures(day2Docs)))
     val want = pairSet(
       SketchDedupQueries.minhashPairs(docs)
         .filter(col("doc_a") % 5 === 4 || col("doc_b") % 5 === 4))
     assert(got == want)
 
-    graft.etl.LakeFs.deleteRecursively(spark,
-      new org.apache.hadoop.fs.Path(lake).getParent)
-  }
-
-  test("pairsForBatchSigs (steady-state form) equals the id-based form") {
-    // the daily fast path derives batch bands from the batch's own
-    // signature rows instead of semi-joining the index — outputs must be
-    // identical on a freshly-upserted index
-    val docs = documents(spark, sf)
-    val lake = java.nio.file.Files.createTempDirectory("inc-dedup-fast")
-      .resolve("sig").toString
-    val batch = col("doc_id") % 5 === 4
-    IncrementalDedupQueries.updateIndex(
-      spark, IncrementalDedupQueries.signatures(docs.filter(!batch)), lake)
-    val sigs = IncrementalDedupQueries.signatures(docs.filter(batch))
-    IncrementalDedupQueries.updateIndex(spark, sigs, lake)
-    val index = spark.read.parquet(lake)
-    val viaIds = pairSet(
-      IncrementalDedupQueries.pairsAgainstIndex(index, sigs.select(col("doc_id"))))
-    val viaSigs = pairSet(IncrementalDedupQueries.pairsForBatchSigs(index, sigs))
-    assert(viaIds.nonEmpty && viaSigs == viaIds)
     graft.etl.LakeFs.deleteRecursively(spark,
       new org.apache.hadoop.fs.Path(lake).getParent)
   }
@@ -181,8 +161,7 @@ class IncrementalDedupSpec extends SparkSpec {
         .withColumn("xm",
           expr("cast(conv(substring(md5(shingle), 1, 15), 16, 10) as bigint) % 1000000007"))
       val minVec = udaf(new graft.functions.MinPermVec(
-        SketchDedupQueries.as.toArray, SketchDedupQueries.bs.toArray,
-        SketchDedupQueries.P))
+        MinHashLsh.as.toArray, MinHashLsh.bs.toArray, MinHashLsh.P))
       base.groupBy(col("doc_id")).agg(minVec(col("xm")).as("m"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toVector).toMap
     }

@@ -4,8 +4,10 @@ import java.nio.file.{Files, Path}
 
 import graft.{SparkEntry, SparkSpec}
 
-/** The shingle-set detectors on degenerate corpora: nothing shared,
-  * nothing long enough to shingle, and nothing but exact copies. Every
+/** The shingle-set detectors, and the MinHash family's other consumers
+  * (the incremental index, the streaming gate, source similarity), on
+  * degenerate corpora: nothing shared, nothing long enough to shingle,
+  * and nothing but exact copies. Every
   * query must run, the sweep must still emit its five threshold rows,
   * and each result must equal its DuckDB oracle's (the agreement audit's
   * ratios are NULL where a pair count is 0, as the oracle's integer
@@ -21,7 +23,8 @@ class ShingleSetDegenerateSpec extends SparkSpec with OracleCompare {
       Seq.fill(5)("the quick brown fox jumps over the lazy dog"))
 
   private val names = Seq("q_dedup_ngram_jaccard", "q_dedup_minhash_lsh",
-    "q_dedup_containment", "q_dedup_threshold_sweep", "q_dedup_agreement")
+    "q_dedup_containment", "q_dedup_threshold_sweep", "q_dedup_agreement",
+    "q_dedup_incremental", "q_stream_neardedup", "q_source_similarity")
 
   /** One `documents.parquet` per corpus, in the driver's column layout. */
   private def corpusDir(texts: Seq[String]): Path = {
