@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Connected components over an undirected edge list — the dedup GROUP
@@ -28,6 +29,16 @@ import org.apache.spark.sql.functions._
   * is cross-checked against a union-find reference (spec) and a
   * recursive-CTE transitive-closure oracle (correctness gate).
   *
+  * Round shape: both star minima are window aggregates
+  * (`min(v) over (partition by u)`), so every row carries its group's
+  * minimum and no step joins a frame to an aggregate of itself — such a
+  * join reads two shuffle stages over the same input, and AQE broadcasts
+  * whichever finishes first, so the plan would depend on timing.
+  * One grouped aggregate over the new edges (tagged 1) and the old ones
+  * (tagged 0) is both the round's distinct and, through its `observe`,
+  * the exact fixpoint test: a key seen under one tag only is in the
+  * symmetric difference.
+  *
   * Lineage control: each round's edge set is EAGERLY localCheckpoint'ed —
   * without truncation the plan of round k contains every prior round and
   * planning blows up exponentially (measured: OOM on a 276k-edge graph
@@ -38,10 +49,10 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** edges: two long-ish columns (src, dst), undirected (one direction is
-    * enough). Returns (id, comp) — comp = min vertex id in the connected
-    * component, every vertex of every edge present (self-loop-only
-    * vertices included, labeled themselves).
+  /** edges: two long-ish columns (src, dst) of non-null ids, undirected
+    * (one direction is enough). Returns (id, comp) — comp = min vertex id
+    * in the connected component, every vertex of every edge present
+    * (self-loop-only vertices included, labeled themselves).
     *
     * EAGER: calling this runs the resolution NOW — the first
     * localCheckpoint materializes the upstream pair query and the
@@ -54,25 +65,24 @@ object ConnectedComponents {
     * plan.
     */
   def components(edges: DataFrame): DataFrame = {
-    // materialize the (possibly expensive) upstream pair query exactly
-    // once — both the vertex list and the initial edge set derive from it
-    val raw = edges.toDF("src", "dst").localCheckpoint(true)
-    val verts = raw.select(col("src").as("id"))
-      .union(raw.select(col("dst").as("id")))
-      .distinct()
-    // canonical high→low orientation; self-loops carry no connectivity.
-    // |e| rides the SAME job that materializes the initial edge set (an
-    // `observe` metric on the checkpoint pass — the round-loop pattern
-    // below, applied here too so no separate count job runs; one job per
-    // CC invocation saved, optimization r15).
-    val obs0 = org.apache.spark.sql.Observation()
-    var e = raw.filter(col("src") =!= col("dst"))
+    // one eager pass over the (possibly expensive) upstream pair query:
+    // the distinct canonical high→low pairs, self-loops kept so the vertex
+    // list derives from the same checkpoint; |e| (non-loop rows) rides it
+    // as an `observe` metric.
+    val obs0 = Observation()
+    val pairs = edges.toDF("src", "dst")
       .select(greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
       .distinct()
-      .observe(obs0, count(lit(1)).as("n"))
+      .observe(obs0, count(when(col("u") =!= col("v"), 1)).as("n"))
       .localCheckpoint(true)
+    val verts = pairs.select(col("u").as("id"))
+      .union(pairs.select(col("v").as("id")))
+      .distinct()
+    // self-loops carry no connectivity
+    var e = pairs.filter(col("u") =!= col("v"))
     var prevCount = obs0.get("n").asInstanceOf[Long]
+    val byU = Window.partitionBy(col("u"))
     var changed = 1L
     var rounds = 0
     while (changed > 0) {
@@ -81,55 +91,38 @@ object ConnectedComponents {
       // neighbor v > u re-attaches to m. Each undirected edge {a,b}, a<b,
       // is emitted exactly once (from a's star as (b, m(a))), already in
       // high→low orientation because m(a) <= a < b.
-      val bidir = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = bidir.groupBy("u").agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      // NO distinct here (optimization r15): duplicates in `large` are
-      // bounded — each bidir row emits at most one (v, m) row, so
-      // |large| <= 2|e| with or without the dedup — mins2's min is
-      // duplicate-insensitive, and the small-star output is distinct'ed
-      // below, so the round's edge SET (and hence the round count and
-      // the result) is identical while a full exchange + aggregate per
-      // round disappears.
-      val large = bidir.join(mins, "u")
+      val large = e.union(e.select(col("v").as("u"), col("u").as("v")))
+        .withColumn("m", least(col("u"), min(col("v")).over(byU)))
         .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
       // small-star on the high→low output: the group of u holds exactly
       // its smaller neighbors; all of them plus u re-attach to the min.
-      val mins2 = large.groupBy("u").agg(min(col("v")).as("m"))
-      val small = large.join(mins2, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(mins2.select(col("u"), col("m").as("v")))
+      val small = large
+        .withColumn("m", min(col("v")).over(byU))
+        .select(inline(array(
+          struct(col("v").as("u"), col("m").as("v")),
+          struct(col("u"), col("m").as("v")))))
         .filter(col("u") =!= col("v"))
-        .distinct()
-      // exact set-equality fixpoint test, folded into the SAME job that
-      // materializes the round's edge set: a left join marks which new
-      // edges already existed, an `observe` metric counts rows and
-      // new-only rows during the checkpoint pass, and with the previous
-      // round's |e| the symmetric difference is
-      //   |new \ old| + (|old| - |new ∩ old|)
-      // — no second symmetric-difference action per round. Metrics sit
-      // ABOVE the join and BELOW no filter, so nothing can prune rows out
-      // from under the counts.
-      val obs = org.apache.spark.sql.Observation()
-      val marked = small
-        .join(e.select(col("u"), col("v"), lit(1).as("_old")), Seq("u", "v"), "left")
+      // the round's distinct and its exact set-equality test in one
+      // aggregate: hi = 1 keeps the new set, lo = hi marks a key under one
+      // tag only. The metrics sit above the aggregate and below the
+      // filter, so nothing prunes rows out from under the counts.
+      val obs = Observation()
+      e = small.withColumn("t", lit(1))
+        .union(e.withColumn("t", lit(0)))
+        .groupBy(col("u"), col("v"))
+        .agg(min(col("t")).as("lo"), max(col("t")).as("hi"))
         .observe(obs,
-          count(lit(1)).as("n"),
-          coalesce(sum(when(col("_old").isNull, 1L).otherwise(0L)), lit(0L))
-            .as("new_only"))
+          count(when(col("hi") === 1, 1)).as("n"),
+          count(when(col("lo") === col("hi"), 1)).as("changed"))
+        .filter(col("hi") === 1)
         .select(col("u"), col("v"))
         .localCheckpoint(true)
-      val m = obs.get
-      val n = m("n").asInstanceOf[Long]
-      val newOnly = m("new_only").asInstanceOf[Long]
-      changed = newOnly + (prevCount - (n - newOnly))
+      val n = obs.get("n").asInstanceOf[Long]
+      changed = obs.get("changed").asInstanceOf[Long]
       val nStable = n == prevCount
       val bigDrop = n * 2 <= prevCount
       prevCount = n
-      val prev = e
-      e = marked
-      prev.unpersist()
       if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
         System.err.println(s"[cc] round=$rounds n=$n changed=$changed")
       // Star-forest early exit (optimization r16): the alternation's

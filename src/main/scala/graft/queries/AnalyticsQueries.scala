@@ -65,26 +65,26 @@ object AnalyticsQueries {
 
   // --- retention cohorts ---
   // Users grouped by first-activity week; for each later week, how many
-  // of the cohort came back. Two aggregations (first activity per user,
-  // then distinct user-week activity) and one join — the classic
-  // product-analytics triangle. Week arithmetic is date_trunc('week')
+  // of the cohort came back. One distinct user-week frame carries both:
+  // the cohort week is min(week) over the user's rows (date_trunc is
+  // monotone, so it commutes with min), so no first-activity aggregate
+  // is joined back to the scan. Week arithmetic is date_trunc('week')
   // (ISO Monday start in BOTH engines) and the offset is an exact
-  // integer day-diff div 7.
-  def qRetentionCohorts(spark: SparkSession, dir: String): DataFrame = {
-    val e = events(spark, dir).select(col("user_id"), col("ts"))
-    val cohort = e.groupBy(col("user_id"))
-      .agg(date_trunc("week", min(col("ts"))).cast("date").as("cohort_week"))
-    val active = e
+  // integer day-diff div 7. A user has one cohort week and (user, week)
+  // is distinct, so a row count per (cohort, offset) counts distinct
+  // users; null users drop out, as the oracle's join drops them.
+  def qRetentionCohorts(spark: SparkSession, dir: String): DataFrame =
+    events(spark, dir)
+      .filter(col("user_id").isNotNull)
       .select(col("user_id"), date_trunc("week", col("ts")).cast("date").as("week"))
       .distinct()
-    active.join(cohort, "user_id")
+      .withColumn("cohort_week", min(col("week")).over(Window.partitionBy(col("user_id"))))
       .withColumn("week_offset", expr("datediff(week, cohort_week) div 7"))
       .groupBy(col("cohort_week"), col("week_offset"))
-      .agg(countDistinct(col("user_id")).as("n_users"))
+      .agg(count(lit(1)).as("n_users"))
       .select(date_format(col("cohort_week"), "yyyy-MM-dd").as("cohort_week"),
         col("week_offset"), col("n_users"))
       .orderBy(col("cohort_week"), col("week_offset"))
-  }
 
   val qRetentionCohortsOracle: String =
     """WITH cohort AS (

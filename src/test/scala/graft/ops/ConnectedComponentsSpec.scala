@@ -1,6 +1,11 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The alternating large-star/small-star rounds must reach the true
   * component fixpoint — including multi-hop chains where the min id is
@@ -40,6 +45,11 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got == (1L to 32L).map(_ -> 1L).toMap)
   }
 
+  test("a vertex seen only in a self-loop keeps its own label") {
+    val got = run((4L, 4L), (9L, 2L), (2L, 2L))
+    assert(got == Map(4L -> 4L, 2L -> 2L, 9L -> 2L))
+  }
+
   test("random graphs agree with a union-find reference (seeded)") {
     // in-memory union-find as the independent oracle
     def unionFind(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -54,12 +64,41 @@ class ConnectedComponentsSpec extends SparkSpec {
       vertices.map(v => v -> find(v.toInt).toLong).toMap
     }
     val rnd = new scala.util.Random(42)
+    // a 40-vertex path over shuffled ids (100..139) needs 4+ rounds
+    val ids = rnd.shuffle((100L until 140L).toVector)
+    val path = ids.zip(ids.tail)
     (1 to 5).foreach { trial =>
       val n = 30
-      val edges = Seq.fill(25)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter(e => e._1 != e._2)
-      val expect = unionFind(n, edges)
+      // self-loops kept; duplicate and reversed copies of some edges
+      val random = Seq.fill(25)((rnd.nextLong(n), rnd.nextLong(n)))
+      val copies = random.take(6) ++ random.slice(6, 12).map(_.swap)
+      val edges = rnd.shuffle(random ++ copies ++ path)
+      val expect = unionFind(140, edges)
       assert(run(edges: _*) == expect, s"trial $trial: $edges")
+    }
+  }
+
+  test("no execution the fixpoint starts runs an inner join") {
+    // an inner join of a frame with its own aggregate reads two shuffle
+    // stages over one input, and AQE broadcasts whichever finishes first
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        plans.add(qe)
+    }
+    val edges = ((2L to 32L).map(i => (i, i / 2)) :+ (40L -> 41L)).toDF("src", "dst")
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      ConnectedComponents.components(edges)
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size >= 3)
+    plans.forEach { qe =>
+      val inner = qe.optimizedPlan.collect { case j: Join if j.joinType == Inner => j }
+      assert(inner.isEmpty, qe.optimizedPlan.treeString)
     }
   }
 }
