@@ -531,8 +531,7 @@ object CurationQueries {
           .otherwise(
             concat(substring(col("c_name"), 1, 9), substring(col("c_name"), 11, 1000)))
           .as("name"))
-    val dGroups = dirty.groupBy(col("name")).agg(min(col("record_id")).as("d_node"))
-    val dIdx = dGroups.select(col("d_node"),
+    val dIdx = dirty.select(col("name")).distinct().select(col("name"),
       explode(graft.functions.DelNeighborsExpr.delNeighborHashes(col("name")))
         .as("variant"))
     // Identical-name collapse on the MASTER side too (the fuzzy_match /
@@ -543,21 +542,21 @@ object CurationQueries {
     // master name. Lossless by the same argument as qFuzzyMatch; on a
     // duplicate-heavy master (the 100x rehearsal replicates customers
     // 100x) this removes a 100x posting-list and candidate-join factor.
-    val mGroups = cust.groupBy(col("c_name"))
+    val mIdx = cust.groupBy(col("c_name"))
       .agg(min(col("c_custkey")).as("m_node"))
-      .transform(graft.CacheScope.persist)
-    val mIdx = mGroups.select(col("m_node"),
-      explode(graft.functions.DelNeighborsExpr.delNeighborHashes(col("c_name")))
-        .as("variant"))
+      .select(col("m_node"), col("c_name"),
+        explode(graft.functions.DelNeighborsExpr.delNeighborHashes(col("c_name")))
+          .as("variant"))
+    // both indexes carry their names, so no step joins an aggregate back
+    // to the frame it came from (AQE broadcasts whichever of two such
+    // stages finishes first, and identical code runs either plan)
     val best = broadcast(dIdx)
       .join(mIdx, Seq("variant"))
-      .select(col("d_node"), col("m_node"))
+      .select(col("name"), col("m_node"), col("c_name"))
       .distinct()
-      .join(dGroups, Seq("d_node"))
-      .join(mGroups.select(col("m_node"), col("c_name")), Seq("m_node"))
       .withColumn("dist", levenshtein(col("name"), col("c_name")))
       .filter(col("dist") <= 2)
-      .groupBy(col("d_node"))
+      .groupBy(col("name"))
       .agg(min_by(col("m_node"), struct(col("dist"), col("m_node")))
         .as("entity_id"))
       // persisted (optimization r15): `members` (canon + the final agg)
@@ -566,8 +565,7 @@ object CurationQueries {
       // execution (stage-metrics probe: two ~identical heavy stages).
       // One row per matched dirty-name group — metadata-scale.
       .transform(graft.CacheScope.persist)
-    val members = dirty.join(dGroups, Seq("name"))
-      .join(best, Seq("d_node"))
+    val members = dirty.join(best, Seq("name"))
       .select(col("entity_id"), col("record_id"), col("name"))
       .unionByName(cust
         .select(col("c_custkey").as("entity_id"),

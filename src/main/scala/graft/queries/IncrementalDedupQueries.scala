@@ -127,9 +127,10 @@ object IncrementalDedupQueries {
     * instead), the index's payload-carrying band rows STREAM through the
     * probe, and est/jaccard are computed in-row at the join output. Band
     * multiplicity (a pair sharing several of its 4 bands, and batch-batch
-    * pairs arriving in both orientations) dedups via a groupBy over slim
-    * verified rows — both measures are symmetric and identical per pair,
-    * so min() is a pure dedup with map-side partial aggregation.
+    * pairs arriving in both orientations) dedups via a groupBy whose
+    * partial aggregate computes both measures once per band hit — they
+    * are symmetric and identical per pair, so min() is a pure dedup —
+    * and the Jaccard threshold applies to its slim output.
     *
     * Why not join the index for the verify data (the pre-round-13
     * shape)? The candidate set exceeds the broadcast threshold (1.09M
@@ -171,22 +172,24 @@ object IncrementalDedupQueries {
         col("a.m").as("ma"), col("b.m").as("mb"),
         col("a.sarr").as("shka"), col("b.sarr").as("shkb"),
         col("a.n_shingles").as("na"), col("b.n_shingles").as("nb"))
-      // in-row on the carried payload, not ShingleSets.verify's fetch
-      // by id: the index side must never shuffle (see the scaladoc)
-      .withColumn("common", size(array_intersect(col("shka"), col("shkb"))))
       // est/jaccard are symmetric, so the a/b orientation of ma/mb and
       // shka/shkb (which crosses doc_a/doc_b when a.doc_id > b.doc_id)
-      // cannot change either value
-      .select(col("doc_a"), col("doc_b"), col("ma"), col("mb"),
-        ShingleSets.jaccard.as("jaccard"))
-      .filter(col("jaccard") >= JaccardMin)
+      // cannot change either value; the set sizes ride unordered
       .groupBy(col("doc_a"), col("doc_b"))
       // the estimate is evaluated inside its aggregate, which codegen
       // splits into a method of its own: projected before the aggregate
       // it grew the fused join stage's loop to 9,137 bytecode bytes, past
-      // the 8,000 above which HotSpot never JIT-compiles a method
+      // the 8,000 above which HotSpot never JIT-compiles a method. The
+      // overlap is in-row on the carried payload, not ShingleSets.verify's
+      // fetch by id: the index side must never shuffle (see the scaladoc).
+      // The threshold filters after the aggregate: a filter on the
+      // projected overlap is pushed into the join condition and the
+      // intersection is evaluated again for the projection
       .agg(min(MinHashLsh.estimate(col("ma"), col("mb"))).as("minhash_est"),
-        min(col("jaccard")).as("jaccard"))
+        min(size(array_intersect(col("shka"), col("shkb")))).as("common"),
+        min(least(col("na"), col("nb"))).as("na"), min(greatest(col("na"), col("nb"))).as("nb"))
+      .select(col("doc_a"), col("doc_b"), col("minhash_est"), ShingleSets.jaccard.as("jaccard"))
+      .filter(col("jaccard") >= JaccardMin)
       .orderBy(col("doc_a"), col("doc_b"))
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.ops.HammingBands
 
 /** Multimodal-column plumbing: media payloads travel as opaque `binary`
   * columns with typed metadata derived alongside. The decode step itself
@@ -83,20 +84,13 @@ object MultimodalQueries {
   // --- perceptual-hash near-duplicate detection (aHash over payload) ---
   // The media-dedup path: a 64-bit average-hash signature per document —
   // split the payload's sample stream into 64 equal segments, bit s = 1
-  // iff segment s's mean sample exceeds the global mean — then
-  // Hamming-distance pairs via 4×16-bit SimHash-style band buckets —
-  // Manku et al. 2007's canonical k=3 configuration for 64-bit
-  // fingerprints: candidate generation is a pure equi-join on
-  // (band, band_value) and the verify is bit_count(xor) over the four
-  // band words of the candidate pair only. The report threshold is
-  // Hamming ≤ 3, which the banding makes LOSSLESS by pigeonhole
-  // (3 differing bits cannot touch all 4 bands, so every such pair
-  // collides on an identical band) — threshold and recall bound agree
-  // exactly. Wider thresholds need either coarser bands (an 8×8-bit
-  // variant was measured: 256-value buckets collapse the equi-join's
+  // iff segment s's mean sample exceeds the global mean — then the
+  // Hamming ≤ 3 pairs on the [[graft.ops.HammingBands]] kernel with
+  // 4×16-bit bands, Manku et al. 2007's canonical k=3 configuration for
+  // 64-bit fingerprints. Wider thresholds need either coarser bands (an
+  // 8×8-bit variant was measured: 256-value buckets lose the bucket
   // selectivity, ~2× slower at sf0.1 and O(N²/256) at scale — reverted)
-  // or Manku's multi-table permutation scheme; at this threshold the
-  // bucket space stays 2^16 per band and the join selective.
+  // or Manku's multi-table permutation scheme.
   // With a real codec the sample
   // stream is decoded luma; here it is the payload's character codes
   // (the same stand-in discipline as the stub decoder — the plan,
@@ -109,6 +103,8 @@ object MultimodalQueries {
   // and every 40th with one leading sample overwritten (a same-length
   // near-variant; whether borderline bits flip is computed identically
   // by both engines).
+  private[graft] val AHashBands = HammingBands(bands = 4, bits = 16, maxDistance = 3)
+
   def qPhashNeardup(spark: SparkSession, dir: String): DataFrame = {
     val base = documents(spark, dir)
       .filter(length(col("text")) >= 64)
@@ -119,53 +115,19 @@ object MultimodalQueries {
       .select((col("doc_id") + 20000000L).as("doc_id"),
         expr("concat('Z', substring(text, 2, length(text)))").as("text"))
     val d = base.unionByName(twins).unionByName(near)
-      .select(col("doc_id"), col("text"),
-        length(col("text")).cast("long").as("n"))
     // the whole signature derives per-doc in the native AHashBandsExpr
     // (one codepoint walk; AHashExprSpec pins it to the declarative
     // explode + two-aggregation chain it replaced, which shuffled a
-    // ~50M-row per-character frame twice at sf0.1)
+    // ~50M-row per-character frame twice at sf0.1); its four 16-bit
+    // bands pack back into the 64-bit aHash
     val sigs = d
       .select(col("doc_id"),
-        graft.functions.AHashBandsExpr.bands(col("text")).as("sig"))
-      // scalar collapse key: the four 16-bit bands packed back into the
-      // 64-bit aHash, so every collapse/reassembly join keys on a LONG
-      // instead of hashing the array per row
-      .withColumn("k", expr(
-        "sig[0] | shiftleft(sig[1], 16) | shiftleft(sig[2], 32) | shiftleft(sig[3], 48)"))
+        graft.functions.AHashBandsExpr.bands(col("text")).as("b"))
+      .select(col("doc_id"), expr(
+        "b[0] | shiftleft(b[1], 16) | shiftleft(b[2], 32) | shiftleft(b[3], 48)").as("sig"))
       .transform(graft.CacheScope.persist)
-    // identical-signature collapse (the simhash lesson, §10.16): docs
-    // sharing the 4-band signature array have identical band rows and
-    // pairwise hamming 0, so banding + the pair join run on one
-    // representative per distinct signature and the pair set reassembles
-    // afterwards — lossless, and exact twins stop multiplying band
-    // buckets by k and the band join by k². The verify is an in-row fold
-    // over the two 4-element signatures fetched per rep pair (no
-    // band-level joins, no counting shuffle).
-    val reps = sigs.groupBy(col("k"), col("sig")).agg(min(col("doc_id")).as("doc_id"))
-    val bands = reps.select(col("doc_id"), col("k"), col("sig"),
-      posexplode(col("sig")).as(Seq("band", "bv")))
-    val repPairs = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.k").as("ka"), col("a.sig").as("sa"),
-        col("b.k").as("kb"), col("b.sig").as("sb"))
-      .distinct()
-      .withColumn("hamming", expr(
-        """aggregate(zip_with(sa, sb, (x, y) -> bit_count(x ^ y)),
-          |  CAST(0 AS BIGINT), (a, x) -> a + x)""".stripMargin))
-      .filter(col("hamming") <= 3)
-    val within = sigs.as("x")
-      .join(sigs.as("y"),
-        col("x.k") === col("y.k") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(0L).as("hamming"))
-    val cross = repPairs
-      .join(sigs.select(col("k").as("ka"), col("doc_id").as("ida")), "ka")
-      .join(sigs.select(col("k").as("kb"), col("doc_id").as("idb")), "kb")
-      .select(least(col("ida"), col("idb")).as("doc_a"),
-        greatest(col("ida"), col("idb")).as("doc_b"), col("hamming"))
-    within.unionByName(cross)
+    AHashBands.pairs(sigs)
+      .select(col("doc_a"), col("doc_b"), col("hamming").cast("long").as("hamming"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 

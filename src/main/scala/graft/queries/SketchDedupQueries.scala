@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
-import graft.ops.{MinHashLsh, ShingleSets}
+import graft.ops.{HammingBands, MinHashLsh, ShingleSets}
 
 /** Sketch-based near-dedup for training-data pipelines: MinHash + LSH
   * banding and SimHash, over the documents table.
@@ -152,9 +152,7 @@ object SketchDedupQueries {
   // value holds ~200 docs -> 10^8 candidate pairs. Measured on the 10x
   // probe corpus before this layout was chosen.)
   private val SimBits = 60
-  private val SimBands = 4             // 4 bands x 15 bits
-  private val BandBits = 15
-  private val HammingMax = 3
+  private[graft] val SimHashBands = HammingBands(bands = 4, bits = 15, maxDistance = 3)
 
   /** 60-bit simhash per document over its token multiset (signed
     * popcount, then bit j set iff sum > 0 — the DuckDB oracle's
@@ -187,7 +185,7 @@ object SketchDedupQueries {
         // SimHashTextSpec pins per-doc equality with the split chain
         graft.functions.SimHashTextExpr.of(col(textCol)).as("simhash"))
       .filter(col("simhash").isNotNull)
-      .transform(graft.CacheScope.persist) // signature reused by both sides of the band self-join
+      .transform(graft.CacheScope.persist) // read by the collapse and the member expansion
 
   private def simhashSigSql: String = {
     val sums = (0 until SimBits)
@@ -221,88 +219,33 @@ object SketchDedupQueries {
 
   /** The band-blocked SimHash pair generator over an arbitrary frame. */
   private[graft] def simhashPairsOver(
-      docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val (sig, repPairs) = simhashSigAndRepPairs(docs, idCol, textCol)
-    // identical-SIGNATURE collapse (the ngram/minhash/containment lesson
-    // applied to the one detector that lacked it): documents sharing a
-    // simhash have identical band rows and pairwise hamming 0, so
-    // banding + the pair join run on one representative per distinct
-    // signature and the full pair set reassembles afterwards —
-    // within-group pairs carry hamming 0, and a cross-group rep pair's
-    // hamming holds for every member pair. Lossless by construction.
-    // On the 99%-duplicate 100x corpus this is what keeps band buckets
-    // unskewed: without it, exact copies multiply every bucket by k and
-    // the band join by k² (measured 268 s under the broadcast plan AQE
-    // picks for the small cached signature table, 53–93 s under forced
-    // shuffle joins; collapsed, the k² work is output-only reassembly).
-    val within = sig.as("x")
-      .join(sig.as("y"),
-        col("x.simhash") === col("y.simhash")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(0).cast("int").as("hamming"))
-    val cross = repPairs
-      .join(sig.select(col("simhash").as("ha"), col("doc_id").as("ida")), "ha")
-      .join(sig.select(col("simhash").as("hb"), col("doc_id").as("idb")), "hb")
-      .select(least(col("ida"), col("idb")).as("doc_a"),
-        greatest(col("ida"), col("idb")).as("doc_b"), col("hamming"))
-    within.unionByName(cross)
+      docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    SimHashBands.pairs(simhashSigOver(docs, idCol, textCol)
+        .select(col("doc_id"), col("simhash").as("sig")))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
-  /** (doc→simhash signatures, pre-reassembly block pairs `(ha, hb,
-    * hamming)`) — the agreement audit consumes the blocks without ever
-    * expanding them to member pairs.
+  /** The oracles' signature and band-row CTEs: `sig (doc_id, simhash)`
+    * and `bands (doc_id, simhash, band, bv)`, one row per band word.
     */
-  private[queries] def simhashSigAndRepPairs(
-      docs: DataFrame, idCol: String, textCol: String): (DataFrame, DataFrame) = {
-    val sig = simhashSigOver(docs, idCol, textCol)
-    val reps = sig.groupBy(col("simhash")).agg(min(col("doc_id")).as("rep"))
-    (sig, repBandPairs(reps).select(col("ha"), col("hb"), col("hamming")))
-  }
-
-  /** Band-blocked near-dup candidates over one-representative-per-
-    * signature rows `(simhash, rep)`: emits `(ha, hb, ra, rb, hamming)`
-    * with hamming <= [[HammingMax]] — the shared generator behind the
-    * pair query ([[simhashPairsOver]]) and group resolution
-    * ([[simhashRepComponents]]). 4 band buckets of 15 bits each keep the
-    * join linear (Manku pigeonhole); representative grain keeps buckets
-    * unskewed on duplicate-saturated corpora.
-    */
-  private def repBandPairs(reps: DataFrame): DataFrame = {
-    val bandStructs = (0 until SimBands).map(b =>
-      struct(lit(b).as("band"),
-        expr(s"shiftright(simhash, ${BandBits * b}) % ${1 << BandBits}").as("bv")))
-    val bands = reps
-      .select(col("rep"), col("simhash"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("rep"), col("simhash"),
-        col("bb.band").as("band"), col("bb.bv").as("bv"))
-    bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv")
-          && col("a.rep") < col("b.rep"))
-      .select(col("a.simhash").as("ha"), col("b.simhash").as("hb"),
-        col("a.rep").as("ra"), col("b.rep").as("rb"),
-        expr("bit_count(a.simhash ^ b.simhash)").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= HammingMax)
-  }
-
-  val qDedupSimhashOracle: String = {
-    val bandSelects = (0 until SimBands)
+  private def simhashBandsSql: String = {
+    val bits = SimHashBands.bits
+    val bandSelects = (0 until SimHashBands.bands)
       .map(b => s"SELECT doc_id, simhash, $b AS band, " +
-        s"(simhash >> ${BandBits * b}) & ${(1 << BandBits) - 1} AS bv FROM sig")
+        s"(simhash >> ${bits * b}) & ${(1 << bits) - 1} AS bv FROM sig")
       .mkString("\n  UNION ALL ")
-    s"""WITH $simhashSigSql, bands AS (
+    s"""$simhashSigSql, bands AS (
        |  $bandSelects
-       |)
+       |)""".stripMargin
+  }
+
+  val qDedupSimhashOracle: String =
+    s"""WITH $simhashBandsSql
        |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
        |       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
        |FROM bands a JOIN bands b
        |  ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.simhash, b.simhash)) <= $HammingMax
+       |WHERE bit_count(xor(a.simhash, b.simhash)) <= ${SimHashBands.maxDistance}
        |ORDER BY 1, 2""".stripMargin
-  }
 
   // ------------------------------------------------ dedup group resolution
   /** Connected components over the SimHash near-dup pair graph — the
@@ -342,11 +285,8 @@ object SketchDedupQueries {
       .orderBy(col("cluster_size"))
   }
 
-  // lazy: references qDedupComponentsOracle, declared later in this object
-  lazy val qDedupClusterStatsOracle: String = {
-    // reuse the recursive-closure component oracle verbatim as a CTE
-    val compSql = qDedupComponentsOracle.replace("ORDER BY 1", "")
-    s"""WITH comp AS ($compSql),
+  val qDedupClusterStatsOracle: String =
+    s"""WITH comp AS ($simhashComponentsSql),
        |sizes AS (
        |  SELECT component_id, CAST(count(*) AS BIGINT) AS sz
        |  FROM comp GROUP BY 1),
@@ -360,7 +300,6 @@ object SketchDedupQueries {
        |       CAST(n_docs - n_in_graph AS BIGINT) AS n_singletons
        |FROM hist CROSS JOIN t CROSS JOIN g
        |ORDER BY cluster_size""".stripMargin
-  }
 
   /** Signature-grain group resolution: one row per distinct simhash that
     * participates in the dedup graph — `(simhash, gsz, component_id)`,
@@ -382,14 +321,13 @@ object SketchDedupQueries {
     */
   private[graft] def simhashRepComponents(
       spark: SparkSession, dir: String): DataFrame = {
-    val sig = simhashSigOver(documents(spark, dir), "doc_id", "text")
-    val groups = sig.groupBy(col("simhash"))
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("gsz"))
-    val edges = repBandPairs(groups).select(col("ra"), col("rb"))
+    val reps = SimHashBands.reps(simhashSigOver(documents(spark, dir), "doc_id", "text")
+      .select(col("doc_id"), col("simhash").as("sig")))
+    val edges = SimHashBands.repPairs(reps).select(col("ra"), col("rb"))
     val comp = graft.ops.ConnectedComponents.components(edges)
-    groups.join(comp, groups("rep") === comp("id"), "left")
-      .select(col("simhash"), col("gsz"),
-        coalesce(col("comp"), when(col("gsz") >= 2, col("rep")))
+    reps.join(comp, reps("rep") === comp("id"), "left")
+      .select(col("sig").as("simhash"), col("g").as("gsz"),
+        coalesce(col("comp"), when(col("g") >= 2, col("rep")))
           .as("component_id"))
       .filter(col("component_id").isNotNull)
       .transform(graft.CacheScope.persist) // feeds expansion + two aggregates
@@ -433,18 +371,17 @@ object SketchDedupQueries {
   /** Oracle computes the same fixpoint independently: transitive closure
     * via a recursive CTE, component = min reachable vertex (incl. self).
     */
-  val qDedupComponentsOracle: String = {
-    val bandSelects = (0 until SimBands)
-      .map(b => s"SELECT doc_id, simhash, $b AS band, " +
-        s"(simhash >> ${BandBits * b}) & ${(1 << BandBits) - 1} AS bv FROM sig")
-      .mkString("\n  UNION ALL ")
-    s"""WITH RECURSIVE $simhashSigSql, bands AS (
-       |  $bandSelects
-       |), pairs AS (
+  val qDedupComponentsOracle: String = s"$simhashComponentsSql\nORDER BY 1"
+
+  /** The components oracle's `(doc_id, component_id)` rows, unordered:
+    * the cluster-stats and apply oracles read it as a CTE.
+    */
+  private def simhashComponentsSql: String =
+    s"""WITH RECURSIVE $simhashBandsSql, pairs AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM bands a JOIN bands b
        |    ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.simhash, b.simhash)) <= $HammingMax
+       |  WHERE bit_count(xor(a.simhash, b.simhash)) <= ${SimHashBands.maxDistance}
        |), adj AS (
        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
        |  UNION SELECT doc_b, doc_a FROM pairs
@@ -457,9 +394,7 @@ object SketchDedupQueries {
        |       CAST(least(v.id, min(r.dst)) AS BIGINT) AS component_id
        |FROM (SELECT DISTINCT src AS id FROM adj) v
        |LEFT JOIN reach r ON r.src = v.id
-       |GROUP BY v.id
-       |ORDER BY 1""".stripMargin
-  }
+       |GROUP BY v.id""".stripMargin
 
   /** End-to-end dedup APPLICATION: detect (SimHash pairs) -> group
     * (connected components) -> drop every non-canonical member -> report
@@ -483,36 +418,12 @@ object SketchDedupQueries {
       .orderBy(col("lang"))
   }
 
-  val qDedupApplyOracle: String = {
-    val bandSelects = (0 until SimBands)
-      .map(b => s"SELECT doc_id, simhash, $b AS band, " +
-        s"(simhash >> ${BandBits * b}) & ${(1 << BandBits) - 1} AS bv FROM sig")
-      .mkString("\n  UNION ALL ")
-    s"""WITH RECURSIVE $simhashSigSql, bands AS (
-       |  $bandSelects
-       |), pairs AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.simhash, b.simhash)) <= $HammingMax
-       |), adj AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION SELECT doc_b, doc_a FROM pairs
-       |), reach(src, dst) AS (
-       |  SELECT src, dst FROM adj
-       |  UNION
-       |  SELECT r.src, a.dst FROM reach r JOIN adj a ON r.dst = a.src
-       |), dropped AS (
-       |  SELECT v.id FROM (SELECT DISTINCT src AS id FROM adj) v
-       |  LEFT JOIN reach r ON r.src = v.id
-       |  GROUP BY v.id
-       |  HAVING v.id <> least(v.id, min(r.dst))
-       |)
+  val qDedupApplyOracle: String =
+    s"""WITH comp AS ($simhashComponentsSql)
        |SELECT lang, count(*) AS n_docs_kept
        |FROM documents
-       |WHERE doc_id NOT IN (SELECT id FROM dropped)
+       |WHERE doc_id NOT IN (SELECT doc_id FROM comp WHERE doc_id <> component_id)
        |GROUP BY 1 ORDER BY 1""".stripMargin
-  }
 
   // --- corpus-level similarity: per-source MinHash UNION sketches ---
   // Dataset management above the document level: which SOURCES overlap?

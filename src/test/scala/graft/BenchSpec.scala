@@ -109,14 +109,11 @@ class BenchSpec extends SparkSpec {
   test("the second sample of a query compiles no generated class") {
     // sample 1 may compile; sample 2 runs the same plans and finds every
     // class in the codegen cache (CodegenCacheSpec pins the cache itself).
-    // q_dedup_components is left out: the banded self-join of its
-    // simhash representatives reads two identical shuffle stages and AQE
-    // broadcasts whichever finishes first, so a repeat can run a plan
-    // variant, with classes of its own, that sample 1 never ran.
-    val r = layers.find(r => r.get("query").asText == "qd_join_filter_count" &&
-      r.get("sample").asInt == 2).get
-    assert(r.get("codegen_compiles").asLong == 0)
-    assert(r.get("codegen_s").asDouble == 0.0)
+    names.foreach { q =>
+      val r = layers.find(r => r.get("query").asText == q && r.get("sample").asInt == 2).get
+      assert(r.get("codegen_compiles").asLong == 0, q)
+      assert(r.get("codegen_s").asDouble == 0.0, q)
+    }
     assert(layers.forall(_.get("codegen_compiles").asLong >= 0))
     assert(layers.exists(_.get("codegen_compiles").asLong > 0))
   }
